@@ -138,21 +138,10 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = float(os.path.basename(sf_dir.rstrip("/")).removeprefix("sf") or "0.1")
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+    from iot_data_pipeline_spark import harness
 
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("iot_data_pipeline_spark-bench")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "16g")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session(cpus, **{"spark.driver.memory": "16g"})
 
     qs = entrymod.queries()
     # Warmup at the smallest SF: spins up the Python-worker pool, compiles
@@ -161,40 +150,23 @@ def main() -> None:
     warm_dir = "/root/testdata/sf0.001"
     for name in HEADLINE:
         try:
-            qs[name](spark, warm_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            harness.timed_noop(qs[name], spark, warm_dir)
         except Exception:
             pass
 
     # Best-of-2 per query: the host shows heavy transient I/O contention
     # (identical runs vary up to 4×); the faster run is the engine's number.
-    from iot_data_pipeline_spark.cache_tracker import evict_tracked
-    from iot_data_pipeline_spark.operators.llm import (
-        clear_bpe_rules_memo,
-        clear_kmeans_codebook_memo,
-    )
-
+    # Every rep starts from a reset: it pays its own cache fill and trains
+    # its own BPE rules and codebook, never timing a memo lookup.
     timings: dict[str, float] = {}
     for name in HEADLINE:
-        fn = qs[name]
         best = None
         for _ in range(3 if name in BEST_OF_3 else 2):
-            evict_tracked()  # each rep pays its own cache fill — no
-            # cross-rep or cross-query pinned frames (round-3 ADVICE).
-            clear_bpe_rules_memo()  # same rule for the train-once memo:
-            # each rep of llm_bpe_train must measure the trainer.
-            clear_kmeans_codebook_memo()  # and for the ANN codebook memo:
-            # each rep of llm_sim_pq must train the coarse quantizer it
-            # probes (r16 verdict item 1 — memo-warm reps were serving a
-            # dict lookup inside the timed region).
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            secs = time.time() - t0
+            harness.reset_process_state()
+            secs = harness.timed_noop(qs[name], spark, sf_dir)
             best = secs if best is None or secs < best else best
         timings[name] = round(best, 3)
-    evict_tracked()
+    harness.reset_process_state()
 
     etl_mb_per_s = _etl_throughput(spark, sf_dir)
 

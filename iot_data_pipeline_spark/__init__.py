@@ -10,7 +10,9 @@ multimodal plumbing) as compositions of built-in operators or Arrow-batched
 Pandas UDFs.
 
 Layout:
-    session     — SparkSession builders (config passthrough, AQE, UTC).
+    session     — SparkSession builder (config passthrough, AQE, UTC),
+                  prepare() for outside sessions, scoped_conf().
+    harness     — local session, memo reset and timed noop run for scripts.
     sources     — readers (CSV w/ IoT-23 contract, parquet tables) and sinks.
     functions   — scalar-expression libraries (IoT transforms, text, vectors).
     operators   — relational + LLM-data operators as (spark, sf_dir) queries.

@@ -1,10 +1,12 @@
 """Per-query cache tracking.
 
 Operators that cache an intermediate frame (win_ntile_dist's ranked frame,
-graph_pagerank's out_edges, the LLM shingle frames) register it here so the
-harnesses — verify_local, bench.py, the pytest plan fixtures — can evict
-exactly what a query pinned once its result is materialized, instead of
-relying on a global ``spark.catalog.clearCache()`` sweep (round-3 ADVICE:
+graph_pagerank's out_edges, the LLM shingle frames) register it here so
+whoever runs queries can evict exactly what a query pinned once its result
+is materialized: verify_local calls :func:`evict_tracked` between queries,
+and ``harness.reset_process_state`` calls it before every timed rep of
+bench.py, the pressure probe and the harness CLI. This replaces a global
+``spark.catalog.clearCache()`` sweep (round-3 ADVICE:
 repeated registry sweeps in one session otherwise accumulate cached
 relations and perturb other queries' plans).
 

@@ -336,11 +336,15 @@ def fn_map_from_entries(spark: SparkSession, sf_dir: str) -> DataFrame:
     scalar (map internals never surface), so the oracle can express the same
     lookups with list functions; map iteration order never matters."""
     prepare(spark)
-    spark.conf.set("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
     p = table(spark, sf_dir, "part")
     words = F.split("p_type", " ")
+    # Distinct keys: a repeated word would raise DUPLICATED_MAP_KEY under
+    # the default dedup policy, which Spark reads when the plan executes.
     m = F.map_from_entries(
-        F.transform(words, lambda w: F.struct(w.alias("key"), F.length(w).alias("value")))
+        F.transform(
+            F.array_distinct(words),
+            lambda w: F.struct(w.alias("key"), F.length(w).alias("value")),
+        )
     )
     return p.select(
         "p_partkey",

@@ -30,7 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from iot_data_pipeline_spark.operators._util import table
+from iot_data_pipeline_spark.operators._util import spread_input, table
 
 
 def decode_media(blob: bytes, media_type: str):
@@ -741,34 +741,6 @@ def _media_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _spread(df: DataFrame) -> DataFrame:
-    """Fan a small decode-driver frame across the cluster BEFORE its
-    expensive per-row Python stage (r16 optimization, guide §2.5 "input
-    skew"): the documents table is one small parquet split, so every
-    ``mapInPandas`` decode in this module ran as ONE task regardless of
-    core count — the profiler showed the whole family single-task at
-    sf0.1. Hash-repartition on ``media_id``: deterministic under task
-    retries (a round-robin of this frame would be too — sort-before-
-    repartition — but hash needs no local sort), uniform (ids are
-    distinct), and the shuffled rows are id+params metadata, so the
-    exchange is nil next to the decode it parallelizes. Partition count
-    is ``defaultParallelism`` — the real core count on any deployment,
-    never a local constant. Row contents are untouched, so every oracle
-    hash is unchanged.
-
-    Under-split guard (r16 verdict item 7, mirroring
-    :func:`_util.spread_input`): a frame that ALREADY has at least
-    defaultParallelism partitions passes through untouched — a
-    production-scale scan with thousands of splits must not be coalesced
-    down to core count (that would trade task granularity for one
-    exchange and lose straggler/retry resilience)."""
-    sc = df.sparkSession.sparkContext
-    p = sc.defaultParallelism
-    if df.rdd.getNumPartitions() >= p:
-        return df
-    return df.repartition(p, "media_id")
-
-
 def mm_binary_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column metadata scan: byte length, magic-prefix hex, declared
     vs actual size check — all JVM-side expressions on the binary type."""
@@ -814,11 +786,11 @@ def mm_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"media_id": pdf["media_id"], "feature": feats}
             )
 
-    # NOT _spread: this stage ships the payload itself, and the byte-moment
-    # "model" is cheaper than shuffling the blobs (measured 0.29 s single
-    # task vs 0.70 s spread at sf0.1) — the helper pays off only where the
-    # exchange carries id+params metadata and the Python stage is the
-    # expensive part (the real decoders below).
+    # NOT spread_input: this stage ships the payload itself, and the
+    # byte-moment "model" is cheaper than shuffling the blobs (measured
+    # 0.29 s single task vs 0.70 s spread at sf0.1) — the helper pays off
+    # only where the exchange carries id+params metadata and the Python
+    # stage is the expensive part (the real decoders below).
     out = m.mapInPandas(extract, "media_id LONG, feature ARRAY<DOUBLE>")
     return out.select(
         "media_id",
@@ -893,7 +865,7 @@ def mm_decode_wav(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    return _spread(base).mapInPandas(
+    return spread_input(base, "media_id").mapInPandas(
         gen_decode,
         "media_id LONG, n_bytes LONG, n_channels INT, sample_rate INT,"
         " n_samples LONG, amp_min LONG, amp_max LONG, amp_sum LONG",
@@ -948,7 +920,7 @@ def mm_decode_ppm(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    return _spread(base).mapInPandas(
+    return spread_input(base, "media_id").mapInPandas(
         gen_decode,
         "media_id LONG, width INT, height INT, n_bytes LONG, px_min LONG,"
         " px_max LONG, px_sum LONG, r_sum LONG, g_sum LONG, b_sum LONG",
@@ -993,7 +965,7 @@ def mm_decode_png(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    return _spread(base).mapInPandas(
+    return spread_input(base, "media_id").mapInPandas(
         gen_decode,
         "media_id LONG, width INT, height INT, px_min LONG, px_max LONG,"
         " px_sum LONG, r_sum LONG, g_sum LONG, b_sum LONG",
@@ -1034,7 +1006,7 @@ def mm_decode_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    return _spread(base).mapInPandas(
+    return spread_input(base, "media_id").mapInPandas(
         gen_decode,
         "media_id LONG, width INT, height INT, n_components INT,"
         " px_min LONG, px_max LONG, px_sum LONG",
@@ -1098,7 +1070,7 @@ def mm_audio_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
             yield pd.DataFrame(rows)
 
-    return _spread(base).mapInPandas(
+    return spread_input(base, "media_id").mapInPandas(
         gen_frames,
         "media_id LONG, frame_no LONG, n_in_frame LONG, energy LONG,"
         " n_zero_cross LONG, amp_peak LONG",
@@ -1152,7 +1124,7 @@ def mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    return _spread(base).mapInPandas(
+    return spread_input(base, "media_id").mapInPandas(
         gen_resize,
         "media_id LONG, out_w INT, out_h INT, px_sum LONG, r_sum LONG,"
         " g_sum LONG, b_sum LONG, top_left LONG, bottom_right LONG",
@@ -1224,7 +1196,7 @@ def mm_resize_bilinear(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             yield pd.DataFrame(rows)
 
-    return _spread(base).mapInPandas(
+    return spread_input(base, "media_id").mapInPandas(
         gen_bilinear,
         "media_id LONG, out_w INT, out_h INT, px4_sum LONG, r4_sum LONG,"
         " g4_sum LONG, b4_sum LONG, top_left4 LONG, center4 LONG,"
@@ -1280,7 +1252,7 @@ def mm_audio_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
                     )
             yield pd.DataFrame(rows)
 
-    return _spread(base).mapInPandas(
+    return spread_input(base, "media_id").mapInPandas(
         gen_spectrum, "media_id LONG, k LONG, coeff LONG"
     )
 
@@ -1342,7 +1314,7 @@ def mm_image_ahash(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ]
             )
 
-    return _spread(base).mapInPandas(
+    return spread_input(base, "media_id").mapInPandas(
         gen_ahash,
         "media_id LONG, n_px LONG, gray_sum LONG, n_above LONG, ahash LONG",
     )

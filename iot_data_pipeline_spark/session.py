@@ -15,7 +15,8 @@ from __future__ import annotations
 import os
 import tempfile
 import zipfile
-from typing import Any, Mapping
+from contextlib import contextmanager
+from typing import Any, Iterator, Mapping
 
 from pyspark.sql import SparkSession
 
@@ -61,6 +62,28 @@ def build_session(
     for key, value in merged.items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, **confs: str) -> Iterator[None]:
+    """Set session confs for the body of a ``with`` block, then put each key
+    back as it was, also when the body raises: a key that had a value gets
+    it back, and a key that was unset is unset again. The session is shared
+    by every later query, so no query may leave a conf behind.
+
+    A conf that Spark reads only when a plan EXECUTES must not be scoped to
+    the plan's construction; the restore would run before the read."""
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
 
 def _ship_package_to_workers(spark: SparkSession) -> None:

@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from iot_data_pipeline_spark.operators._util import table
+from iot_data_pipeline_spark.session import scoped_conf
 
 EVENTS_SCHEMA = (
     "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING,"
@@ -165,22 +166,22 @@ def _run_to_memory(
     _derived_state_partitions(...)`` to make the count track input size;
     the pinned default remains for sources with no stageable size."""
     spark = df.sparkSession
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_ndmb = spark.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
     name = "s" + uuid.uuid4().hex[:12]
-    try:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            state_partitions or _STREAM_STATE_PARTITIONS,
-        )
-        # The final no-data micro-batch (default-on) is what flushes state
-        # finalized by the LAST data batch's watermark advance — without it
-        # the watermark query's emission set shrinks. Session-determinism
-        # pin, same rationale as session.prepare's UTC/ANSI pins — but
-        # scoped to the run and RESTORED like shuffle.partitions above: a
-        # per-query helper must not leak session-wide conf mutations even
-        # when the pinned value happens to be Spark's default (r10 ADVICE).
-        spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
+    # The final no-data micro-batch (default-on) is what flushes state
+    # finalized by the LAST data batch's watermark advance — without it
+    # the watermark query's emission set shrinks. Session-determinism
+    # pin, same rationale as session.prepare's UTC/ANSI pins — but scoped
+    # to the run like shuffle.partitions: a per-query helper must not leak
+    # session-wide conf mutations even when the pinned value happens to be
+    # Spark's default (r10 ADVICE).
+    with scoped_conf(
+        spark,
+        **{
+            "spark.sql.shuffle.partitions": state_partitions
+            or _STREAM_STATE_PARTITIONS,
+            "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+        },
+    ):
         q = (
             df.writeStream.format("memory")
             .queryName(name)
@@ -189,11 +190,6 @@ def _run_to_memory(
             .start()
         )
         q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_ndmb
-        )
     return spark.table(name)
 
 

@@ -6,7 +6,8 @@ import os
 import tempfile
 
 import pytest
-from pyspark.sql import SparkSession
+
+from iot_data_pipeline_spark import harness
 
 # Correctness tests run at the smallest sf by default; overridable so the
 # suite keeps working if the testdata root moves (ADVICE r4).
@@ -23,18 +24,9 @@ def pytest_sessionstart(session):
 
 @pytest.fixture(scope="session")
 def spark():
-    s = (
-        SparkSession.builder.master("local[4]")
-        .appName("iot_data_pipeline_spark-tests")
-        .config("spark.sql.shuffle.partitions", "4")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config(
-            "spark.sql.warehouse.dir", tempfile.mkdtemp(prefix="spark_warehouse_")
-        )
-        .getOrCreate()
+    s = harness.session(
+        4, **{"spark.sql.warehouse.dir": tempfile.mkdtemp(prefix="spark_warehouse_")}
     )
-    s.sparkContext.setLogLevel("ERROR")
     yield s
     s.stop()
 

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from iot_data_pipeline_spark.operators._util import table
 from iot_data_pipeline_spark.plans import executed_plan
+from iot_data_pipeline_spark.session import scoped_conf
 
 
 def test_ddl_insert_truncate_flow(spark, sf_dir):
@@ -40,19 +41,17 @@ def test_bucketed_join_avoids_shuffle(spark, sf_dir):
     table(spark, sf_dir, "customer").write.bucketBy(4, "c_custkey").sortBy(
         "c_custkey"
     ).mode("overwrite").saveAsTable("b_customer")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try:
         # forbid broadcast so the planner must pick a partitioned join;
         # bucketing then makes both sides pre-shuffled.
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        joined = spark.table("b_orders").join(
-            spark.table("b_customer"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        plan = executed_plan(joined)
-        assert "Exchange hashpartitioning" not in plan
-        assert joined.count() == 1500
+        with scoped_conf(spark, **{"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            joined = spark.table("b_orders").join(
+                spark.table("b_customer"),
+                F.col("o_custkey") == F.col("c_custkey"),
+            )
+            plan = executed_plan(joined)
+            assert "Exchange hashpartitioning" not in plan
+            assert joined.count() == 1500
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         for name in ("b_orders", "b_customer"):
             spark.sql(f"DROP TABLE IF EXISTS {name}")

@@ -7,6 +7,8 @@ built at sf0.001 and scanned for scale-killers.
   a bounded scalar/spine table (row counts independent of data scale), and
   each such query is listed with its justification — a new unlisted
   occurrence fails the suite and forces the author to justify or fix it.
+- Building a query leaves the session confs as it found them: the session
+  is shared, so a leaked conf changes every later query.
 
 Streaming/sink/source queries execute work when called, so they are
 covered by their own tests instead of this sweep.
@@ -19,6 +21,8 @@ import os
 import sys
 
 import pytest
+
+from iot_data_pipeline_spark.session import prepare
 
 _ENTRY_PATH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
@@ -107,10 +111,14 @@ SINGLE_PARTITION_SORT_OK = {
 def test_no_cartesian_unjustified_nested_loop_or_row_python(spark, sf_dir):
     qs = _registry()
     offenders: dict[str, str] = {}
+    prepare(spark)
+    confs = dict(spark.conf.getAll)
     for name, fn in sorted(qs.items()):
         if name.startswith(_SKIP_PREFIXES):
             continue
         plan = fn(spark, sf_dir)._jdf.queryExecution().executedPlan().toString()
+        leaked = dict(spark.conf.getAll).items() ^ confs.items()
+        assert not leaked, f"{name} changed session confs: {sorted(leaked)}"
         if "CartesianProduct" in plan:
             offenders[name] = "CartesianProduct"
         elif "BroadcastNestedLoopJoin" in plan and name not in BNLJ_BOUNDED:

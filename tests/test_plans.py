@@ -11,6 +11,7 @@ from iot_data_pipeline_spark.plans import (
     pushed_filters,
     scan_columns,
 )
+from iot_data_pipeline_spark.session import scoped_conf
 
 
 @pytest.fixture(autouse=True)
@@ -384,12 +385,8 @@ def test_q6_pushes_all_three_predicates(spark, sf_dir):
     from iot_data_pipeline_spark.plans import executed_plan
 
     # the default 100-char metadata truncation cuts the filter list off
-    prev = spark.conf.get("spark.sql.maxMetadataStringLength")
-    spark.conf.set("spark.sql.maxMetadataStringLength", "2000")
-    try:
+    with scoped_conf(spark, **{"spark.sql.maxMetadataStringLength": "2000"}):
         plan = executed_plan(relational.sql_entry_tpch_q6(spark, sf_dir))
-    finally:
-        spark.conf.set("spark.sql.maxMetadataStringLength", prev)
     assert "GreaterThanOrEqual(l_shipdate" in plan
     assert "GreaterThanOrEqual(l_discount,0.05)" in plan
     assert "LessThanOrEqual(l_discount,0.07)" in plan

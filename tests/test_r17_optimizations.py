@@ -126,8 +126,9 @@ def test_merge_duplicate_source_key_still_rejected(spark, tmp_path):
 
 
 def test_kmeans_codebook_memo_clear():
+    from iot_data_pipeline_spark import harness
     from iot_data_pipeline_spark.operators import llm
 
     llm._KMEANS_CODEBOOK_MEMO[("x",)] = ("cent", "counts")
-    llm.clear_kmeans_codebook_memo()
+    harness.reset_process_state()
     assert llm._KMEANS_CODEBOOK_MEMO == {}

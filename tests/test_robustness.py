@@ -22,6 +22,7 @@ from iot_data_pipeline_spark.operators import (
     reshape,
     skew,
 )
+from iot_data_pipeline_spark.session import scoped_conf
 
 CASES = [
     ("spark.sql.adaptive.enabled", "false"),
@@ -108,13 +109,11 @@ def test_results_invariant_to_physical_config(
     fn = QUERIES[qname]
     spark.catalog.clearCache()
     baseline = {tuple(r) for r in fn(spark, sf_dir).collect()}
-    prev = spark.conf.get(conf_key)
     try:
-        spark.conf.set(conf_key, conf_val)
-        spark.catalog.clearCache()  # don't serve the perturbed run from cache
-        perturbed = {tuple(r) for r in fn(spark, sf_dir).collect()}
+        with scoped_conf(spark, **{conf_key: conf_val}):
+            spark.catalog.clearCache()  # don't serve the perturbed run from cache
+            perturbed = {tuple(r) for r in fn(spark, sf_dir).collect()}
     finally:
-        spark.conf.set(conf_key, prev)
         spark.catalog.clearCache()
     assert perturbed == baseline
 
@@ -165,21 +164,21 @@ def test_registry_survives_hostile_tz_and_cwd(spark, sf_dir, qname):
     import tempfile
 
     fn = _entry_queries()[qname]
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.catalog.clearCache()
-    # repr keeps tzinfo: a naive-vs-aware or shifted timestamp must FAIL
-    base = sorted(tuple(map(repr, r)) for r in fn(spark, sf_dir).collect())
+    tz = "spark.sql.session.timeZone"
     cwd = os.getcwd()
     try:
-        os.chdir(tempfile.mkdtemp(prefix="tz_smoke_"))
-        spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-        spark.catalog.clearCache()
-        hostile = sorted(
-            tuple(map(repr, r)) for r in fn(spark, sf_dir).collect()
-        )
+        with scoped_conf(spark, **{tz: "UTC"}):
+            spark.catalog.clearCache()
+            # repr keeps tzinfo: a naive-vs-aware or shifted timestamp must FAIL
+            base = sorted(tuple(map(repr, r)) for r in fn(spark, sf_dir).collect())
+            os.chdir(tempfile.mkdtemp(prefix="tz_smoke_"))
+            with scoped_conf(spark, **{tz: "America/New_York"}):
+                spark.catalog.clearCache()
+                hostile = sorted(
+                    tuple(map(repr, r)) for r in fn(spark, sf_dir).collect()
+                )
     finally:
         os.chdir(cwd)
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
         spark.catalog.clearCache()
     assert hostile == base
 
@@ -265,18 +264,18 @@ def test_registry_self_pins_ansi_semantics(spark, sf_dir, qname):
     semantics under a registered query — ``session.prepare`` pins
     spark.sql.ansi.enabled=true at query entry (round 9)."""
     fn = _entry_queries()[qname]
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    spark.catalog.clearCache()
-    base = sorted(tuple(map(repr, r)) for r in fn(spark, sf_dir).collect())
+    ansi = "spark.sql.ansi.enabled"
     try:
-        spark.conf.set("spark.sql.ansi.enabled", "false")
-        spark.catalog.clearCache()
-        hostile = sorted(
-            tuple(map(repr, r)) for r in fn(spark, sf_dir).collect()
-        )
-        # prepare() must have re-pinned the conf during the hostile run
-        assert spark.conf.get("spark.sql.ansi.enabled") == "true"
+        with scoped_conf(spark, **{ansi: "true"}):
+            spark.catalog.clearCache()
+            base = sorted(tuple(map(repr, r)) for r in fn(spark, sf_dir).collect())
+            with scoped_conf(spark, **{ansi: "false"}):
+                spark.catalog.clearCache()
+                hostile = sorted(
+                    tuple(map(repr, r)) for r in fn(spark, sf_dir).collect()
+                )
+                # prepare() must have re-pinned the conf during the hostile run
+                assert spark.conf.get(ansi) == "true"
     finally:
-        spark.conf.set("spark.sql.ansi.enabled", "true")
         spark.catalog.clearCache()
     assert hostile == base

@@ -138,14 +138,7 @@ def test_transform_iot_shape(spark):
         max_size=8,
     )
 )
-def test_duration_expression_matches_python(durations):
-    # Session is created by the fixture at module import time in other tests;
-    # reuse the active one to keep hypothesis fast.
-    from pyspark.sql import SparkSession
-
-    spark = SparkSession.getActiveSession() or SparkSession.builder.master(
-        "local[2]"
-    ).getOrCreate()
+def test_duration_expression_matches_python(spark, durations):
     got = _durations(spark, durations)
     for raw, actual in zip(durations, got):
         want = _duration_to_seconds_py(raw)

@@ -203,7 +203,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from iot_data_pipeline_spark import session
+    from iot_data_pipeline_spark import harness
     from iot_data_pipeline_spark.cache_tracker import evict_tracked
     from iot_data_pipeline_spark.operators import llm
 
@@ -211,10 +211,9 @@ def main() -> None:
     # for ivf/pq at 250k, but hnsw's edge+vector caches need real executor
     # memory — this is a measurement harness, sized like bench, not a
     # memory-pressure probe (tools_pressure_probe owns that axis).
-    spark = session.build_session(
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-        conf={"spark.driver.memory": "16g", "spark.ui.enabled": "false"},
-        shuffle_partitions=32,
+    spark = harness.session(
+        os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        **{"spark.driver.memory": "16g", "spark.sql.shuffle.partitions": "32"},
     )
     ops = {
         "hnsw": llm.llm_sim_hnsw,

@@ -209,18 +209,10 @@ PICKS = {
 
 
 def main() -> None:
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as em
+    from iot_data_pipeline_spark import harness
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session(8)
     qs = em.queries()
     sf = "/root/testdata/sf0.01"
     out = [

@@ -124,47 +124,40 @@ def _child(args) -> None:
     runs one shape — a generic memory-hungry skeleton, or (``--registry``)
     a REGISTERED engine operator against a hybrid staging dir — to a noop
     sink, prints one JSON result line."""
-    from pyspark.sql import SparkSession
+    from iot_data_pipeline_spark import harness
 
-    spark = (
-        SparkSession.builder.appName(f"pressure_{args.shape}_{args.heap}")
-        .master(f"local[{args.cpus}]")
-        .config("spark.driver.memory", args.heap)
-        .config("spark.sql.shuffle.partitions", str(args.shuffle))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", "-1")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "true")
-        .getOrCreate()
+    # UI on: _spill_bytes reads the spill counters from its REST API.
+    spark = harness.session(
+        args.cpus,
+        **{
+            "spark.driver.memory": args.heap,
+            "spark.sql.shuffle.partitions": str(args.shuffle),
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+            "spark.ui.enabled": "true",
+        },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     if args.registry:
         import __spark_entry__ as entry_mod
 
-        qfn = entry_mod.queries()[args.shape]
-        build = lambda: qfn(spark, args.dir)  # noqa: E731
+        fn = entry_mod.queries()[args.shape]
     else:
         build = _mem_queries(spark, args.dir)[args.shape]
+        fn = lambda _spark, _dir: build()  # noqa: E731
     # warm once (scan cache, codegen), then measure. The spill counters are
     # application-cumulative, so snapshot after the warm run and report the
     # DELTA — otherwise the warm run's spill double-counts into the timed
     # run's numbers (round-9 review finding 5).
-    build().write.format("noop").mode("overwrite").save()
-    # Evict engine-tracked cached frames between the warm and timed runs:
-    # Spark's CacheManager matches the SECOND build's identical analyzed
-    # plans to the warm run's persisted frames, so a tracked_cache-using
-    # operator would otherwise skip its expensive stages entirely in the
-    # timed run (llm_dedup_clusters read 3.3 s for 625k docs — the LSH was
-    # never re-run). Same per-rep discipline as bench.py; no-op for
-    # operators that cache nothing (r10, found extending the probe to the
-    # LLM family).
-    from iot_data_pipeline_spark.cache_tracker import evict_tracked
-
-    evict_tracked()
+    harness.timed_noop(fn, spark, args.dir)
+    # Reset between the warm and timed runs: Spark's CacheManager matches
+    # the SECOND build's identical analyzed plans to the warm run's
+    # persisted frames, so a tracked_cache-using operator would otherwise
+    # skip its expensive stages entirely in the timed run
+    # (llm_dedup_clusters read 3.3 s for 625k docs — the LSH was never
+    # re-run), and a memo-serving one would time a lookup. Same per-rep
+    # discipline as bench.py.
+    harness.reset_process_state()
     mem0, disk0 = _spill_bytes(spark)
-    t0 = time.monotonic()
-    build().write.format("noop").mode("overwrite").save()
-    wall = time.monotonic() - t0
+    wall = harness.timed_noop(fn, spark, args.dir)
     mem1, disk1 = _spill_bytes(spark)
     mem = mem1 - mem0 if mem0 >= 0 and mem1 >= 0 else -1
     disk = disk1 - disk0 if disk0 >= 0 and disk1 >= 0 else -1
@@ -509,8 +502,9 @@ def mem_probe(args) -> None:
 def files_probe(args) -> None:
     import duckdb
 
+    from iot_data_pipeline_spark import harness
     from iot_data_pipeline_spark.operators._util import per_user_tmp_suffix
-    from iot_data_pipeline_spark.session import build_session
+    from iot_data_pipeline_spark.session import scoped_conf
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     root = os.path.join(
@@ -524,9 +518,7 @@ def files_probe(args) -> None:
             FROM '{sf_dir}/events.parquet' e, range({args.copies}) t(i))
             TO '{staged}' (FORMAT parquet)"""
     )
-    spark = build_session("files_probe", master=f"local[{args.cpus}]",
-                          shuffle_partitions=32)
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session(args.cpus, **{"spark.sql.shuffle.partitions": "32"})
     frag = os.path.join(root, "fragmented")
     ev = spark.read.parquet(staged)
     n_rows = ev.count()
@@ -539,18 +531,13 @@ def files_probe(args) -> None:
         return df.groupBy("event_type").agg({"value": "sum", "*": "count"})
 
     def run(label, path, conf):
-        for k, v in conf.items():
-            spark.conf.set(k, v)
-        try:
+        with scoped_conf(spark, **conf):
             df = spark.read.parquet(path)
             n_tasks = df.rdd.getNumPartitions()
             scan_agg(path).write.format("noop").mode("overwrite").save()  # warm
             t0 = time.monotonic()
             scan_agg(path).write.format("noop").mode("overwrite").save()
             wall = time.monotonic() - t0
-        finally:
-            for k in conf:
-                spark.conf.unset(k)
         res = {"case": label, "scan_tasks": n_tasks, "wall_s": round(wall, 2)}
         print(json.dumps(res), flush=True)
         return res

@@ -276,13 +276,15 @@ def main() -> None:
     if not args.skip_stage:
         stage(args.copies)
 
-    from iot_data_pipeline_spark.session import build_session, prepare
+    from iot_data_pipeline_spark import harness
+    from iot_data_pipeline_spark.session import prepare, scoped_conf
 
-    spark = build_session(
-        "skew_probe",
-        master=f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]",
-        conf={"spark.driver.memory": args.driver_memory},
-        shuffle_partitions=32,
+    spark = harness.session(
+        os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        **{
+            "spark.driver.memory": args.driver_memory,
+            "spark.sql.shuffle.partitions": "32",
+        },
     )
     prepare(spark)
     if args.copies == COPIES:
@@ -293,7 +295,6 @@ def main() -> None:
         correctness(spark, args.copies)
 
     results: dict[str, dict[str, float]] = {}
-    defaults = {k: spark.conf.get(k, None) for cfg in CONFIGS.values() for k in cfg}
     for shape, cfg_name in MATRIX:
         cell = f"{shape}@{cfg_name}"
         if args.match and not any(
@@ -303,17 +304,8 @@ def main() -> None:
         results[cell] = {}
         for variant in ("uniform", "hotkey"):
             d = os.path.join(base_dir(args.copies), variant)
-            for k, v in CONFIGS[cfg_name].items():
-                spark.conf.set(k, v)
-            try:
+            with scoped_conf(spark, **CONFIGS[cfg_name]):
                 sec = timed(spark, _queries(spark, d)[shape], args.reps)
-            finally:
-                for k in CONFIGS[cfg_name]:
-                    prev = defaults.get(k)
-                    if prev is None:
-                        spark.conf.unset(k)
-                    else:
-                        spark.conf.set(k, prev)
             results[cell][variant] = round(sec, 2)
             print(
                 json.dumps({"cell": cell, "variant": variant, "sec": round(sec, 3)}),

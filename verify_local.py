@@ -131,25 +131,15 @@ def main() -> int:
     if args and "/" in args[0]:
         sf_dir, args = args[0], args[1:]
 
-    from pyspark.sql import SparkSession
-
     import __spark_entry__ as entrymod
+    from iot_data_pipeline_spark import harness
     from iot_data_pipeline_spark.sources.schema_guard import check_testdata_schemas
 
     # Fail loudly (with observed arrow types) on testdata schema drift
     # before running a single query — see round 2's events.ts regression.
     check_testdata_schemas(sf_dir)
 
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("verify_local")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", "8g")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = harness.session(8, **{"spark.driver.memory": "8g"})
 
     con = duckdb.connect()
     for t in TABLES:
@@ -166,7 +156,9 @@ def main() -> int:
     n_pass = n_fail = n_rows_only = 0
     for name in selected:
         # Evict the previous query's tracked caches so one query's pinned
-        # frames can't perturb the next query's plan (round-3 ADVICE).
+        # frames can't perturb the next query's plan (round-3 ADVICE). The
+        # other memos stay: reusing a trained BPE rule table or codebook
+        # across queries is what they are for, and nothing here is timed.
         evict_tracked()
         fn = qs[name]
         t0 = time.time()
