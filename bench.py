@@ -72,9 +72,9 @@ HEADLINE = [
     # shuffle-reduction pattern, tracked so the bitset-build constant and
     # the prefiltered join can't silently regress.
     "join_bloom_prefilter",
-    # r11: the two new heavyweight shapes — the iterative driver-loop BPE
-    # trainer (24 pair-count rounds + argmax collects; tracked so the
-    # per-round constant can't creep) and the ACID MERGE write path
+    # r11: the two new heavyweight shapes — the BPE trainer (now one
+    # word-count job + one vocabulary collect feeding the in-memory merge
+    # loop; tracked so that stays cheap) and the ACID MERGE write path
     # (key-range rewrite + manifest commit; tracked so the stats-prune and
     # two-phase commit overhead stay bounded).
     "llm_bpe_train",
@@ -107,7 +107,8 @@ HEADLINE = [
     # run-splitting Arrow writer, pv-first pruning reads — tracked so the
     # per-file split constant can't creep) and the byte-level BPE trainer
     # (hex-byte vocabulary is ~3x the char-level symbol stream; tracked
-    # like llm_bpe_train so the per-round constant can't creep).
+    # like llm_bpe_train so its word-count job and in-memory merge loop
+    # can't creep).
     "acid_partition_pruning",
     "llm_bpe_bytelevel",
 ]

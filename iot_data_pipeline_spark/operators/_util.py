@@ -160,6 +160,9 @@ def spread_input(df: DataFrame, *cols: str) -> DataFrame:
     """Scale-ADAPTIVE under-split guard for scans feeding expensive
     narrow stages (r16 optimization, guide §2.5 "input skew: one huge
     unsplittable file → repartition immediately after the read").
+    Partitioning is best-effort: a frame already at ``defaultParallelism``
+    splits or more is returned as is, NOT hash-clustered on ``cols``, so
+    no caller may rely on rows sharing a ``cols`` value being co-located.
 
     A small table arriving as fewer splits than cores serializes every
     downstream narrow operator (explode, per-position hashing, Python
@@ -168,9 +171,9 @@ def spread_input(df: DataFrame, *cols: str) -> DataFrame:
     to ``defaultParallelism`` ONLY when the frame is under-split; a
     production-scale scan (thousands of splits) passes through untouched,
     so this never adds a corpus-wide shuffle where parallelism already
-    exists. Hash-partition on ``cols`` when given (deterministic under
-    retries with no local sort); round-robin otherwise. Values are
-    untouched — plans differ, results cannot.
+    exists. On the repartition path, hash-partition on ``cols`` when
+    given (deterministic under retries with no local sort); round-robin
+    otherwise. Values are untouched — plans differ, results cannot.
 
     Probe cost (ADVICE r16): ``df.rdd.getNumPartitions()`` forces
     analysis + a DataFrame→RDD conversion per call, and reads the

@@ -31,7 +31,6 @@ from pyspark.sql.window import Window
 from iot_data_pipeline_spark import cache_tracker
 from iot_data_pipeline_spark.cache_tracker import tracked_cache
 from iot_data_pipeline_spark.operators._util import spread_input, table
-from iot_data_pipeline_spark.session import scoped_conf
 
 log = logging.getLogger(__name__)
 
@@ -1551,8 +1550,10 @@ def llm_sim_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in front of them. Purely a scheduling overlap — the cached contents
     # are a deterministic function of the data, so results cannot depend
     # on the interleaving; _join_prefetch re-raises any build failure on
-    # the caller's thread before the frame is first used.
-    import threading
+    # the caller's thread before the frame is first used. InheritableThread
+    # (like inheritable_thread_target on the pool below) copies the
+    # caller's local properties, so the helper's jobs carry its job group.
+    from pyspark import InheritableThread, inheritable_thread_target
 
     prefetch_err: list[BaseException] = []
     edges0_box: list[DataFrame] = []
@@ -1565,7 +1566,7 @@ def llm_sim_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
         except BaseException as ex:  # noqa: BLE001 — re-raised at join
             prefetch_err.append(ex)
 
-    prefetch = threading.Thread(target=_fill, daemon=True)
+    prefetch = InheritableThread(_fill, daemon=True)
     prefetch.start()
     try:
         l1_nodes = e.filter(F.pmod(F.xxhash64("vec_id"), F.lit(_HNSW_L1_MOD)) == 0)
@@ -1576,25 +1577,33 @@ def llm_sim_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
         # fan them out so the entry stage waits for max() of them, not
         # their sum — all four also overlap the layer-0 prefetch exactly
         # like before. Results are deterministic scalars/rows, so the
-        # interleaving cannot change the output.
-        from concurrent.futures import ThreadPoolExecutor
+        # interleaving cannot change the output. The first failure
+        # re-raises at once: the pool shuts down without waiting, so a
+        # failed job never waits out its siblings (their futures finish,
+        # or fail, unobserved).
+        from concurrent.futures import ThreadPoolExecutor, as_completed
 
-        with ThreadPoolExecutor(max_workers=4) as _pool:
-            _f_q = _pool.submit(
-                lambda: sorted(
-                    e.filter(F.col("vec_id") < 5)
-                    .select("vec_id", "embedding")
-                    .collect(),
-                    key=lambda r: r["vec_id"],
+        pool = ThreadPoolExecutor(max_workers=4)
+        try:
+            futs = [
+                pool.submit(inheritable_thread_target(fn))
+                for fn in (
+                    lambda: sorted(
+                        e.filter(F.col("vec_id") < 5)
+                        .select("vec_id", "embedding")
+                        .collect(),
+                        key=lambda r: r["vec_id"],
+                    ),
+                    l1_nodes.count,
+                    e.count,
+                    lambda: _ivf_centroid_rows(e),
                 )
-            )
-            _f_n1 = _pool.submit(l1_nodes.count)
-            _f_n = _pool.submit(e.count)
-            _f_cent = _pool.submit(_ivf_centroid_rows, e)
-            q_rows = _f_q.result()
-            n1 = _f_n1.result()
-            n_corpus = _f_n.result()
-            cent_rows = _f_cent.result()
+            ]
+            for f in as_completed(futs):
+                f.result()
+        finally:
+            pool.shutdown(wait=False, cancel_futures=True)
+        q_rows, n1, n_corpus, cent_rows = (f.result() for f in futs)
         if not q_rows:
             # degenerate corpus: wait out the prefetch (it re-raises any
             # build failure) before returning the empty frame, exactly
@@ -3254,22 +3263,23 @@ def llm_cross_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# BPE tokenizer: distributed train + apply
+# BPE tokenizer: distributed word count, in-memory train, distributed apply
 # ---------------------------------------------------------------------------
 
 # Number of merge rounds learned by llm_bpe_train. Real vocabularies run
-# tens of thousands of merges; the loop below is round-count-agnostic (each
-# round is one distributed pair-count aggregation + one narrow replace), so
-# the constant only bounds test wall-clock. Shared with the oracle builders.
+# tens of thousands of merges; the in-memory trainer's cost grows with the
+# words each merge rewrites, not with a per-round job, so the constant only
+# bounds the oracle's unrolled CTE chain. Shared with the oracle builders.
 _BPE_MERGES = 24
 
-# Sentinel wrapping one symbol: a word's symbol sequence is stored as the
-# string "~s1~~s2~...~sn~". '~' cannot occur inside a symbol because training
-# words are [a-z]+ runs, so the literal "~a~~b~" matches the adjacent pair
-# (a, b) at symbol boundaries ONLY, and a left-to-right non-overlapping
-# string replace of "~a~~b~" -> "~ab~" is EXACTLY the greedy BPE merge scan
-# ("~a~~a~~a~" -> "~aa~~a~", never "~aa~~aa~"). This keeps the merge step a
-# single JVM string primitive instead of a per-row Python loop.
+# Sentinel wrapping one symbol on the APPLY side: a word's symbol sequence
+# is stored as the string "~s1~~s2~...~sn~". '~' cannot occur inside a
+# symbol because words are [a-z]+ runs or hex strings, so the literal
+# "~a~~b~" matches the adjacent pair (a, b) at symbol boundaries ONLY, and a
+# left-to-right non-overlapping string replace of "~a~~b~" -> "~ab~" is
+# EXACTLY the greedy BPE merge scan ("~a~~a~~a~" -> "~aa~~a~", never
+# "~aa~~aa~"). This keeps the merge step a single JVM string primitive
+# instead of a per-row Python loop.
 _BPE_SENT = "~"
 
 
@@ -3293,279 +3303,6 @@ def _bpe_word_freq(d: DataFrame) -> DataFrame:
 def _bpe_symbols(s: Column) -> Column:
     """Sentinel-wrapped symbol string -> array of symbols."""
     return F.split(F.btrim(s, F.lit(_BPE_SENT)), _BPE_SENT * 2)
-
-
-# Candidate window collected per batched training round (TakeOrderedAndProject
-# rows, driver-side metadata scale) and the replace-chain length that triggers
-# a lineage re-materialization.
-_BPE_BATCH_WINDOW = 64
-# r16: 6 → 24. Each mid-loop localCheckpoint is a full materialization job
-# of the vocabulary frame; at ≤24 pending narrow replaces the chained
-# projection is still a trivial codegen unit, so on a 24-merge budget the
-# loop now re-materializes zero times mid-flight (measured −0.4 s at sf0.1)
-# while a production-size budget still re-checkpoints every 24 merges,
-# keeping lineage depth and codegen size bounded exactly as before.
-_BPE_CKPT_EVERY = 24
-
-
-def _bpe_learn_from(
-    words: DataFrame,
-    merges: int = _BPE_MERGES,
-    stats: dict | None = None,
-    wrap_re: str = "(.)",
-) -> list[tuple[int, str, str, int]]:
-    """Learn ``merges`` BPE merge rules from a (word, freq) frame; returns
-    [(rank, sym_a, sym_b, pair_count)] — EXACTLY the sequential greedy
-    trajectory (Sennrich's get_stats/argmax loop with the pinned tie-break
-    count DESC, sym_a ASC, sym_b ASC), but executed in BATCHED distributed
-    rounds: each round runs ONE vocab-scale pair aggregation (map-side
-    combined; the corpus itself was touched once in ``_bpe_word_freq``),
-    collects a top-``_BPE_BATCH_WINDOW`` candidate window, and commits as
-    many leading merges as are PROVABLY what sequential greedy would pick,
-    applying them as chained narrow codegen string replaces.
-
-    NOT REENTRANT / not concurrency-safe (ADVICE r16): the loop scopes
-    ``spark.sql.shuffle.partitions`` and ``spark.sql.adaptive.enabled``
-    down on the SHARED session for its duration (restored in
-    ``finally``), so any query submitted concurrently on the same
-    session would silently run with 1-partition shuffles and AQE off.
-    All in-repo callers are serial; a concurrent deployment should hand
-    this a dedicated ``spark.newSession()``.
-
-    Why the obvious batch rule is wrong: "take the top-M pairwise-disjoint
-    pairs" is NOT order-equivalent to M greedy steps. Merging (a,b)->ab
-    (i) creates new pairs (x,ab)/(ab,y) whose counts can exceed the
-    second-ranked disjoint candidate — corpus {"xab"x10, "ab"x2, "cd"x9}:
-    counts (a,b)=12, (x,a)=10, (c,d)=9; top-2 disjoint = {(a,b),(c,d)} but
-    sequential greedy merges (x,ab) at count 10 second, never (c,d) — and
-    (ii) can inflate a PRE-EXISTING pair when the merged string collides
-    with a symbol an earlier round already built (("a","bc")->"abc" vs an
-    existing "abc" from ("ab","c")). The sound batch is therefore:
-
-    1. prefix: walk the sorted window, accepting candidates while each is
-       symbol-disjoint from every previously accepted one (comparing
-       {a, b, a+b} sets); stop at the first interaction. Accepted pairs'
-       counts are invariant under each other's merges (a pre-existing
-       pair's count changes only if it shares a symbol with the merged
-       pair or contains the merged output), and every pair NOT accepted
-       sorts after every accepted one, so ties resolve in our favor and
-       count decreases can never promote them past an accepted merge.
-    2. hazard bound: new/inflated pairs are the remaining threat. A new
-       pair (x, ab) inherits at most count(x, a) occurrences, (ab, y) at
-       most count(b, y); a collision-inflated pair starts at most at the
-       max count over pairs containing the colliding symbol and gains at
-       most one new-pair bound per side. With U(q)=max(inmax(a_q),
-       outmax(b_q)) and V(q)=max count over pairs containing a_q+b_q
-       (both EXACT, from one extra filtered aggregation over the round's
-       pair table), every pair not in the accepted prefix ends the batch
-       with count <= max(V) + 2*max(U) over the accepted set. Accept
-       q_k only while count(q_k) strictly exceeds that running hazard.
-       (Self-pairs (a,a) end the batch automatically: inmax(a) includes
-       (a,a) itself, so the hazard jumps to >= its own count.)
-
-    Each committed merge is one narrow replace on the sentinel string; the
-    lineage is re-materialized (localCheckpoint) every ``_BPE_CKPT_EVERY``
-    applied merges. Driver traffic per round is the candidate window plus
-    the per-symbol max table — metadata scale. When counts are flat (ties,
-    adjacent-symbol candidates) the batch provably degenerates to 1 merge
-    per round, i.e. exact sequential greedy; see ``_bpe_learn_inmem`` for
-    why a 30k-merge production budget belongs on the Zipf-compressed
-    vocabulary instead. ``stats``, when given, records {"rounds",
-    "batch_sizes"} for telemetry/tests."""
-    # ``wrap_re`` sets the base-symbol granularity: "(.)" = one char per
-    # symbol (the classic [a-z]+ trainer), "(..)" = one HEX BYTE PAIR per
-    # symbol (the byte-level trainer, whose words are hex strings).
-    last_ckpt = words.select(
-        F.regexp_replace("word", wrap_re, f"{_BPE_SENT}$1{_BPE_SENT}").alias(
-            "s"
-        ),
-        "freq",
-    ).localCheckpoint()
-    # r16 optimization (guide §2.2 / §1.2 — partitioning should track DATA
-    # size, not core count): everything past the checkpoint above is
-    # vocabulary-scale (Zipf-compressed distinct words), yet each of the
-    # ~merges rounds was paying the ambient shuffle-partition count (one
-    # task per core) plus AQE's per-stage materialize-and-replan round
-    # trips — pure scheduler overhead on a frame of a few thousand rows.
-    # Scope BOTH down for the loop: partitions derived from the actual
-    # vocabulary size (the corpus-scale word count above already ran under
-    # the ambient parallelism), AQE off because every loop plan is already
-    # single-stage at this size and its runtime re-optimization can only
-    # add driver latency. Scoped to the loop — the session conf is
-    # shared. Measured at sf0.1 (31-word vocab, 22 rounds): 6.6 s → 4.6 s
-    # with the rule trajectory unchanged (it is conf-independent).
-    spark = words.sparkSession
-    n_vocab = last_ckpt.count()
-    batch_sizes: list[int] = []
-    loop_parts = max(1, (n_vocab + _BPE_LOOP_PART_ROWS - 1) // _BPE_LOOP_PART_ROWS)
-    try:
-        loop_parts = min(
-            loop_parts, max(1, int(spark.conf.get("spark.sql.shuffle.partitions")))
-        )
-    except ValueError:
-        pass  # non-integer ambient value (e.g. "auto"): keep derived
-    with scoped_conf(
-        spark,
-        **{
-            "spark.sql.shuffle.partitions": str(loop_parts),
-            "spark.sql.adaptive.enabled": "false",
-        },
-    ):
-        return _bpe_learn_rounds(
-            last_ckpt, merges, stats, batch_sizes=batch_sizes
-        )
-
-
-# Vocabulary rows per loop-shuffle partition: the BPE pair table is
-# vocab-scale, so ~64k rows per task keeps tasks meaningful at any corpus
-# size (a 1M-word vocabulary still gets 16-way shuffles) while a demo
-# vocabulary runs single-partition, single-stage rounds.
-_BPE_LOOP_PART_ROWS = 65536
-
-
-def _bpe_learn_rounds(
-    last_ckpt: DataFrame,
-    merges: int,
-    stats: dict | None,
-    batch_sizes: list[int],
-) -> list[tuple[int, str, str, int]]:
-    """The round loop of :func:`_bpe_learn_from` (see there for the batch
-    soundness argument); factored out so the conf scoping above wraps it
-    in one try/finally."""
-    cur = last_ckpt
-    rules: list[tuple[int, str, str, int]] = []
-    since_ckpt = 0
-    while len(rules) < merges:
-        pre = cur.select("freq", _bpe_symbols(F.col("s")).alias("syms")).where(
-            F.size("syms") >= 2
-        )
-        pair = F.transform(
-            F.sequence(F.lit(1), F.size("syms") - 1),
-            lambda i: F.struct(
-                F.element_at(F.col("syms"), i).alias("a"),
-                F.element_at(F.col("syms"), i + 1).alias("b"),
-            ),
-        )
-        pairs = (
-            pre.select("freq", F.explode(pair).alias("p"))
-            .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-            .agg(F.sum("freq").cast("bigint").alias("cnt"))
-        )
-        win = (
-            pairs.orderBy(F.col("cnt").desc(), "a", "b")
-            .limit(_BPE_BATCH_WINDOW)
-            .collect()
-        )
-        if not win:
-            # Every word fully merged to one symbol — a degenerate
-            # corpus for this merge budget. Raise rather than return a
-            # short rule table: the oracle unrolls exactly `merges`
-            # rounds, so a silent short table would hash-mismatch
-            # confusingly later.
-            raise ValueError(
-                f"BPE pair table empty at merge round {len(rules) + 1}:"
-                f" corpus too small for {merges} merges"
-            )
-        prefix: list = []
-        used: set[str] = set()
-        for r in win:
-            syms3 = {r["a"], r["b"], r["a"] + r["b"]}
-            if syms3 & used:
-                break
-            prefix.append(r)
-            used |= syms3
-        prefix = prefix[: merges - len(rules)]
-        batch = prefix[:1]
-        # FREE precheck before paying for the exact hazard aggregation:
-        # in/out maxima computed from the window rows alone are LOWER
-        # bounds on the true U/V (the window holds the globally largest
-        # counts, including those adjacent to the top candidate), so if
-        # the second candidate already fails the hazard test against the
-        # bounds it fails against the exact values too — the round is a
-        # single sequential merge with no extra job, which is the common
-        # case on natural text (adjacent-symbol candidates dominate the
-        # head of the distribution).
-        if len(prefix) > 1:
-            lb_in: dict[str, int] = {}
-            lb_out: dict[str, int] = {}
-            for r in win:
-                if r["cnt"] > lb_out.get(r["a"], 0):
-                    lb_out[r["a"]] = r["cnt"]
-                if r["cnt"] > lb_in.get(r["b"], 0):
-                    lb_in[r["b"]] = r["cnt"]
-            q0, m0 = prefix[0], prefix[0]["a"] + prefix[0]["b"]
-            lb_hazard = max(lb_in.get(m0, 0), lb_out.get(m0, 0)) + 2 * max(
-                lb_in.get(q0["a"], 0), lb_out.get(q0["b"], 0)
-            )
-        if len(prefix) > 1 and prefix[1]["cnt"] > lb_hazard:
-            from pyspark.storagelevel import StorageLevel
-
-            in_syms = sorted(
-                {q["a"] for q in prefix} | {q["a"] + q["b"] for q in prefix}
-            )
-            out_syms = sorted(
-                {q["b"] for q in prefix} | {q["a"] + q["b"] for q in prefix}
-            )
-            pairs = pairs.persist(StorageLevel.MEMORY_AND_DISK)
-            try:
-                hz = (
-                    pairs.where(F.col("b").isin(in_syms))
-                    .groupBy(F.col("b").alias("sym"))
-                    .agg(F.max("cnt").alias("mx"))
-                    .select(F.lit("in").alias("side"), "sym", "mx")
-                    .unionByName(
-                        pairs.where(F.col("a").isin(out_syms))
-                        .groupBy(F.col("a").alias("sym"))
-                        .agg(F.max("cnt").alias("mx"))
-                        .select(F.lit("out").alias("side"), "sym", "mx")
-                    )
-                    .collect()
-                )
-            finally:
-                pairs.unpersist()
-            inmax = {r["sym"]: r["mx"] for r in hz if r["side"] == "in"}
-            outmax = {r["sym"]: r["mx"] for r in hz if r["side"] == "out"}
-
-            def _u(q) -> int:
-                return max(inmax.get(q["a"], 0), outmax.get(q["b"], 0))
-
-            def _v(q) -> int:
-                m = q["a"] + q["b"]
-                return max(inmax.get(m, 0), outmax.get(m, 0))
-
-            max_u, max_v = _u(prefix[0]), _v(prefix[0])
-            for q in prefix[1:]:
-                if q["cnt"] <= max_v + 2 * max_u:
-                    break
-                batch.append(q)
-                max_u = max(max_u, _u(q))
-                max_v = max(max_v, _v(q))
-        s = F.col("s")
-        for q in batch:
-            a, b = q["a"], q["b"]
-            rules.append((len(rules) + 1, a, b, int(q["cnt"])))
-            s = F.replace(
-                s,
-                F.lit(f"{_BPE_SENT}{a}{_BPE_SENT}{_BPE_SENT}{b}{_BPE_SENT}"),
-                F.lit(f"{_BPE_SENT}{a}{b}{_BPE_SENT}"),
-            )
-        cur = cur.select(s.alias("s"), "freq")
-        batch_sizes.append(len(batch))
-        since_ckpt += len(batch)
-        # Re-materialize every ~_BPE_CKPT_EVERY applied merges, not every
-        # round: each merge is a single narrow replace, so letting a dozen
-        # chain on top of the last checkpoint keeps the per-round pair
-        # count cheap while bounding both lineage depth and codegen size.
-        if since_ckpt >= _BPE_CKPT_EVERY and len(rules) < merges:
-            ckpt = cur.localCheckpoint()
-            last_ckpt.unpersist()
-            last_ckpt = cur = ckpt
-            since_ckpt = 0
-    last_ckpt.unpersist()
-    if stats is not None:
-        stats["rounds"] = len(batch_sizes)
-        stats["batch_sizes"] = batch_sizes
-    return rules
 
 
 def _bpe_apply(
@@ -3596,7 +3333,7 @@ _BPE_VOCAB_DRIVER_BUDGET = 2_000_000
 
 
 def _bpe_learn_inmem(
-    word_freq: dict[str, int], merges: int | None = None
+    word_freq: dict[str, int], merges: int | None = None, width: int = 1
 ) -> list[tuple[int, str, str, int]]:
     """EXACT sequential greedy BPE over an in-memory (word, freq) table with
     incremental pair-count maintenance — the merge loop architecture every
@@ -3607,18 +3344,24 @@ def _bpe_learn_inmem(
     Zipf-compressed vocabulary, which is 6–8 orders of magnitude smaller
     than the corpus (100 TB of text is ~1e8 distinct [a-z]+ words — a few
     GB of driver memory). A lazy max-heap keyed (-count, a, b) reproduces
-    the engine tie-break; a pair -> word-ids inverted index makes each
-    merge cost proportional to the words it actually rewrites, so total
-    work across ALL merges is O(total rewrites), not O(vocab * merges) —
-    at a 30k–100k merge budget this is minutes where one distributed
-    round-trip per merge would be 30k Spark jobs (the r11-documented scale
-    wall of the distributed loop; batching those rounds soundly degenerates
-    to ~1 merge/round whenever top candidates share symbols — see
-    ``_bpe_learn_from``). Measured (r12): a 500k-word synthetic vocabulary
-    trains 32,000 merges in ~90 s single-threaded; 100k words / 8k merges
-    in ~14 s. ``merges=None`` trains to EXHAUSTION (every word
-    a single symbol); otherwise raises like the distributed trainer when
-    the corpus can't fund the budget."""
+    the engine tie-break (count DESC, sym_a ASC, sym_b ASC); a pair ->
+    word-ids inverted index makes each merge cost proportional to the words
+    it actually rewrites, so total work across ALL merges is O(total
+    rewrites), not O(vocab * merges). This is the only BPE trainer: a
+    distributed loop pays at least one Spark job per round, and sound round
+    batching degenerates to ~1 merge per round whenever top candidates
+    share symbols (measured: 28 jobs and 7–13 s for a 24-merge table of the
+    test corpora), where this pays one vocabulary collect and 0.03–0.1 s.
+    Measured
+    (r12): a 500k-word synthetic vocabulary trains 32,000 merges in ~90 s
+    single-threaded; 100k words / 8k merges in ~14 s.
+
+    ``width`` is the base-symbol length: 1 for [a-z]+ words (one char per
+    symbol), 2 for the byte-level table's hex words (one byte per symbol).
+    ``merges=None`` trains to EXHAUSTION (every word a single symbol);
+    otherwise raises when the corpus can't fund the budget — the oracles
+    unroll exactly ``merges`` rounds, so a short table would only surface
+    later as a confusing hash mismatch."""
     import heapq
 
     words: list[list] = []  # [symbol list, freq] per distinct word
@@ -3626,7 +3369,7 @@ def _bpe_learn_inmem(
     pair_words: dict[tuple[str, str], set[int]] = {}
     for w in sorted(word_freq):
         f = int(word_freq[w])
-        syms = list(w)
+        syms = [w[i : i + width] for i in range(0, len(w), width)]
         wi = len(words)
         words.append([syms, f])
         for p in zip(syms, syms[1:]):
@@ -3691,11 +3434,11 @@ def _bpe_learn_inmem(
     return rules
 
 
-# Train-once memo: the merge table is a pure function of (corpus, merge
-# budget), and a tokenizer is trained ONCE and applied everywhere — the
-# production shape, and within one verify/bench process it saves the three
-# downstream BPE ids (encode / tokenize / capstone) from re-running the
-# 24-round trainer the train id already ran. Keyed like the staging memos:
+# Train-once memo: the merge table is a pure function of (corpus, word
+# table, merge budget), and a tokenizer is trained ONCE and applied
+# everywhere — the production shape, and within one verify/bench process it
+# saves the downstream BPE ids (encode / tokenize / artifact / capstone)
+# the word-count job the train id already ran. Keyed like the staging memos:
 # realpath + content fingerprint (size, mtime_ns) of documents.parquet, so
 # a regenerated or re-pointed corpus retrains instead of serving stale
 # rules (the r10-ADVICE staging-key lesson, applied from the start).
@@ -3724,22 +3467,6 @@ def _corpus_fingerprint(sf_dir: str, name: str = "documents.parquet") -> tuple:
         return (st.st_size, st.st_mtime_ns)
     except OSError:
         return ("missing",)
-
-
-def _bpe_rules_for(
-    spark: SparkSession, sf_dir: str, merges: int = _BPE_MERGES
-) -> list[tuple[int, str, str, int]]:
-    import os as _os
-
-    key = (_os.path.realpath(sf_dir), merges, _corpus_fingerprint(sf_dir))
-    cached = _BPE_RULES_MEMO.get(key)
-    if cached is not None:
-        return cached
-    rules = _bpe_learn_from(
-        _bpe_word_freq(table(spark, sf_dir, "documents")), merges
-    )
-    _BPE_RULES_MEMO[key] = rules
-    return rules
 
 
 # GPT-2-style regex pre-tokenization (Radford et al. 2019; ASCII-scoped
@@ -3780,37 +3507,29 @@ def _bpe_byte_word_freq(d: DataFrame) -> DataFrame:
     )
 
 
-def _bpe_byte_rules_for(
-    spark: SparkSession, sf_dir: str, merges: int = _BPE_MERGES
+def _bpe_rules_for(
+    spark: SparkSession,
+    sf_dir: str,
+    merges: int | None = _BPE_MERGES,
+    byte: bool = False,
 ) -> list[tuple[int, str, str, int]]:
+    """The memoized merge table of the corpus at ``sf_dir``: one distributed
+    word count (``_bpe_word_freq``, or ``_bpe_byte_word_freq`` when
+    ``byte``), one bounded vocabulary collect, then the in-memory loop.
+    ``merges=None`` trains to exhaustion."""
     import os as _os
 
-    key = (_os.path.realpath(sf_dir), "byte", merges, _corpus_fingerprint(sf_dir))
-    cached = _BPE_RULES_MEMO.get(key)
-    if cached is not None:
-        return cached
-    rules = _bpe_learn_from(
-        _bpe_byte_word_freq(table(spark, sf_dir, "documents")),
-        merges,
-        wrap_re="(..)",
+    key = (
+        _os.path.realpath(sf_dir),
+        "byte" if byte else "char",
+        "full" if merges is None else merges,
+        _corpus_fingerprint(sf_dir),
     )
-    _BPE_RULES_MEMO[key] = rules
-    return rules
-
-
-def _bpe_rules_full_for(
-    spark: SparkSession, sf_dir: str
-) -> list[tuple[int, str, str, int]]:
-    """Exhaustion-budget rules via the production split: distributed word
-    count, bounded vocabulary collect, in-memory incremental merge loop.
-    Memoized alongside the fixed-budget rules (budget key "full")."""
-    import os as _os
-
-    key = (_os.path.realpath(sf_dir), "full", _corpus_fingerprint(sf_dir))
     cached = _BPE_RULES_MEMO.get(key)
     if cached is not None:
         return cached
-    rows = _bpe_word_freq(table(spark, sf_dir, "documents")).collect()
+    word_freq = _bpe_byte_word_freq if byte else _bpe_word_freq
+    rows = word_freq(table(spark, sf_dir, "documents")).collect()
     if len(rows) > _BPE_VOCAB_DRIVER_BUDGET:
         raise ValueError(
             f"BPE vocabulary ({len(rows)} distinct words) exceeds the"
@@ -3818,25 +3537,34 @@ def _bpe_rules_full_for(
             " the budget or prune with a min-frequency floor before the"
             " in-memory merge loop"
         )
-    rules = _bpe_learn_inmem({r["word"]: int(r["freq"]) for r in rows}, None)
+    rules = _bpe_learn_inmem(
+        {r["word"]: int(r["freq"]) for r in rows}, merges, width=2 if byte else 1
+    )
     _BPE_RULES_MEMO[key] = rules
     return rules
 
 
-def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed BPE tokenizer TRAINING: learn the first ``_BPE_MERGES``
-    merge rules over the corpus word-frequency table. Returns the merge
-    table (merge_rank, sym_a, sym_b, merged, pair_count) — exact integer
-    pair counts and a pinned tie-break make the whole training trajectory
-    hash-oracleable (the DuckDB oracle unrolls the same rounds as chained
-    CTEs). Completes the corpus->tokenizer story that llm_token_count's
-    BPE-ish regex only gestured at (r10 verdict item 1)."""
-    rules = _bpe_rules_for(spark, sf_dir)
+def _bpe_rules_frame(
+    spark: SparkSession, rules: list[tuple[int, str, str, int]]
+) -> DataFrame:
     return spark.createDataFrame(
         [(r, a, b, a + b, c) for r, a, b, c in rules],
         "merge_rank INT, sym_a STRING, sym_b STRING, merged STRING, "
         "pair_count BIGINT",
     )
+
+
+def llm_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """BPE tokenizer TRAINING: learn the first ``_BPE_MERGES`` merge rules
+    over the corpus word-frequency table — a distributed word count, one
+    vocabulary collect (2 Spark jobs), then ``_bpe_learn_inmem`` on the
+    driver. Returns the merge table (merge_rank, sym_a, sym_b,
+    merged, pair_count) — exact integer pair counts and a pinned tie-break
+    make the whole training trajectory hash-oracleable (the DuckDB oracle
+    unrolls the same rounds as chained CTEs). Completes the
+    corpus->tokenizer story that llm_token_count's BPE-ish regex only
+    gestured at (r10 verdict item 1)."""
+    return _bpe_rules_frame(spark, _bpe_rules_for(spark, sf_dir))
 
 
 def llm_bpe_bytelevel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3846,19 +3574,13 @@ def llm_bpe_bytelevel(spark: SparkSession, sf_dir: str) -> DataFrame:
     GPT-2 signature), represent each pre-token as the hex of its UTF-8
     bytes (two-char groups = base symbols → NO OOV is possible: every
     byte is in the base vocabulary), then learn ``_BPE_MERGES`` merges
-    with the same exact-trajectory distributed trainer as
-    ``llm_bpe_train`` (one map-side-combined pair aggregation per round
-    over the Zipf-compressed vocabulary; pinned tie-break count DESC,
-    sym_a ASC, sym_b ASC). Hash-green against a DuckDB oracle that
-    unrolls the identical rounds over the identical hex words; losslessness
-    (concat of pre-tokens == text) and round-trip (decode(encode(tok)) ==
-    tok for every distinct pre-token) are pinned in tests."""
-    rules = _bpe_byte_rules_for(spark, sf_dir)
-    return spark.createDataFrame(
-        [(r, a, b, a + b, c) for r, a, b, c in rules],
-        "merge_rank INT, sym_a STRING, sym_b STRING, merged STRING, "
-        "pair_count BIGINT",
-    )
+    with the same in-memory trainer as ``llm_bpe_train`` at base-symbol
+    width 2 (pinned tie-break count DESC, sym_a ASC, sym_b ASC).
+    Hash-green against a DuckDB oracle that unrolls the identical rounds
+    over the identical hex words; losslessness (concat of pre-tokens ==
+    text) and round-trip (decode(encode(tok)) == tok for every distinct
+    pre-token) are pinned in tests."""
+    return _bpe_rules_frame(spark, _bpe_rules_for(spark, sf_dir, byte=True))
 
 
 # Guarded-round budget of the llm_bpe_train_full oracle: the replay must
@@ -3880,27 +3602,23 @@ def llm_bpe_train_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-scale word count runs distributed, then the inherently
     sequential merge loop runs in driver memory over the Zipf-compressed
     vocabulary with incremental pair-count maintenance and an inverted
-    index (``_bpe_learn_inmem``) — one distributed job total, versus one
-    scheduler round-trip per merge for the r11 distributed loop (the
-    documented scale wall: a 30k-merge vocabulary would be 30k Spark
-    jobs). The collect is the bounded-metadata pattern (ANN codebooks,
+    index (``_bpe_learn_inmem``, the trainer every BPE id shares) — one
+    word count and one collect, where a distributed loop would pay a
+    scheduler round-trip per merge (a 30k-merge vocabulary would be 30k
+    Spark jobs). The collect is the bounded-metadata pattern (ANN codebooks,
     Bloom bitsets): the vocabulary, not the corpus, with an explicit
     ``_BPE_VOCAB_DRIVER_BUDGET`` guard. Hash-oracled end to end: the
     DuckDB oracle replays ``_BPE_FULL_ORACLE_ROUNDS`` guarded rounds that
     no-op after exhaustion, so the full trajectory — merge order, counts,
     and the exhaustion point itself — is verified."""
-    rules = _bpe_rules_full_for(spark, sf_dir)
+    rules = _bpe_rules_for(spark, sf_dir, merges=None)
     if len(rules) > _BPE_FULL_ORACLE_ROUNDS:
         raise ValueError(
             f"exhaustion took {len(rules)} merges, past the registered"
             f" oracle's {_BPE_FULL_ORACLE_ROUNDS}-round guard; raise"
             " _BPE_FULL_ORACLE_ROUNDS for this corpus"
         )
-    return spark.createDataFrame(
-        [(r, a, b, a + b, c) for r, a, b, c in rules],
-        "merge_rank INT, sym_a STRING, sym_b STRING, merged STRING, "
-        "pair_count BIGINT",
-    )
+    return _bpe_rules_frame(spark, rules)
 
 
 def llm_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4144,7 +3862,8 @@ def _bpe_oracle_rounds_guarded(rounds: int) -> str:
     is empty: b{i} (LIMIT 1) goes empty, and w{i} carries w{i-1} forward via
     LEFT JOIN ON TRUE + CASE instead of a CROSS JOIN (which would zero the
     chain). The UNION over b1..bN then emits exactly the exhaustion-length
-    rule table — same trajectory ``_bpe_learn_inmem`` walks in memory."""
+    rule table — an independent SQL replay of the trajectory
+    ``_bpe_learn_inmem`` walks in memory with ``merges=None``."""
     parts = [
         "WITH words AS MATERIALIZED ("
         " SELECT regexp_replace(word, '(.)', '~\\1~', 'g') AS s,"
@@ -4228,7 +3947,7 @@ def llm_bpe_byte_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     pure-punctuation or non-Latin docs the [a-z]+ tokenizer drops
     (docs with NULL/empty text are absent, mirrored in the oracle)."""
     d = table(spark, sf_dir, "documents")
-    rules = _bpe_byte_rules_for(spark, sf_dir)
+    rules = _bpe_rules_for(spark, sf_dir, byte=True)
     dw = (
         d.select(
             "doc_id",

@@ -136,14 +136,24 @@ def _derived_state_partitions(spark: SparkSession, stream_dir: str) -> str:
     sequence), and join/aggregate conditions are row-local — so the
     emitted ROW SET is identical at any partition count (only the
     memory-sink row order varies, which every oracle sorts away). Pinned
-    by the batch-equivalence tests and the probe above."""
-    total = 0
-    try:
-        for f in os.listdir(stream_dir):
-            if f.endswith(".parquet"):
-                total += os.path.getsize(os.path.join(stream_dir, f))
-    except OSError:
-        return _STREAM_STATE_PARTITIONS
+    by the batch-equivalence tests and the probe above.
+
+    The staged dir is walked recursively, and a dir holding zero parquet
+    bytes raises: a missing or mis-laid staging would otherwise size the
+    state silently at the floor. ``stream_stream_join`` reads both of its
+    sides from the same staged dir, so this one measurement bounds the
+    state of both sides."""
+    total = sum(
+        os.path.getsize(os.path.join(root, f))
+        for root, _, files in os.walk(stream_dir)
+        for f in files
+        if f.endswith(".parquet")
+    )
+    if total == 0:
+        raise ValueError(
+            f"no parquet bytes under staged stream dir {stream_dir!r}:"
+            " cannot size the streaming state"
+        )
     parts = max(2, -(-total // _STATE_PARTITION_BYTES))
     try:
         ambient = int(spark.conf.get("spark.sql.shuffle.partitions"))

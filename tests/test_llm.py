@@ -929,16 +929,79 @@ def test_hnsw_degenerate_inputs(spark, tmp_path):
     assert empty.count() == 0
 
 
+def test_hnsw_pool_failure_reraises_before_siblings_finish(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """One failed job of the HNSW driver-job pool re-raises at once instead
+    of waiting out its siblings: the centroid collect raises while the
+    other pooled jobs scan a corpus slowed by a sleeping UDF, and the error
+    reaches the caller while those jobs are still running. They run in the
+    caller's job group, so that group sees them as active."""
+    import time
+
+    d = str(tmp_path / "slow")
+    llm.table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 20).coalesce(
+        1
+    ).write.parquet(f"{d}/embeddings.parquet")
+
+    @F.udf("boolean")
+    def slow(v):
+        time.sleep(0.5)
+        return True
+
+    real_table = llm.table
+    monkeypatch.setattr(
+        llm, "table", lambda s, sf, n: real_table(s, sf, n).filter(slow("vec_id"))
+    )
+
+    def boom(e):
+        raise RuntimeError("centroid collect failed")
+
+    monkeypatch.setattr(llm, "_ivf_centroid_rows", boom)
+    # keep the layer-0 prefetch fast: the failure path joins it on purpose
+    monkeypatch.setattr(
+        llm,
+        "_hnsw_l0_edges",
+        lambda e: spark.createDataFrame([], "src LONG, dst LONG"),
+    )
+    sc = spark.sparkContext
+    group = "hnsw-pool-failure"
+    sc.setJobGroup(group, group, interruptOnCancel=True)
+    st = sc.statusTracker()
+    try:
+        with pytest.raises(RuntimeError, match="centroid collect failed"):
+            llm.llm_sim_hnsw(spark, d)
+        running = set(st.getActiveJobsIds()) & set(st.getJobIdsForGroup(group))
+        assert running, "error waited for every sibling job to finish"
+    finally:
+        sc.cancelJobGroup(group)
+        for k in (
+            "spark.jobGroup.id",
+            "spark.job.description",
+            "spark.job.interruptOnCancel",
+        ):
+            sc.setLocalProperty(k, None)
+        deadline = time.monotonic() + 60
+        while set(st.getActiveJobsIds()) & set(st.getJobIdsForGroup(group)):
+            assert time.monotonic() < deadline
+            time.sleep(0.2)
+
+
 # ---------------------------------------------------------------------------
 # BPE tokenizer train + apply
 # ---------------------------------------------------------------------------
 
 
-def _ref_bpe_learn(word_freq: dict[str, int], merges: int):
-    """Independent pure-Python BPE reference (Sennrich-style dict walk, no
-    sentinel strings — a DIFFERENT formulation from the engine's): returns
-    [(rank, a, b, count)] with the engine's tie-break (count desc, a, b)."""
-    vocab = {tuple(w): f for w, f in word_freq.items()}
+def _ref_bpe_learn(word_freq: dict[str, int], merges: int, width: int = 1):
+    """Independent pure-Python BPE reference (Sennrich-style dict walk with a
+    full recount every round, no heap or inverted index — a DIFFERENT
+    formulation from the engine's): returns [(rank, a, b, count)] with the
+    engine's tie-break (count desc, a, b). ``width`` is the base-symbol
+    length (2 for the byte-level table's hex words)."""
+    vocab = {
+        tuple(w[i : i + width] for i in range(0, len(w), width)): f
+        for w, f in word_freq.items()
+    }
     rules = []
     for rank in range(1, merges + 1):
         stats: dict[tuple[str, str], int] = {}
@@ -965,8 +1028,8 @@ def _ref_bpe_learn(word_freq: dict[str, int], merges: int):
     return rules
 
 
-def _ref_bpe_encode(word: str, rules) -> list[str]:
-    syms = list(word)
+def _ref_bpe_encode(word: str, rules, width: int = 1) -> list[str]:
+    syms = [word[i : i + width] for i in range(0, len(word), width)]
     for _, a, b, _ in rules:
         out, i = [], 0
         while i < len(syms):
@@ -981,35 +1044,29 @@ def _ref_bpe_encode(word: str, rules) -> list[str]:
 
 
 def test_bpe_train_matches_pure_python_reference(spark, sf_dir):
-    """The distributed learner must reproduce, rule for rule and count for
-    count, an independent driver-side reference run on the same
-    word-frequency table — including overlapping-pair counting and the
-    greedy left-to-right merge scan."""
+    """The trainer must reproduce, rule for rule and count for count, an
+    independent reference run on the same word-frequency table — including
+    overlapping-pair counting and the greedy left-to-right merge scan — and
+    so must the memoized rules the registered ids serve."""
     wf_df = llm._bpe_word_freq(llm.table(spark, sf_dir, "documents"))
     word_freq = {r["word"]: r["freq"] for r in wf_df.collect()}
     expected = _ref_bpe_learn(word_freq, llm._BPE_MERGES)
-    got = llm._bpe_learn_from(wf_df, llm._BPE_MERGES)
-    assert got == expected
+    assert llm._bpe_learn_inmem(word_freq, llm._BPE_MERGES) == expected
+    assert llm._bpe_rules_for(spark, sf_dir) == expected
 
 
 def test_bpe_greedy_overlap_and_tiebreak(spark):
     """'aaaa b' x1: pair (a,a) counts 3 (overlapping get_stats), and the
     greedy merge yields [aa, aa], never [aa, a, a] or a triple merge.
     Tie-break: with 'xy' and 'xz' at equal freq, (x,y) < (x,z) wins."""
-    wf = spark.createDataFrame(
-        [("aaaa", 1)], "word STRING, freq BIGINT"
-    )
-    rules = llm._bpe_learn_from(wf, 1)
+    rules = llm._bpe_learn_inmem({"aaaa": 1}, 1)
     assert rules == [(1, "a", "a", 3)]
     enc = spark.createDataFrame([("aaaa",)], "word STRING").select(
         llm._bpe_symbols(llm._bpe_apply(F.col("word"), rules)).alias("syms")
     )
     assert enc.first()["syms"] == ["aa", "aa"]
 
-    tie = spark.createDataFrame(
-        [("xy", 5), ("xz", 5)], "word STRING, freq BIGINT"
-    )
-    assert llm._bpe_learn_from(tie, 1) == [(1, "x", "y", 5)]
+    assert llm._bpe_learn_inmem({"xy": 5, "xz": 5}, 1) == [(1, "x", "y", 5)]
 
 
 def test_bpe_encode_matches_reference_per_word(spark, sf_dir):
@@ -1068,40 +1125,49 @@ def test_hnsw_planted_cluster_recall_floor(spark):
 
 
 def test_bpe_property_random_corpora_match_reference(spark):
-    """Property: on random tiny word-frequency tables over a 3-letter
+    """Property: on random tiny word-frequency tables over a 3-symbol
     alphabet (maximizing pair-count TIES and overlapping-pair cases), the
-    distributed learner's merge table and the chained-replace encode both
-    equal the pure-Python reference, for every merge budget the corpus
-    supports."""
+    trainer's merge table and the chained-replace encode both equal the
+    pure-Python reference, for every merge budget the corpus supports.
+    Run once on 1-char symbols and once on 2-char hex symbols, the
+    byte-level table's base width."""
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
-    word = st.text(alphabet="abc", min_size=1, max_size=6)
-
-    @settings(max_examples=8, deadline=None)
-    @given(
-        st.dictionaries(word, st.integers(1, 9), min_size=1, max_size=8),
-        st.integers(1, 4),
-    )
-    def check(word_freq, merges):
-        expected = _ref_bpe_learn(word_freq, merges)
-        if len(expected) < merges:
-            return  # corpus exhausts before the budget; engine raises
-        wf = spark.createDataFrame(
-            list(word_freq.items()), "word STRING, freq BIGINT"
+    for width, alphabet, wrap_re in (
+        (1, "abc", "(.)"),
+        (2, ["41", "42", "4A"], "(..)"),
+    ):
+        word = st.lists(st.sampled_from(alphabet), min_size=1, max_size=6).map(
+            "".join
         )
-        got = llm._bpe_learn_from(wf, merges)
-        assert got == expected
-        enc = spark.createDataFrame(
-            [(w,) for w in sorted(word_freq)], "word STRING"
-        ).select(
-            "word",
-            llm._bpe_symbols(llm._bpe_apply(F.col("word"), got)).alias("syms"),
-        )
-        for r in enc.collect():
-            assert r["syms"] == _ref_bpe_encode(r["word"], got), r["word"]
 
-    check()
+        @settings(max_examples=8, deadline=None)
+        @given(
+            st.dictionaries(word, st.integers(1, 9), min_size=1, max_size=8),
+            st.integers(1, 4),
+        )
+        def check(word_freq, merges):
+            expected = _ref_bpe_learn(word_freq, merges, width)
+            if len(expected) < merges:
+                with pytest.raises(ValueError, match="pair table empty"):
+                    llm._bpe_learn_inmem(word_freq, merges, width)
+                return
+            got = llm._bpe_learn_inmem(word_freq, merges, width)
+            assert got == expected
+            enc = spark.createDataFrame(
+                [(w,) for w in sorted(word_freq)], "word STRING"
+            ).select(
+                "word",
+                llm._bpe_symbols(
+                    llm._bpe_apply(F.col("word"), got, wrap_re=wrap_re)
+                ).alias("syms"),
+            )
+            for r in enc.collect():
+                want = _ref_bpe_encode(r["word"], got, width)
+                assert r["syms"] == want, r["word"]
+
+        check()
 
 
 def test_bpe_inmem_parity_at_512_merges():
@@ -1129,7 +1195,7 @@ def test_bpe_inmem_parity_at_512_merges():
 def test_bpe_inmem_exhaustion_and_budget_errors():
     """merges=None trains to exhaustion (reference with an unreachable
     budget breaks at the same point); a fixed budget past exhaustion raises
-    the same contract error as the distributed trainer."""
+    the curated "pair table empty" error."""
     import pytest
 
     wf = {"abab": 3, "abc": 2, "ca": 5}
@@ -1160,38 +1226,36 @@ def test_bpe_train_full_matches_reference_and_oracle_guard(spark, sf_dir):
     assert len(got) <= slot_bound <= llm._BPE_FULL_ORACLE_ROUNDS
 
 
-def test_bpe_batched_rejects_naive_disjoint_batching(spark):
+def test_bpe_batched_rejects_naive_disjoint_batching():
     """The counterexample that makes naive top-M-disjoint batching WRONG:
     corpus {xab x10, ab x2, cd x9} has counts (a,b)=12, (x,a)=10, (c,d)=9;
     top-2 disjoint pairs are {(a,b), (c,d)}, but sequential greedy merges
     (a,b) and then the NEWLY CREATED (x, ab) at count 10 — (c,d) at 9 never
-    ranks second. The batched distributed trainer must emit the sequential
-    trajectory (its first-interaction stop puts (x,a) in round 1's window
-    before (c,d), bounding the batch to {(a,b)})."""
-    wf = spark.createDataFrame(
-        [("xab", 10), ("ab", 2), ("cd", 9)], "word STRING, freq BIGINT"
-    )
-    stats: dict = {}
-    got = llm._bpe_learn_from(wf, 2, stats=stats)
+    ranks second. The trainer must emit the sequential trajectory."""
+    wf = {"xab": 10, "ab": 2, "cd": 9}
+    got = llm._bpe_learn_inmem(wf, 2)
     assert got == [(1, "a", "b", 12), (2, "x", "ab", 10)]
-    expected = _ref_bpe_learn({"xab": 10, "ab": 2, "cd": 9}, 2)
-    assert got == expected
-    assert stats["batch_sizes"][0] == 1  # the unsound 2-batch was refused
+    assert got == _ref_bpe_learn(wf, 2)
 
 
-def test_bpe_batched_telemetry_and_multi_merge_rounds(spark):
-    """A corpus of genuinely independent high-count pairs lets the hazard
-    rule commit >1 merge per round (batch telemetry proves the batching is
-    live), and the rule stream still equals the reference trajectory."""
-    word_freq = {"ab": 90, "cd": 60, "ef": 40, "gh": 27, "ij": 18, "kl": 12}
-    wf = spark.createDataFrame(
-        list(word_freq.items()), "word STRING, freq BIGINT"
-    )
-    stats: dict = {}
-    got = llm._bpe_learn_from(wf, 6, stats=stats)
-    assert got == _ref_bpe_learn(word_freq, 6)
-    assert sum(stats["batch_sizes"]) == 6
-    assert stats["rounds"] < 6  # at least one round committed a real batch
+def test_bpe_training_runs_at_most_three_jobs(spark, sf_dir):
+    """Training a merge table is one vocabulary collect, which AQE runs as
+    2 jobs (the word-count shuffle, then the result), after the 1 job
+    every ``table()`` read pays to resolve the parquet schema: at most 3
+    Spark jobs per table, where a distributed round loop pays one or more
+    jobs per merge (28 for the 24-merge table)."""
+    sc = spark.sparkContext
+    for i, fn in enumerate((llm.llm_bpe_train, llm.llm_bpe_bytelevel)):
+        llm._BPE_RULES_MEMO.clear()
+        group = f"bpe-jobs-{i}"
+        sc.setJobGroup(group, group)
+        try:
+            fn(spark, sf_dir)
+        finally:
+            for k in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(k, None)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+        assert 1 <= len(jobs) <= 3, (fn.__name__, len(jobs))
 
 
 def test_bpe_rules_memo_invalidates_on_corpus_change(spark, tmp_path):
@@ -1726,7 +1790,7 @@ def test_bpe_bytelevel_lossless_and_roundtrip(spark, sf_dir):
         & (F.concat_ws("", toks) != F.col("text"))
     ).count()
     assert bad == 0  # lossless pre-tokenization
-    rules = llm._bpe_byte_rules_for(spark, sf_dir)
+    rules = llm._bpe_rules_for(spark, sf_dir, byte=True)
     assert all(
         len(a) % 2 == 0 and len(b) % 2 == 0 for _, a, b, _ in rules
     )

@@ -1017,3 +1017,27 @@ def test_acid_replicate_incremental_and_no_reapply(spark, sf_dir, tmp_path):
     run()
     assert acid_table.head(tgt) == h2
     assert acid_table.snapshot(spark, tgt).count() == want
+
+
+def test_derived_state_partitions_walks_nested_staging(spark, tmp_path, monkeypatch):
+    """The state-partition count sizes every parquet file under the staged
+    dir, nested ones included; non-parquet files do not count."""
+    monkeypatch.setattr(streams, "_STATE_PARTITION_BYTES", 1000)
+    (tmp_path / "a" / "b").mkdir(parents=True)
+    (tmp_path / "top.parquet").write_bytes(b"x" * 900)
+    (tmp_path / "a" / "mid.parquet").write_bytes(b"x" * 800)
+    (tmp_path / "a" / "b" / "deep.parquet").write_bytes(b"x" * 800)
+    (tmp_path / "a" / "b" / "deep.parquet.crc").write_bytes(b"x" * 5000)
+    # 2500 parquet bytes at 1000 per partition, under the ambient cap of 4
+    assert int(spark.conf.get("spark.sql.shuffle.partitions")) >= 3
+    assert streams._derived_state_partitions(spark, str(tmp_path)) == "3"
+
+
+def test_derived_state_partitions_rejects_empty_staging(spark, tmp_path):
+    """A staged dir with no parquet bytes (empty, or missing) raises instead
+    of silently sizing the state at the floor."""
+    (tmp_path / "empty").mkdir()
+    (tmp_path / "empty" / "_SUCCESS").write_bytes(b"")
+    for d in (tmp_path / "empty", tmp_path / "missing"):
+        with pytest.raises(ValueError, match="no parquet bytes"):
+            streams._derived_state_partitions(spark, str(d))
