@@ -123,14 +123,12 @@ BEST_OF_3 = {
     "stream_stream_join",
     "llm_sim_hnsw",
     "join_bloom_prefilter",
-    "llm_bpe_train",
     "acid_merge_snapshot",
     "llm_lm_perplexity",
     "stream_acid_cdf_agg",
     "llm_substring_dedup",
     "acid_merge_clauses",
     "acid_partition_pruning",
-    "llm_bpe_bytelevel",
 }
 
 
@@ -158,7 +156,11 @@ def main() -> None:
     # Best-of-2 per query: the host shows heavy transient I/O contention
     # (identical runs vary up to 4×); the faster run is the engine's number.
     # Every rep starts from a reset: it pays its own cache fill and trains
-    # its own BPE rules and codebook, never timing a memo lookup.
+    # its own BPE rules and codebook, never timing a memo lookup. The reset
+    # keeps streams._STAGED_DIRS, the stream ids' replay files: they are
+    # input fixtures staged once per process, like the batch ids' parquet,
+    # so only the first rep of a stream id pays that write, and the stream
+    # itself still runs in full every rep.
     timings: dict[str, float] = {}
     for name in HEADLINE:
         best = None

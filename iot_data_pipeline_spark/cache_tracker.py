@@ -37,7 +37,7 @@ def tracked_cache(df: DataFrame, level: StorageLevel | None = None) -> DataFrame
     dimension-scale frames keep the default. The distinction is REUSE
     CLASS, not just size: a scanned-a-few-times-then-discarded INTERMEDIATE
     (the shingle frames) belongs on disk, while a hot INDEX an operator
-    re-probes many times per run (the HNSW graph/vector caches inside the
+    re-probes many times per run (the HNSW graph cache inside the
     beam-search loop) legitimately stays memory-first — at production scale
     that role is a distributed in-memory ANN serving tier, not an
     executor-storage pin."""

@@ -332,7 +332,7 @@ def _embed_dup_pairs(v: DataFrame, threshold: float) -> DataFrame:
       unchanged (exact all-pairs is Ω(pairs)) but the
       single-task memory/wall ceiling is gone and the arithmetic runs at
       BLAS throughput instead of per-element codegen lambdas, exactly
-      like ``_hnsw_l0_edges``'s bucketed build. Cosines round half-up to
+      like ``_hnsw_edges``'s bucketed build. Cosines round half-up to
       4 decimals on both paths (numpy's default bankers rounding would
       diverge from Spark's BigDecimal HALF_UP at exact .00005
       boundaries)."""
@@ -483,15 +483,24 @@ def llm_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _cosine(emb_a, emb_b):
-    """Double-precision cosine via JVM higher-order fns (no UDF)."""
-    da = F.transform(emb_a, lambda x: x.cast("double"))
-    db = F.transform(emb_b, lambda x: x.cast("double"))
+    """Cosine of two double-array columns via JVM higher-order fns (no UDF)."""
     dot = F.aggregate(
-        F.zip_with(da, db, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
+        F.zip_with(emb_a, emb_b, lambda x, y: x * y), F.lit(0.0), lambda a, x: a + x
     )
-    na = F.sqrt(F.aggregate(da, F.lit(0.0), lambda a, x: a + x * x))
-    nb = F.sqrt(F.aggregate(db, F.lit(0.0), lambda a, x: a + x * x))
+    na = F.sqrt(F.aggregate(emb_a, F.lit(0.0), lambda a, x: a + x * x))
+    nb = F.sqrt(F.aggregate(emb_b, F.lit(0.0), lambda a, x: a + x * x))
     return dot / (na * nb)
+
+
+def _top_per_query(scored: DataFrame, k: int = 10) -> DataFrame:
+    """Each query's ``k`` best (query_id, vec_id, cosine) rows, ranked by
+    cosine DESC then vec_id, with the rank as ``rk``."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
+    return (
+        scored.withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= k)
+        .select("query_id", "vec_id", "cosine", "rk")
+    )
 
 
 def llm_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -553,12 +562,7 @@ def llm_sim_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = e.select("vec_id", "embedding").mapInPandas(
         score, "query_id LONG, vec_id LONG, cosine DOUBLE"
     ).filter(F.col("vec_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 10)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
+    return _top_per_query(scored)
 
 
 _ANN_TABLES = 4
@@ -619,22 +623,12 @@ def llm_sim_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     scored = cands.join(v, "vec_id").join(F.broadcast(q), "query_id")
-    dot = F.aggregate(
-        F.zip_with(F.col("q_emb"), F.col("emb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    na = F.sqrt(F.aggregate(F.col("q_emb"), F.lit(0.0), lambda a, x: a + x * x))
-    nb = F.sqrt(F.aggregate(F.col("emb"), F.lit(0.0), lambda a, x: a + x * x))
     scored = scored.select(
-        "query_id", "vec_id", F.round(dot / (na * nb), 4).alias("cosine")
+        "query_id",
+        "vec_id",
+        F.round(_cosine(F.col("q_emb"), F.col("emb")), 4).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 10)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
+    return _top_per_query(scored)
 
 
 def _min_label_propagation(
@@ -754,33 +748,35 @@ def _min_label_propagation(
 _IVF_NPROBE = 2
 
 
-def _ivf_centroid_rows(e: DataFrame):
-    """The one cluster job behind :func:`_ivf_allowed` — exact per-list
-    centroids (decimal-exact sums, one bounded nlist×dim collect).
-    Factored out so callers with other independent driver jobs (the HNSW
-    entry stage) can run this collect on a helper thread (guide §2.6
-    overlap independent jobs) and feed the rows to
-    :func:`_ivf_allowed_from_rows`."""
+def _ivf_centroid_rows(e: DataFrame, is_l1):
+    """The one cluster job of the HNSW entry stage, grouped by (label,
+    dim): each list's exact centroid component ``c`` (decimal-exact sums),
+    its size ``n`` and its count ``n1`` of ``is_l1`` (layer-1) vectors,
+    in one bounded nlist×dim collect. :func:`_ivf_allowed_from_rows`
+    picks the probed lists from these rows, and the graph build reads its
+    sizes from them."""
     dec = F.col("v").cast("double").cast("decimal(20,10)")
     return (
-        e.select("label", F.posexplode("embedding").alias("dim", "v"))
+        e.select(
+            "label",
+            is_l1.cast("long").alias("l1"),
+            F.posexplode("embedding").alias("dim", "v"),
+        )
         .groupBy("label", "dim")
-        .agg((F.sum(dec).cast("double") / F.count(F.lit(1))).alias("c"))
+        .agg(
+            (F.sum(dec).cast("double") / F.count(F.lit(1))).alias("c"),
+            F.count(F.lit(1)).alias("n"),
+            F.sum("l1").alias("n1"),
+        )
         .collect()
     )
 
 
-def _ivf_allowed(e: DataFrame, q_mat, q_ids, nprobe: int = _IVF_NPROBE):
-    """Coarse-quantizer probe selection shared by the IVF family: exact
-    per-list centroids (decimal-exact sums, one bounded nlist×dim collect),
-    then each query's ``nprobe`` nearest lists by centroid cosine (driver-
-    side numpy on the tiny matrix). Returns ``{query_id: set(labels)}``."""
-    return _ivf_allowed_from_rows(_ivf_centroid_rows(e), q_mat, q_ids, nprobe)
-
-
 def _ivf_allowed_from_rows(cent_rows, q_mat, q_ids, nprobe: int = _IVF_NPROBE):
-    """Driver-side numpy half of :func:`_ivf_allowed`, over pre-collected
-    centroid rows."""
+    """Coarse-quantizer probe selection over the rows of
+    :func:`_ivf_centroid_rows`: each query's ``nprobe`` nearest lists by
+    centroid cosine (numpy on the tiny collected matrix). Returns
+    ``{query_id: set(labels)}``."""
     import numpy as np
 
     list_ids = sorted({r["label"] for r in cent_rows})
@@ -806,7 +802,8 @@ def _trained_allowed(cent, q_mat, q_ids, nprobe: int = _IVF_NPROBE):
     """Probe selection against the TRAINED k-means codebook (r15 verdict
     item 2): dequantize the integer centroids back to the embedding
     domain (an exact function of the int64 matrix — deterministic), then
-    the same rounded-cosine + lexsort probe as :func:`_ivf_allowed`.
+    the same rounded-cosine + lexsort probe as
+    :func:`_ivf_allowed_from_rows`.
     Returns ``{query_id: set(cluster_ids)}``."""
     import numpy as np
 
@@ -911,12 +908,7 @@ def llm_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .mapInPandas(score, "query_id LONG, vec_id LONG, cosine DOUBLE")
         .filter(F.col("vec_id") != F.col("query_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 10)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
+    return _top_per_query(scored)
 
 
 _PQ_M, _PQ_K, _PQ_REFINE = 8, 16, 50
@@ -1175,7 +1167,7 @@ def llm_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     km_cent, _km_counts = _kmeans_codebook_for(spark, sf_dir)
     allowed = _trained_allowed(km_cent, q_mat, q_ids)
     # Column-less parquet count (near-metadata cost) for the scale-aware
-    # re-rank depth — same pattern as llm_sim_hnsw's width count.
+    # re-rank depth.
     refine = _pq_refine_depth(e.count())
 
     seed_mat = np.array([r["embedding"] for r in seed_rows], dtype=np.float64)
@@ -1291,24 +1283,12 @@ def llm_sim_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = F.broadcast(cands).join(v, "vec_id").join(
         F.broadcast(q_frame), "query_id"
     )
-    dot = F.aggregate(
-        F.zip_with(F.col("q_emb"), F.col("emb"), lambda x, y: x * y),
-        F.lit(0.0),
-        lambda a, x: a + x,
-    )
-    na = F.sqrt(F.aggregate(F.col("q_emb"), F.lit(0.0), lambda a, x: a + x * x))
-    nb = F.sqrt(F.aggregate(F.col("emb"), F.lit(0.0), lambda a, x: a + x * x))
     scored = scored.select(
-        "query_id", "vec_id", F.round(dot / (na * nb), 4).alias("cosine")
+        "query_id",
+        "vec_id",
+        F.round(_cosine(F.col("q_emb"), F.col("emb")), 4).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 10)
-        .select("query_id", "vec_id", "cosine", "rk")
-    )
+    return _top_per_query(scored)
 
 
 # Beam 64 floor (was 32): the frontier width is the cheap recall knob — it
@@ -1355,7 +1335,8 @@ _HNSW_SCHEDULE = (1, 0)
 
 
 def _hnsw_knn_edges(pdf: "pd.DataFrame") -> "pd.DataFrame":  # noqa: F821
-    """Exact kNN edge list within one bounded group (ties → lower id).
+    """Exact kNN edge list within one bounded group of one graph layer
+    (ties → lower id).
 
     Emits the cosine so multi-round builds can merge to a global top-k;
     rounded to 9 decimals so BLAS blocking jitter across different group
@@ -1363,43 +1344,47 @@ def _hnsw_knn_edges(pdf: "pd.DataFrame") -> "pd.DataFrame":  # noqa: F821
     import numpy as np
     import pandas as pd
 
-    if len(pdf) < 2:
-        return pd.DataFrame(
-            {"src": pd.Series(dtype="int64"), "dst": pd.Series(dtype="int64"),
-             "cos": pd.Series(dtype="float64")}
-        )
-    v = np.array(list(pdf["embedding"]), dtype=np.float64)
-    ids = pdf["vec_id"].to_numpy()
-    vn = np.sqrt((v * v).sum(axis=1))
-    cos = np.round((v @ v.T) / np.outer(vn, vn), 9)
-    np.fill_diagonal(cos, -2.0)
     k = min(_HNSW_KG, len(pdf) - 1)
     srcs, dsts, coss = [], [], []
-    for r in range(len(pdf)):
-        order = np.lexsort((ids, -cos[r]))[:k]
-        srcs.extend([ids[r]] * k)
-        dsts.extend(ids[order])
-        coss.extend(cos[r][order])
-    return pd.DataFrame({"src": srcs, "dst": dsts, "cos": coss})
+    if k > 0:
+        v = np.array(list(pdf["embedding"]), dtype=np.float64)
+        ids = pdf["vec_id"].to_numpy()
+        vn = np.sqrt((v * v).sum(axis=1))
+        cos = np.round((v @ v.T) / np.outer(vn, vn), 9)
+        np.fill_diagonal(cos, -2.0)
+        for r in range(len(pdf)):
+            order = np.lexsort((ids, -cos[r]))[:k]
+            srcs.extend([ids[r]] * k)
+            dsts.extend(ids[order])
+            coss.extend(cos[r][order])
+    return pd.DataFrame(
+        {
+            "layer": pd.Series([pdf["layer"].iloc[0]] * len(srcs), dtype="int32"),
+            "src": pd.Series(srcs, dtype="int64"),
+            "dst": pd.Series(dsts, dtype="int64"),
+            "cos": pd.Series(coss, dtype="float64"),
+        }
+    )
 
 
 def _hnsw_symmetrize(edges: DataFrame) -> DataFrame:
     """Union of forward and reversed scored edges, then a per-node degree
-    cap at 2·kg (HNSW's M_max back-link prune, by cosine): without the cap
-    a hub node selected by many neighbors gets unbounded degree, and
-    per-hop expansion cost (|frontier|·degree per hop, squared for the
-    fused 2-hop) loses its bound. A mutual-kNN pair appears twice in the
-    union and burns two of the 2·kg slots — harmless (the beam dedupes
-    candidates), and cheaper than a dedup shuffle before the window."""
+    cap at 2·kg within each layer (HNSW's M_max back-link prune, by
+    cosine): without the cap a hub node selected by many neighbors gets
+    unbounded degree, and per-hop expansion cost (|frontier|·degree per
+    hop, squared for the fused 2-hop) loses its bound. A mutual-kNN pair
+    appears twice in the union and burns two of the 2·kg slots — harmless
+    (the beam dedupes candidates), and cheaper than a dedup shuffle before
+    the window."""
     back = edges.select(
-        F.col("dst").alias("src"), F.col("src").alias("dst"), "cos"
+        "layer", F.col("dst").alias("src"), F.col("src").alias("dst"), "cos"
     )
-    w = Window.partitionBy("src").orderBy(F.col("cos").desc(), F.col("dst"))
+    w = Window.partitionBy("layer", "src").orderBy(F.col("cos").desc(), F.col("dst"))
     return (
         edges.unionByName(back)
         .withColumn("deg", F.row_number().over(w))
         .filter(F.col("deg") <= 2 * _HNSW_KG)
-        .select("src", "dst")
+        .select("layer", "src", "dst")
     )
 
 
@@ -1410,87 +1395,77 @@ def _hnsw_l1_buckets(n1: int) -> int:
     return max(2, -(-n1 // _HNSW_L1_CAP))
 
 
-def _hnsw_l1_edges(spark: SparkSession, l1: DataFrame, n1: int) -> DataFrame:
-    """Sharded layer-1 kNN graph: _HNSW_L1_ROUNDS independent hash
-    bucketings (xxhash64(vec_id, round) % B), exact kNN within each
-    bounded bucket, then a global per-src top-kg merge over the union.
-    No single applyInPandas group ever holds a corpus fraction — the
-    round-6 single-task build (groupBy(lit(0)) over the whole 1/16
-    subset) was the one OOM-class ceiling in the registry."""
-    b = _hnsw_l1_buckets(n1)
-    rounds = spark.range(_HNSW_L1_ROUNDS).withColumnRenamed("id", "rnd")
-    rep = l1.select("vec_id", "embedding").crossJoin(F.broadcast(rounds))
-    raw = (
-        rep.withColumn(
-            "bkt", F.pmod(F.xxhash64(F.col("vec_id"), F.col("rnd")), F.lit(b))
-        )
-        .groupBy("rnd", "bkt")
-        .applyInPandas(_hnsw_knn_edges, "src LONG, dst LONG, cos DOUBLE")
-    )
-    merged = raw.groupBy("src", "dst").agg(F.max("cos").alias("cos"))
-    w = Window.partitionBy("src").orderBy(F.col("cos").desc(), F.col("dst"))
-    top = (
-        merged.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= _HNSW_KG)
-        .select("src", "dst", "cos")
-    )
-    return _hnsw_symmetrize(top)
+def _hnsw_edges(
+    spark: SparkSession, e: DataFrame, is_l1, lists: list
+) -> DataFrame:
+    """Both HNSW graph layers from one sharded build, as (layer, src, dst):
+    exact kNN within bounded groups (:func:`_hnsw_knn_edges`), then ONE
+    merge of every group's edges to a per-(layer, src) top-kg (max cosine
+    over the groups a pair shares; NN-descent-style sharded kNN merge),
+    then :func:`_hnsw_symmetrize`. ``lists`` holds each IVF list's
+    ``label``, size ``n`` and layer-1 count ``n1``
+    (:func:`_ivf_centroid_rows`).
 
+    - **Layer 0** is list-local: a list of n rows gets B = ceil(n / cap)
+      buckets ``xxhash64(vec_id, round) % B``, over _HNSW_L1_ROUNDS rounds
+      when B > 1. ``groupBy(label)`` alone bounds the pandas groups only
+      by LIST cardinality — a 10-list corpus of 250k vectors put 25k rows
+      (a 5 GB float64 cosine matrix) into ONE group, the single-task
+      ceiling the r11 planted-corpus recall probe surfaced. A list at or
+      under the cap is one group in one round, so its subgraph is the
+      plain per-list exact kNN graph.
+    - **Layer 1** is the ``is_l1`` subset across lists, in
+      ``_hnsw_l1_buckets`` hash buckets per round over _HNSW_L1_ROUNDS
+      rounds — no group ever holds a corpus fraction (the round-6
+      single-task build, groupBy(lit(0)) over the whole 1/16 subset, was
+      the one OOM-class ceiling in the registry).
 
-def _hnsw_l0_edges(e: DataFrame) -> DataFrame:
-    """Layer-0 kNN graph, list-local AND bucket-bounded: exact kNN within
-    each (label, round, bucket) group of ≤ ~``_HNSW_L1_CAP`` rows, merged
-    to a per-src top-kg across rounds (the same NN-descent-style sharded
-    merge as :func:`_hnsw_l1_edges`). ``groupBy(label)`` alone bounds the
-    pandas groups only by LIST cardinality — a 10-list corpus of 250k
-    vectors put 25k rows (a 5 GB float64 cosine matrix) into ONE group,
-    the exact single-task ceiling the r6 fix eliminated from the layer-1
-    build; the r11 planted-corpus recall probe re-surfaced it at layer 0.
-    Lists at or under the cap keep one bucket and one round, so their
-    subgraph (and therefore every small-SF result) is IDENTICAL to the
-    plain per-list exact build."""
-    sizes = e.groupBy("label").agg(F.count(F.lit(1)).alias("n_l"))
-    max_list = sizes.agg(F.max("n_l")).first()[0] or 0
-    if max_list <= _HNSW_L1_CAP:
-        # Every list fits one bounded group: the plain per-list exact
-        # build IS the bounded build — skip the replicate/merge machinery
-        # (3 extra small shuffles of pure overhead at dimension-scale
-        # corpora; the bench band caught the difference at sf0.1). The
-        # label-count collect deciding this is one row.
-        return _hnsw_symmetrize(
-            e.select("label", "vec_id", "embedding")
-            .groupBy("label")
-            .applyInPandas(_hnsw_knn_edges, "src LONG, dst LONG, cos DOUBLE")
-        )
-    b_l = F.greatest(
-        F.lit(1), F.ceil(F.col("n_l") / _HNSW_L1_CAP)
-    ).cast("int")
-    meta = sizes.select(
+    Sharing the shuffles keeps both layers to one build's jobs."""
+    blocks = {r["label"]: -(-r["n"] // _HNSW_L1_CAP) for r in lists}
+    b_l = F.create_map(*[F.lit(x) for kv in blocks.items() for x in kv])[
+        F.col("label")
+    ]
+    n_rounds = F.when(b_l > 1, F.lit(_HNSW_L1_ROUNDS)).otherwise(F.lit(1))
+    l0 = e.select(
+        F.lit(0).alias("layer"),
         "label",
-        b_l.alias("b_l"),
-        F.when(b_l > 1, F.lit(_HNSW_L1_ROUNDS))
-        .otherwise(F.lit(1))
-        .alias("n_rounds"),
-    )
-    rep = (
-        e.select("label", "vec_id", "embedding")
-        .join(F.broadcast(meta), "label")
-        .withColumn(
-            "rnd", F.explode(F.sequence(F.lit(0), F.col("n_rounds") - 1))
+        "vec_id",
+        "embedding",
+        F.explode(F.sequence(F.lit(0), n_rounds - 1)).alias("rnd"),
+    ).withColumn("bkt", F.pmod(F.xxhash64("vec_id", "rnd"), b_l))
+    b1 = _hnsw_l1_buckets(sum(r["n1"] for r in lists))
+    rounds = spark.range(_HNSW_L1_ROUNDS).withColumnRenamed("id", "rnd")
+    l1 = (
+        e.filter(is_l1)
+        .select(
+            F.lit(1).alias("layer"),
+            F.lit(None).cast("int").alias("label"),
+            "vec_id",
+            "embedding",
         )
+        .crossJoin(F.broadcast(rounds))
         .withColumn(
-            "bkt", F.pmod(F.xxhash64("vec_id", "rnd"), F.col("b_l"))
+            "bkt", F.pmod(F.xxhash64(F.col("vec_id"), F.col("rnd")), F.lit(b1))
         )
     )
-    raw = rep.groupBy("label", "rnd", "bkt").applyInPandas(
-        _hnsw_knn_edges, "src LONG, dst LONG, cos DOUBLE"
+    raw = (
+        l0.unionByName(l1)
+        .groupBy("layer", "label", "rnd", "bkt")
+        .applyInPandas(
+            _hnsw_knn_edges, "layer INT, src LONG, dst LONG, cos DOUBLE"
+        )
     )
-    merged = raw.groupBy("src", "dst").agg(F.max("cos").alias("cos"))
-    w = Window.partitionBy("src").orderBy(F.col("cos").desc(), F.col("dst"))
+    # one (layer, src) shuffle serves both the merge and the top-kg window
+    merged = (
+        raw.repartition("layer", "src")
+        .groupBy("layer", "src", "dst")
+        .agg(F.max("cos").alias("cos"))
+    )
+    w = Window.partitionBy("layer", "src").orderBy(F.col("cos").desc(), F.col("dst"))
     top = (
         merged.withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= _HNSW_KG)
-        .select("src", "dst", "cos")
+        .select("layer", "src", "dst", "cos")
     )
     return _hnsw_symmetrize(top)
 
@@ -1502,20 +1477,20 @@ def llm_sim_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
     search), built and searched with deterministic Spark primitives:
 
     - **Layer 0 graph**: each vector's ``_HNSW_KG`` nearest neighbors
-      WITHIN its IVF list, built bucket-bounded (:func:`_hnsw_l0_edges`:
+      WITHIN its IVF list, built bucket-bounded (:func:`_hnsw_edges`:
       groups are (label, round, bucket) of ≤ ~1k rows, multi-round merge
       — plain per-list groups are bounded only by list cardinality, the
       single-task ceiling the r11 planted-corpus probe re-surfaced; lists
       under the cap keep the exact one-group build). Edges symmetrized.
     - **Layer 1 graph**: the deterministic ~1/16 subset
       (``xxhash64(vec_id) % 16 == 0`` — the HNSW level assignment with a
-      hash instead of RNG) gets a SHARDED cross-list kNN graph
-      (:func:`_hnsw_l1_edges`): multiple bounded hash-bucket builds whose
-      union merges to a per-node top-kg — the long-range links that route
-      between regions, with no single build task ever holding a corpus
-      fraction.
+      hash instead of RNG) gets a SHARDED cross-list kNN graph: multiple
+      bounded hash-bucket builds whose union merges to a per-node top-kg —
+      the long-range links that route between regions, with no single
+      build task ever holding a corpus fraction. Both layers come out of
+      the same build and the same merge, cached as one frame.
     - **Entry points**: per query, the top-``entries`` layer-1 nodes
-      inside its IVF-probed lists (the shared ``_ivf_allowed`` coarse
+      inside its IVF-probed lists (the ``_ivf_allowed_from_rows`` coarse
       probe — the hybrid IVF+graph entry used when the hierarchy is
       shallow), falling back to the globally lowest vec_id when the
       probed lists hold no layer-1 node (or the subset is empty).
@@ -1525,11 +1500,11 @@ def llm_sim_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
       grows (``_hnsw_search_widths``, floors ``_HNSW_BEAM`` /
       ``_HNSW_ENTRIES``). The frontier/visited bookkeeping is tiny driver
       state (≤ beam·degree·|queries| rows per hop — the same bounded-
-      closure pattern as the IVF centroid collect); each hop runs two
-      cluster jobs on cached frames: adjacency expansion (edge scan ⋈
-      broadcast frontier) and TRUE-cosine scoring of the new candidates
-      (corpus scan ⋈ broadcast candidates — vectors never shuffle and
-      never reach the driver).
+      closure pattern as the IVF centroid collect); each hop runs one
+      collect on cached frames that fuses adjacency expansion (edge scan
+      ⋈ broadcast frontier) with TRUE-cosine scoring of the new
+      candidates (corpus scan ⋈ broadcast candidates — vectors never
+      shuffle and are never collected).
 
     At 100 TB: layer-0 build stays list-local (the same sharding as
     IVF), the layer-1 build is bucket-bounded, and per-hop cost is
@@ -1541,230 +1516,132 @@ def llm_sim_hnsw(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     out_schema = "query_id LONG, vec_id LONG, cosine DOUBLE, rk INT"
     e = table(spark, sf_dir, "embeddings")
+    q_rows = sorted(
+        e.filter(F.col("vec_id") < 5).select("vec_id", "embedding").collect(),
+        key=lambda r: r["vec_id"],
+    )
+    if not q_rows:
+        return spark.createDataFrame([], out_schema)
+    q_ids = [int(r["vec_id"]) for r in q_rows]
+    q_mat = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
+    is_l1 = F.pmod(F.xxhash64("vec_id"), F.lit(_HNSW_L1_MOD)) == 0
+    l1_nodes = e.filter(is_l1)
+    # The centroid collect also carries every size the build needs, so no
+    # count runs of its own: list sizes (the layer-0 bucket counts), their
+    # sum (the corpus size for the log2(n)-scaled search widths) and the
+    # layer-1 counts (the layer-1 bucket count).
+    cent_rows = _ivf_centroid_rows(e, is_l1)
+    lists = [r for r in cent_rows if r["dim"] == 0]
+    beam, n_entries = _hnsw_search_widths(sum(r["n"] for r in lists))
+    # filled by the entry stage's collect, the first plan that scans it
+    graph = tracked_cache(_hnsw_edges(spark, e, is_l1, lists))
+    edges = {
+        layer: graph.filter(F.col("layer") == layer).select("src", "dst")
+        for layer in (0, 1)
+    }
 
-    # Prefetch the layer-0 edge graph on a helper thread: it is first
-    # needed only at the SECOND search hop, so BOTH its plan construction
-    # (which now runs the one-row max-list-size decision job inside
-    # _hnsw_l0_edges) and its materialization (the biggest build job)
-    # overlap the coarse probe + entry + first hop instead of serializing
-    # in front of them. Purely a scheduling overlap — the cached contents
-    # are a deterministic function of the data, so results cannot depend
-    # on the interleaving; _join_prefetch re-raises any build failure on
-    # the caller's thread before the frame is first used. InheritableThread
-    # (like inheritable_thread_target on the pool below) copies the
-    # caller's local properties, so the helper's jobs carry its job group.
-    from pyspark import InheritableThread, inheritable_thread_target
+    q_frame = spark.createDataFrame(
+        [(i, [float(x) for x in q_mat[k]]) for k, i in enumerate(q_ids)],
+        "query_id LONG, q_emb ARRAY<DOUBLE>",
+    )
+    # Scanned once per collect, column-pruned; a cached copy would cost a
+    # full scan plus cache-materialization jobs to save two of them.
+    embd = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+    v = e.select("vec_id", embd.alias("emb"))
+    cos = _cosine(F.col("q_emb"), F.col("emb")).alias("cosine")
 
-    prefetch_err: list[BaseException] = []
-    edges0_box: list[DataFrame] = []
-
-    def _fill() -> None:
-        try:
-            df = tracked_cache(_hnsw_l0_edges(e))
-            df.count()
-            edges0_box.append(df)
-        except BaseException as ex:  # noqa: BLE001 — re-raised at join
-            prefetch_err.append(ex)
-
-    prefetch = InheritableThread(_fill, daemon=True)
-    prefetch.start()
-    try:
-        l1_nodes = e.filter(F.pmod(F.xxhash64("vec_id"), F.lit(_HNSW_L1_MOD)) == 0)
-        # r17 (guide §2.6 / §5 — overlap independent driver jobs): the
-        # query-vector collect, the layer-1 subset count, the corpus
-        # count (search widths) and the coarse-centroid collect are four
-        # INDEPENDENT jobs that ran back-to-back on the driver thread;
-        # fan them out so the entry stage waits for max() of them, not
-        # their sum — all four also overlap the layer-0 prefetch exactly
-        # like before. Results are deterministic scalars/rows, so the
-        # interleaving cannot change the output. The first failure
-        # re-raises at once: the pool shuts down without waiting, so a
-        # failed job never waits out its siblings (their futures finish,
-        # or fail, unobserved).
-        from concurrent.futures import ThreadPoolExecutor, as_completed
-
-        pool = ThreadPoolExecutor(max_workers=4)
-        try:
-            futs = [
-                pool.submit(inheritable_thread_target(fn))
-                for fn in (
-                    lambda: sorted(
-                        e.filter(F.col("vec_id") < 5)
-                        .select("vec_id", "embedding")
-                        .collect(),
-                        key=lambda r: r["vec_id"],
-                    ),
-                    l1_nodes.count,
-                    e.count,
-                    lambda: _ivf_centroid_rows(e),
-                )
-            ]
-            for f in as_completed(futs):
-                f.result()
-        finally:
-            pool.shutdown(wait=False, cancel_futures=True)
-        q_rows, n1, n_corpus, cent_rows = (f.result() for f in futs)
-        if not q_rows:
-            # degenerate corpus: wait out the prefetch (it re-raises any
-            # build failure) before returning the empty frame, exactly
-            # like the gmin fallback below.
-            prefetch.join()
-            if prefetch_err:
-                raise prefetch_err[0]
-            return spark.createDataFrame([], out_schema)
-        q_ids = [int(r["vec_id"]) for r in q_rows]
-        q_mat = np.array([r["embedding"] for r in q_rows], dtype=np.float64)
-        edges1 = tracked_cache(_hnsw_l1_edges(spark, l1_nodes, n1))
-
-        q_frame = spark.createDataFrame(
-            [(i, [float(x) for x in q_mat[k]]) for k, i in enumerate(q_ids)],
-            "query_id LONG, q_emb ARRAY<DOUBLE>",
+    def score(cand: DataFrame) -> DataFrame:
+        j = F.broadcast(cand).join(v, "vec_id").join(
+            F.broadcast(q_frame), "query_id"
         )
-        embd = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-        v = tracked_cache(e.select("vec_id", embd.alias("emb")))
-        # Corpus count for the log2(n)-scaled search widths: a column-less
-        # parquet count (no columns materialize — near-metadata cost),
-        # collected on the thread pool above. Counting through v instead
-        # would serialize the full corpus cache fill (scan + cast + cache
-        # write) in front of the entry stage (r10 review follow-up).
-        beam, n_entries = _hnsw_search_widths(n_corpus)
-        dot = F.aggregate(
-            F.zip_with(F.col("q_emb"), F.col("emb"), lambda x, y: x * y),
-            F.lit(0.0),
-            lambda a, x: a + x,
+        return j.select("query_id", "vec_id", cos)
+
+    # --- entry points: top-n_entries probed-list layer-1 nodes -----------
+    allowed = _ivf_allowed_from_rows(cent_rows, q_mat, np.array(q_ids))
+    allowed_df = spark.createDataFrame(
+        sorted((q, int(lbl)) for q in q_ids for lbl in allowed[q]),
+        "query_id LONG, label INT",
+    )
+
+    def expand(edges: DataFrame, fdf: DataFrame) -> DataFrame:
+        """1-hop ∪ 2-hop out-neighbors of the (query_id, src) frontier,
+        with multi-path duplicates; the caller's distinct is bounded by
+        |reachable| per query, so they are never collected. The 1-hop
+        set is frontier·degree rows, so the 2-hop join broadcasts it too."""
+        one = edges.join(F.broadcast(fdf), "src").select(
+            "query_id", F.col("dst").alias("vec_id")
         )
-        na = F.sqrt(F.aggregate(F.col("q_emb"), F.lit(0.0), lambda a, x: a + x * x))
-        nb = F.sqrt(F.aggregate(F.col("emb"), F.lit(0.0), lambda a, x: a + x * x))
+        two = edges.join(
+            F.broadcast(one.withColumnRenamed("vec_id", "src")), "src"
+        ).select("query_id", F.col("dst").alias("vec_id"))
+        return one.unionByName(two)
 
-        def score(cand: DataFrame) -> DataFrame:
-            j = F.broadcast(cand).join(v, "vec_id").join(
-                F.broadcast(q_frame), "query_id"
-            )
-            return j.select(
-                "query_id", "vec_id", (dot / (na * nb)).alias("cosine")
-            )
-
-        # --- entry points: top-n_entries probed-list layer-1 nodes -----------
-        # (centroid rows pre-collected on the thread pool above)
-        allowed = _ivf_allowed_from_rows(cent_rows, q_mat, np.array(q_ids))
-        allowed_df = spark.createDataFrame(
-            sorted((q, int(lbl)) for q in q_ids for lbl in allowed[q]),
-            "query_id LONG, label INT",
-        )
-        w_beam = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("vec_id")
-        )
-
-        def expand(edges: DataFrame, fdf: DataFrame) -> DataFrame:
-            """1-hop ∪ 2-hop out-neighbors of the (query_id, src) frontier;
-            distinct is bounded by |reachable| per query, so the multi-path
-            duplicates never reach the driver."""
-            one = edges.join(F.broadcast(fdf), "src").select(
-                "query_id", F.col("dst").alias("vec_id")
-            )
-            two = (
-                edges.withColumnRenamed("dst", "mid")
-                .join(F.broadcast(fdf), "src")
-                .select("query_id", F.col("mid").alias("src"))
-                .join(edges, "src")
-                .select("query_id", F.col("dst").alias("vec_id"))
-            )
-            return one.unionByName(two).distinct()
-
-        # --- fused entry + first routing hop: ONE cluster job ---------------
-        # Entry candidates (top-n_entries probed-list layer-1 nodes per
-        # query, selected by an in-plan window) are expanded over the layer-1
-        # graph in the same plan, so entry selection never pays its own
-        # job-scheduling round trip.
-        ent = (
-            score(
-                l1_nodes.select("label", "vec_id")
-                .join(F.broadcast(allowed_df), "label")
-                .select("query_id", "vec_id")
-            )
-            .withColumn("rk", F.row_number().over(w_beam))
-            .filter(F.col("rk") <= n_entries)
+    # --- fused entry + first routing hop: ONE cluster job ---------------
+    # Entry candidates (top-n_entries probed-list layer-1 nodes per
+    # query, selected by an in-plan window) are expanded over the layer-1
+    # graph in the same plan, so entry selection never pays its own
+    # job-scheduling round trip.
+    ent = _top_per_query(
+        score(
+            l1_nodes.select("label", "vec_id")
+            .join(F.broadcast(allowed_df), "label")
             .select("query_id", "vec_id")
+        ),
+        n_entries,
+    ).select("query_id", "vec_id")
+    first_layer, rest_schedule = _HNSW_SCHEDULE[0], _HNSW_SCHEDULE[1:]
+    entry_rows = score(
+        ent.unionByName(
+            expand(edges[first_layer], ent.withColumnRenamed("vec_id", "src"))
+        ).distinct()
+    ).collect()
+    covered = {r["query_id"] for r in entry_rows}
+    missing = [q for q in q_ids if q not in covered]
+    if missing:
+        # ADVICE r6: degrade gracefully when the probed lists (or the whole
+        # layer-1 subset) hold no node — enter at the global lowest vec_id
+        # (the remaining layer-0 hops expand from it).
+        gmin = e.agg(F.min("vec_id")).first()[0]
+        fb = spark.createDataFrame(
+            [(q, int(gmin)) for q in missing], "query_id LONG, vec_id LONG"
         )
-        def _join_prefetch() -> None:
-            prefetch.join()
-            if prefetch_err:
-                raise prefetch_err[0]
+        entry_rows = entry_rows + score(fb).collect()
 
-        def _edges(layer: int) -> DataFrame:
-            if layer == 1:
-                return edges1
-            _join_prefetch()
-            return edges0_box[0]
+    # --- beam search with bounded local frontier state ------------------
+    visited: dict[tuple[int, int], float] = {
+        (r["query_id"], r["vec_id"]): r["cosine"] for r in entry_rows
+    }
 
-        first_layer, rest_schedule = _HNSW_SCHEDULE[0], _HNSW_SCHEDULE[1:]
-        first_edges = _edges(first_layer)
-        entry_rows = score(
-            ent.unionByName(
-                expand(first_edges, ent.withColumnRenamed("vec_id", "src"))
-            ).distinct()
-        ).collect()
-        covered = {r["query_id"] for r in entry_rows}
-        missing = [q for q in q_ids if q not in covered]
-        if missing:
-            # ADVICE r6: degrade gracefully when the probed lists (or the whole
-            # layer-1 subset) hold no node — enter at the global lowest vec_id
-            # (the remaining layer-0 hops expand from it).
-            gmin = e.agg(F.min("vec_id")).first()[0]
-            if gmin is None:
-                _join_prefetch()
-                return spark.createDataFrame([], out_schema)
-            fb = spark.createDataFrame(
-                [(q, int(gmin)) for q in missing], "query_id LONG, vec_id LONG"
-            )
-            entry_rows = entry_rows + score(fb).collect()
+    def best(q: int, limit: int) -> list[tuple[int, int]]:
+        mine = [(c, v_) for (q_, v_), c in visited.items() if q_ == q]
+        mine.sort(key=lambda t: (-t[0], t[1]))
+        return [(q, v_) for _, v_ in mine[:limit]]
 
-        # --- beam search with bounded driver-side frontier state -------------
-        visited: dict[tuple[int, int], float] = {
-            (r["query_id"], r["vec_id"]): r["cosine"] for r in entry_rows
-        }
+    for layer in rest_schedule:
+        frontier = [p for q in q_ids for p in best(q, beam)]
+        fdf = spark.createDataFrame(sorted(frontier), "query_id LONG, src LONG")
+        # One cluster job per schedule entry: expansion + scoring fused
+        # over the cached edge/vector frames; the visited map dedupes
+        # against prior hops.
+        hop = score(expand(edges[layer], fdf).distinct()).collect()
+        grew = False
+        for r in hop:
+            k = (r["query_id"], r["vec_id"])
+            if k not in visited:
+                visited[k] = r["cosine"]
+                grew = True
+        if not grew:
+            break
 
-        def best(q: int, limit: int) -> list[tuple[int, int]]:
-            mine = [(c, v_) for (q_, v_), c in visited.items() if q_ == q]
-            mine.sort(key=lambda t: (-t[0], t[1]))
-            return [(q, v_) for _, v_ in mine[:limit]]
-
-        for layer in rest_schedule:
-            edges = _edges(layer)
-            frontier = [p for q in q_ids for p in best(q, beam)]
-            fdf = spark.createDataFrame(sorted(frontier), "query_id LONG, src LONG")
-            # One cluster job per schedule entry: expansion + scoring fused
-            # over the cached edge/vector frames; the driver map dedupes
-            # against prior hops.
-            hop = score(expand(edges, fdf)).collect()
-            grew = False
-            for r in hop:
-                k = (r["query_id"], r["vec_id"])
-                if k not in visited:
-                    visited[k] = r["cosine"]
-                    grew = True
-            if not grew:
-                break
-
-        out = []
-        for q in q_ids:
-            hits = [(c, v_) for (q_, v_), c in visited.items() if q_ == q and v_ != q]
-            hits.sort(key=lambda t: (-t[0], t[1]))
-            out.extend(
-                (q, v_, round(c, 4), rk + 1)
-                for rk, (c, v_) in enumerate(hits[:10])
-            )
-        return spark.createDataFrame(out, out_schema)
-    except BaseException:
-        # ADVICE r11: an exception that propagates before the first
-        # _join_prefetch (e.g. the entry-rows collect failing) must not
-        # leave the helper thread appending a pinned cache AFTER the
-        # harness's evict_tracked sweep — join it and release the
-        # layer-0 frame before propagating.
-        prefetch.join()
-        if edges0_box:
-            cache_tracker.release(edges0_box[0])
-        raise
+    out = []
+    for q in q_ids:
+        hits = [(c, v_) for (q_, v_), c in visited.items() if q_ == q and v_ != q]
+        hits.sort(key=lambda t: (-t[0], t[1]))
+        out.extend(
+            (q, v_, round(c, 4), rk + 1)
+            for rk, (c, v_) in enumerate(hits[:10])
+        )
+    return spark.createDataFrame(out, out_schema)
 
 
 def llm_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:

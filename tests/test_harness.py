@@ -102,3 +102,42 @@ def test_sessions_are_built_only_by_session_py():
         f"sessions built by hand at {offenders}; use harness.session"
         " (or session.build_session)"
     )
+
+
+# Threads a query may not start: every operator runs its jobs on the
+# caller's thread, so a failure propagates at once and no job escapes the
+# caller's job group.
+_THREAD_MODULES = ("threading", "concurrent.futures")
+_THREAD_NAMES = {"InheritableThread", "inheritable_thread_target"}
+
+
+def test_package_starts_no_threads():
+    offenders = []
+    pkg = os.path.join(ROOT, "iot_data_pipeline_spark")
+    for dirpath, _, files in os.walk(pkg):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, fname)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Import):
+                    mods = [a.name for a in node.names]
+                    names = []
+                elif isinstance(node, ast.ImportFrom):
+                    mods = [node.module or ""]
+                    mods += [f"{node.module}.{a.name}" for a in node.names]
+                    names = [a.name for a in node.names]
+                elif isinstance(node, ast.Attribute):
+                    mods, names = [], [node.attr]
+                else:
+                    continue
+                if _THREAD_NAMES.intersection(names) or any(
+                    m == t or m.startswith(t + ".")
+                    for m in mods
+                    for t in _THREAD_MODULES
+                ):
+                    rel = os.path.relpath(path, ROOT)
+                    offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, f"thread imports at {offenders}"

@@ -898,7 +898,10 @@ def test_hnsw_l1_build_is_sharded(spark, sf_dir):
     )
     assert len(groups) >= 2  # multiple build tasks, not groupBy(lit(0))
     assert max(r["count"] for r in groups) < n1  # no group holds the subset
-    edges = llm._hnsw_l1_edges(spark, l1, n1)
+    is_l1 = F.pmod(F.xxhash64("vec_id"), F.lit(llm._HNSW_L1_MOD)) == 0
+    lists = [r for r in llm._ivf_centroid_rows(e, is_l1) if r["dim"] == 0]
+    assert sum(r["n1"] for r in lists) == n1
+    edges = llm._hnsw_edges(spark, e, is_l1, lists).filter(F.col("layer") == 1)
     out_deg = edges.groupBy("src").count().agg(F.max("count")).first()[0]
     # symmetrized union can double a node's degree at most
     assert out_deg <= 2 * llm._HNSW_KG
@@ -929,62 +932,77 @@ def test_hnsw_degenerate_inputs(spark, tmp_path):
     assert empty.count() == 0
 
 
-def test_hnsw_pool_failure_reraises_before_siblings_finish(
-    spark, sf_dir, tmp_path, monkeypatch
+def test_hnsw_centroid_failure_propagates_and_pins_nothing(
+    spark, sf_dir, monkeypatch
 ):
-    """One failed job of the HNSW driver-job pool re-raises at once instead
-    of waiting out its siblings: the centroid collect raises while the
-    other pooled jobs scan a corpus slowed by a sleeping UDF, and the error
-    reaches the caller while those jobs are still running. They run in the
-    caller's job group, so that group sees them as active."""
-    import time
+    """The build runs on the caller's thread: when the centroid collect
+    raises, that error reaches the caller before any graph is built and
+    no frame is left registered for eviction."""
+    from iot_data_pipeline_spark import cache_tracker
 
-    d = str(tmp_path / "slow")
-    llm.table(spark, sf_dir, "embeddings").filter(F.col("vec_id") < 20).coalesce(
-        1
-    ).write.parquet(f"{d}/embeddings.parquet")
-
-    @F.udf("boolean")
-    def slow(v):
-        time.sleep(0.5)
-        return True
-
-    real_table = llm.table
-    monkeypatch.setattr(
-        llm, "table", lambda s, sf, n: real_table(s, sf, n).filter(slow("vec_id"))
-    )
-
-    def boom(e):
+    def boom(e, is_l1):
         raise RuntimeError("centroid collect failed")
 
+    built = []
     monkeypatch.setattr(llm, "_ivf_centroid_rows", boom)
-    # keep the layer-0 prefetch fast: the failure path joins it on purpose
-    monkeypatch.setattr(
-        llm,
-        "_hnsw_l0_edges",
-        lambda e: spark.createDataFrame([], "src LONG, dst LONG"),
-    )
+    monkeypatch.setattr(llm, "_hnsw_edges", lambda *a: built.append(a))
+    before = [id(df) for df in cache_tracker._TRACKED]
+    with pytest.raises(RuntimeError, match="centroid collect failed"):
+        llm.llm_sim_hnsw(spark, sf_dir)
+    assert not built
+    assert [id(df) for df in cache_tracker._TRACKED] == before
+
+
+def test_hnsw_l0_multi_round_build(spark, sf_dir, monkeypatch):
+    """Lists above ``_HNSW_L1_CAP`` take the bucketed multi-round layer-0
+    build, which no testdata list is large enough to reach: with the cap
+    at 16, every vector keeps 1..2·kg out-edges, the build is
+    deterministic, and search recall vs the exact scan holds."""
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    monkeypatch.setattr(llm, "_HNSW_L1_CAP", 16)
+    e = llm.table(spark, sf, "embeddings")
+    is_l1 = F.pmod(F.xxhash64("vec_id"), F.lit(llm._HNSW_L1_MOD)) == 0
+    lists = [r for r in llm._ivf_centroid_rows(e, is_l1) if r["dim"] == 0]
+    assert max(r["n"] for r in lists) > llm._HNSW_L1_CAP
+
+    def layer0():
+        graph = llm._hnsw_edges(spark, e, is_l1, lists)
+        return sorted(
+            (r["src"], r["dst"])
+            for r in graph.filter(F.col("layer") == 0).collect()
+        )
+
+    first = layer0()
+    deg = {}
+    for src, _ in first:
+        deg[src] = deg.get(src, 0) + 1
+    assert set(deg) == {r["vec_id"] for r in e.select("vec_id").collect()}
+    assert max(deg.values()) <= 2 * llm._HNSW_KG
+    assert layer0() == first
+
+    exact = {(r["query_id"], r["vec_id"]) for r in llm.llm_sim_topk(spark, sf).collect()}
+    got = {(r["query_id"], r["vec_id"]) for r in llm.llm_sim_hnsw(spark, sf).collect()}
+    assert len(exact & got) / len(exact) >= 0.9
+
+
+def test_hnsw_runs_at_most_28_jobs(spark, sf_dir):
+    """One search at sf0.01 reads every size it needs off the centroid
+    collect and builds both graph layers in one build on the caller's
+    thread: at most 28 Spark jobs in the caller's job group (44 with the
+    separate size counts and layer builds). Cached frames of earlier calls
+    are evicted first, or the search would reuse their graph."""
+    from iot_data_pipeline_spark.cache_tracker import evict_tracked
+
+    evict_tracked()
     sc = spark.sparkContext
-    group = "hnsw-pool-failure"
-    sc.setJobGroup(group, group, interruptOnCancel=True)
-    st = sc.statusTracker()
+    group = "hnsw-jobs"
+    sc.setJobGroup(group, group)
     try:
-        with pytest.raises(RuntimeError, match="centroid collect failed"):
-            llm.llm_sim_hnsw(spark, d)
-        running = set(st.getActiveJobsIds()) & set(st.getJobIdsForGroup(group))
-        assert running, "error waited for every sibling job to finish"
+        llm.llm_sim_hnsw(spark, os.path.join(os.path.dirname(sf_dir), "sf0.01")).collect()
     finally:
-        sc.cancelJobGroup(group)
-        for k in (
-            "spark.jobGroup.id",
-            "spark.job.description",
-            "spark.job.interruptOnCancel",
-        ):
+        for k in ("spark.jobGroup.id", "spark.job.description"):
             sc.setLocalProperty(k, None)
-        deadline = time.monotonic() + 60
-        while set(st.getActiveJobsIds()) & set(st.getJobIdsForGroup(group)):
-            assert time.monotonic() < deadline
-            time.sleep(0.2)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 28
 
 
 # ---------------------------------------------------------------------------
