@@ -100,6 +100,7 @@ from __future__ import annotations
 import json
 import os
 import uuid
+from pyspark.errors import SparkRuntimeException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -924,6 +925,10 @@ def _write_data_files(
         clustered = df.repartitionByRange(
             n_files, *cluster
         ).sortWithinPartitions(*cluster)
+    elif n_files == 1:
+        # one file needs no range split: a range exchange would cost a
+        # sampling job and a shuffle (its own job under AQE) for nothing
+        clustered = df.coalesce(1)
     else:
         clustered = df.repartitionByRange(n_files, key)
     # ``string_stats=False`` defers the string pass (the per-epoch
@@ -938,82 +943,86 @@ def _write_data_files(
     )
     str_stats: dict[str, dict[str, list]] = {}
     pv_map: dict[str, dict] = {}
-    if str_cols or pcols:
-        os.makedirs(staging, exist_ok=True)
-        rows = clustered.mapInArrow(
-            _fused_write_stats_task(staging, str_cols, pcols),
-            "file string, stats string, pv string",
-        ).collect()
-        for r in rows:
-            per_col = {
-                c: _str_prefix_bounds(lo, hi)
-                for c, (lo, hi) in json.loads(r["stats"]).items()
-            }
-            if per_col:
-                str_stats[r["file"]] = per_col
-            if r["pv"] is not None:
-                pv_map[r["file"]] = json.loads(r["pv"])
-    else:
-        clustered.write.mode("overwrite").parquet(staging)
-    data_dir = os.path.join(path, _DATA)
-    os.makedirs(data_dir, exist_ok=True)
     adds: list[dict] = []
-    for part in sorted(glob.glob(os.path.join(staging, "part-*.parquet"))):
-        meta = pq.read_metadata(part)
-        if meta.num_rows == 0:
-            continue
-        arrow_schema = meta.schema.to_arrow_schema()
-        ki = arrow_schema.get_field_index(key)
-        mins, maxs = [], []
-        for rg in range(meta.num_row_groups):
-            st = meta.row_group(rg).column(ki).statistics
-            if st is None or not st.has_min_max:
-                raise RuntimeError(
-                    f"parquet footer of {part} carries no min/max for "
-                    f"{key}: the manifest stats (and every prune) depend "
-                    "on them — check the writer's statistics settings"
-                )
-            mins.append(st.min)
-            maxs.append(st.max)
-        cols: dict[str, list] = {}
-        for ci, name in enumerate(arrow_schema.names):
-            if name == key:
+    try:
+        if str_cols or pcols:
+            os.makedirs(staging, exist_ok=True)
+            rows = clustered.mapInArrow(
+                _fused_write_stats_task(staging, str_cols, pcols),
+                "file string, stats string, pv string",
+            ).collect()
+            for r in rows:
+                per_col = {
+                    c: _str_prefix_bounds(lo, hi)
+                    for c, (lo, hi) in json.loads(r["stats"]).items()
+                }
+                if per_col:
+                    str_stats[r["file"]] = per_col
+                if r["pv"] is not None:
+                    pv_map[r["file"]] = json.loads(r["pv"])
+        else:
+            clustered.write.mode("overwrite").parquet(staging)
+        data_dir = os.path.join(path, _DATA)
+        os.makedirs(data_dir, exist_ok=True)
+        for part in sorted(glob.glob(os.path.join(staging, "part-*.parquet"))):
+            meta = pq.read_metadata(part)
+            if meta.num_rows == 0:
                 continue
-            cmins, cmaxs = [], []
+            arrow_schema = meta.schema.to_arrow_schema()
+            ki = arrow_schema.get_field_index(key)
+            mins, maxs = [], []
             for rg in range(meta.num_row_groups):
-                st = meta.row_group(rg).column(ci).statistics
-                if (
-                    st is None
-                    or not st.has_min_max
-                    or not isinstance(st.min, (int, float, bool))
-                    or not isinstance(st.max, (int, float, bool))
-                    or (isinstance(st.min, float) and math.isnan(st.min))
-                    or (isinstance(st.max, float) and math.isnan(st.max))
-                ):
-                    cmins = []  # unusable in any row group: drop column
-                    break
-                cmins.append(st.min)
-                cmaxs.append(st.max)
-            if cmins:
-                cols[name] = [min(cmins), max(cmaxs)]
-        scols = str_stats.get(os.path.basename(part))
-        pv = pv_map.get(os.path.basename(part))
-        name = f"{uuid.uuid4().hex}.parquet"
-        shutil.move(part, os.path.join(data_dir, name))
-        add = {
-            "path": f"{_DATA}/{name}",
-            "rows": meta.num_rows,
-            "min_key": min(mins),
-            "max_key": max(maxs),
-        }
-        if cols:
-            add["cols"] = cols
-        if scols:
-            add["scols"] = scols
-        if pv is not None:
-            add["pv"] = pv
-        adds.append(add)
-    shutil.rmtree(staging)
+                st = meta.row_group(rg).column(ki).statistics
+                if st is None or not st.has_min_max:
+                    raise RuntimeError(
+                        f"parquet footer of {part} carries no min/max for "
+                        f"{key}: the manifest stats (and every prune) depend "
+                        "on them — check the writer's statistics settings"
+                    )
+                mins.append(st.min)
+                maxs.append(st.max)
+            cols: dict[str, list] = {}
+            for ci, name in enumerate(arrow_schema.names):
+                if name == key:
+                    continue
+                cmins, cmaxs = [], []
+                for rg in range(meta.num_row_groups):
+                    st = meta.row_group(rg).column(ci).statistics
+                    if (
+                        st is None
+                        or not st.has_min_max
+                        or not isinstance(st.min, (int, float, bool))
+                        or not isinstance(st.max, (int, float, bool))
+                        or (isinstance(st.min, float) and math.isnan(st.min))
+                        or (isinstance(st.max, float) and math.isnan(st.max))
+                    ):
+                        cmins = []  # unusable in any row group: drop column
+                        break
+                    cmins.append(st.min)
+                    cmaxs.append(st.max)
+                if cmins:
+                    cols[name] = [min(cmins), max(cmaxs)]
+            scols = str_stats.get(os.path.basename(part))
+            pv = pv_map.get(os.path.basename(part))
+            name = f"{uuid.uuid4().hex}.parquet"
+            shutil.move(part, os.path.join(data_dir, name))
+            add = {
+                "path": f"{_DATA}/{name}",
+                "rows": meta.num_rows,
+                "min_key": min(mins),
+                "max_key": max(maxs),
+            }
+            if cols:
+                add["cols"] = cols
+            if scols:
+                add["scols"] = scols
+            if pv is not None:
+                add["pv"] = pv
+            adds.append(add)
+    finally:
+        # a failed write (a rejected MERGE, a task error) must not
+        # leave its staged files under the table until VACUUM
+        shutil.rmtree(staging, ignore_errors=True)
     return adds
 
 
@@ -2888,6 +2897,14 @@ def _clause_cond(cond: str | None, cm: dict | None):
     return F.expr(f"({rewritten}) IS TRUE")
 
 
+def _plans_small(spark: SparkSession, df: DataFrame) -> bool:
+    """Whether the optimizer sizes ``df`` within the broadcast threshold:
+    plan statistics only, no job. A disabled threshold (-1) never holds."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    conf = spark._jsparkSession.sessionState().conf()
+    return int(size) <= conf.autoBroadcastJoinThreshold()
+
+
 def merge(
     spark: SparkSession,
     source: DataFrame,
@@ -2938,6 +2955,16 @@ def merge(
     the HIT files are ever read. The rewrite itself is one full-outer
     join of the hit-file rows with the source — exactly what Delta MERGE
     executes after its own file skim.
+
+    SMALL TARGET: a plain copy-on-write upsert (no clauses, no ``cdc``)
+    skips that summary job when the manifest counts at most
+    ``_MIN_ROWS_PER_FILE`` target rows and the optimizer's size estimate
+    for the source is within ``spark.sql.autoBroadcastJoinThreshold``
+    (plan statistics, no job; a source of unknown size, such as a
+    ``createDataFrame`` of a Python list, is never small). Every live
+    file is then rewritten into one file by one plan, so ``carried`` is
+    0, and the duplicate-source-key guard runs inside that plan,
+    raising the same ValueError before anything is published.
 
     ``cdc=True`` journals this commit's row-level deltas (see
     :func:`delete`): every matched target row an ``update_preimage``,
@@ -2997,62 +3024,77 @@ def merge(
         source = source.select(
             *[F.col(c).alias(cm.get(c, c)) for c in source.columns]
         )
-    stats = spark.createDataFrame(
-        [(f["path"], f["min_key"], f["max_key"]) for f in live],
-        "path STRING, min_key LONG, max_key LONG",
+    # one message for the summary job's and the in-plan duplicate guard
+    dup_fmt = (
+        f"merge source holds %s rows for {key.replace('%', '%%')}=%s: "
+        "MERGE requires at most one source row per merge key (dedup the "
+        "source first)"
     )
-    # Delta/Iceberg MERGE raise when a target row matches multiple source
-    # rows; without this guard the full_outer join below fans out and the
-    # committed snapshot silently ends with N rows per duplicated key.
-    #
-    # r16 optimization (guide §1.2 — don't compute things twice): the
-    # dup guard and the file-stats prune were TWO collects, each
-    # executing the full source plan. Fused into ONE job: group the
-    # source keys once, range-join the per-key counts against the
-    # broadcast stats (LEFT, so keys missing every file still reach the
-    # dup guard), and aggregate both answers — the worst duplicate as
-    # max(struct(count, key)) and the hit files as collect_set(path)
-    # (collect_set drops the no-file NULLs; the set is file-count-scale,
-    # the same driver footprint the old collect had). Semantics
-    # unchanged: same rejection condition, same hit-file set.
-    # the key is ALIASED to __k so a table whose merge key is literally
-    # named 'path'/'min_key'/'max_key' can't collide with the stats frame
-    # (ADVICE r16); the same summary job also returns the source key
-    # envelope (__kmin/__kmax/__nk) that seeds the manifest-derived range
-    # bounds below — one job answers the dup guard, the file prune AND
-    # the write layout.
-    key_counts = (
-        source.groupBy(key)
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .select(F.col(key).alias("__k"), "__c")
+    # SMALL TARGET (see the docstring): any rewrite of it is one file
+    # anyway, so no summary job prunes it — every live file is hit
+    small = (
+        mode == "cow"
+        and not clauses
+        and not cdc
+        and sum(f["rows"] for f in live) <= _MIN_ROWS_PER_FILE
+        and _plans_small(spark, source)
     )
-    probed = key_counts.join(
-        F.broadcast(stats),
-        (F.col("__k") >= F.col("min_key"))
-        & (F.col("__k") <= F.col("max_key")),
-        "left",
-    )
-    summary = probed.agg(
-        F.max(F.struct(F.col("__c"), F.col("__k"))).alias("__dup"),
-        F.collect_set("path").alias("__paths"),
-        F.min("__k").alias("__kmin"),
-        F.max("__k").alias("__kmax"),
-        F.count("__k").alias("__nk"),
-    ).first()
-    worst = summary["__dup"]
-    if worst is not None and worst["__c"] > 1:
-        raise ValueError(
-            f"merge source holds {worst['__c']} rows for {key}="
-            f"{worst['__k']}: MERGE requires at most one source row per "
-            "merge key (dedup the source first)"
-        )
-    hit_paths = set(summary["__paths"] or [])
-    hit = [f for f in live if f["path"] in hit_paths]
-    if not_matched_by_source is not None:
-        # a WHEN NOT MATCHED BY SOURCE clause can touch ANY target row,
-        # so file pruning is off the table — Delta scans everything too
+    if small:
         hit = list(live)
         hit_paths = {f["path"] for f in hit}
+    else:
+        stats = spark.createDataFrame(
+            [(f["path"], f["min_key"], f["max_key"]) for f in live],
+            "path STRING, min_key LONG, max_key LONG",
+        )
+        # Delta/Iceberg MERGE raise when a target row matches multiple source
+        # rows; without this guard the full_outer join below fans out and the
+        # committed snapshot silently ends with N rows per duplicated key.
+        #
+        # r16 optimization (guide §1.2 — don't compute things twice): the
+        # dup guard and the file-stats prune were TWO collects, each
+        # executing the full source plan. Fused into ONE job: group the
+        # source keys once, range-join the per-key counts against the
+        # broadcast stats (LEFT, so keys missing every file still reach the
+        # dup guard), and aggregate both answers — the worst duplicate as
+        # max(struct(count, key)) and the hit files as collect_set(path)
+        # (collect_set drops the no-file NULLs; the set is file-count-scale,
+        # the same driver footprint the old collect had). Semantics
+        # unchanged: same rejection condition, same hit-file set.
+        # the key is ALIASED to __k so a table whose merge key is literally
+        # named 'path'/'min_key'/'max_key' can't collide with the stats frame
+        # (ADVICE r16); the same summary job also returns the source key
+        # envelope (__kmin/__kmax/__nk) that seeds the manifest-derived range
+        # bounds below — one job answers the dup guard, the file prune AND
+        # the write layout.
+        key_counts = (
+            source.groupBy(key)
+            .agg(F.count(F.lit(1)).alias("__c"))
+            .select(F.col(key).alias("__k"), "__c")
+        )
+        probed = key_counts.join(
+            F.broadcast(stats),
+            (F.col("__k") >= F.col("min_key"))
+            & (F.col("__k") <= F.col("max_key")),
+            "left",
+        )
+        summary = probed.agg(
+            F.max(F.struct(F.col("__c"), F.col("__k"))).alias("__dup"),
+            F.collect_set("path").alias("__paths"),
+            F.min("__k").alias("__kmin"),
+            F.max("__k").alias("__kmax"),
+            F.count("__k").alias("__nk"),
+        ).first()
+        worst = summary["__dup"]
+        if worst is not None and worst["__c"] > 1:
+            raise ValueError(dup_fmt % (worst["__c"], worst["__k"]))
+        hit_paths = set(summary["__paths"] or [])
+        hit = [f for f in live if f["path"] in hit_paths]
+        if not_matched_by_source is not None:
+            # a WHEN NOT MATCHED BY SOURCE clause can touch ANY target row,
+            # so file pruning is off the table — Delta scans everything too
+            hit = list(live)
+            hit_paths = {f["path"] for f in hit}
     if hit:
         # DV-aware: rows a deletion vector removed must not resurface
         touched = _read_live(spark, path, st, entries=hit)
@@ -3071,41 +3113,73 @@ def merge(
             f"merge cannot evolve the schema (extra source columns"
             f" {extra}); append the new columns first, then merge"
         )
-    # range split points for the rewrite's file layout, derived from the
-    # hit files' MANIFEST stats + the summary job's source-key envelope
-    # (r16 verdict item 2): the rewrite output is ~(hit rows ∪ source
-    # rows), so its key distribution is the mixture of the per-file
-    # [min_key, max_key]×rows segments and the source segment. Replaces
-    # repartitionByRange's sampling pass — which executed the ENTIRE
-    # full-outer rewrite plan once more per MERGE — with driver
-    # arithmetic over metadata the summary already collected.
-    src_seg = (summary["__kmin"], summary["__kmax"], summary["__nk"])
-    # effective file count: the caller's n_files stays the CAP (their
-    # pruning-granularity knob), but a rewrite whose estimated output
-    # (hit rows + source rows — an upper bound) is smaller than
-    # n_files·_MIN_ROWS_PER_FILE would shatter into near-empty files
-    # (guide §6 small-files: every file costs a footer read, a task and
-    # a stats row) — derive the count from the rows the summary already
-    # measured instead.
-    est_rows = sum(f["rows"] for f in hit) + (summary["__nk"] or 0)
-    n_eff = max(1, min(n_files, -(-est_rows // _MIN_ROWS_PER_FILE)))
-    w_bounds = _mixture_bounds(
-        [(f["min_key"], f["max_key"], f["rows"]) for f in hit] + [src_seg],
-        n_eff,
-    )
     src = source.select(*cols)
-    if mode == "dv":
-        n_dv = max(
-            1, min(n_files, -(-(summary["__nk"] or 0) // _MIN_ROWS_PER_FILE))
+    if small:
+        n_eff, w_bounds = 1, None
+        # the duplicate-source-key guard inside the rewrite plan: one row
+        # per source key, and a key holding more raises while the rewrite
+        # runs — before anything is published (caught and re-raised as
+        # the summary path's ValueError below)
+        s = (
+            src.groupBy(F.col(key).alias("__sk"))
+            .agg(
+                F.count(F.lit(1)).alias("__c"),
+                F.first(F.struct(*cols)).alias("__s"),
+            )
+            .select(
+                "__sk",
+                F.when(
+                    F.col("__c") > 1,
+                    F.raise_error(
+                        F.format_string(
+                            dup_fmt,
+                            "__c",
+                            F.coalesce(
+                                F.col("__sk").cast("string"), F.lit("None")
+                            ),
+                        )
+                    ),
+                )
+                .otherwise(F.col("__s"))
+                .alias("__s"),
+            )
         )
-        return _merge_dv(
-            spark, st, src, path, key, hit, cols, n_dv, cdc,
-            bounds=_mixture_bounds([src_seg], n_dv),
+    else:
+        # range split points for the rewrite's file layout, derived from the
+        # hit files' MANIFEST stats + the summary job's source-key envelope
+        # (r16 verdict item 2): the rewrite output is ~(hit rows ∪ source
+        # rows), so its key distribution is the mixture of the per-file
+        # [min_key, max_key]×rows segments and the source segment. Replaces
+        # repartitionByRange's sampling pass — which executed the ENTIRE
+        # full-outer rewrite plan once more per MERGE — with driver
+        # arithmetic over metadata the summary already collected.
+        src_seg = (summary["__kmin"], summary["__kmax"], summary["__nk"])
+        # effective file count: the caller's n_files stays the CAP (their
+        # pruning-granularity knob), but a rewrite whose estimated output
+        # (hit rows + source rows — an upper bound) is smaller than
+        # n_files·_MIN_ROWS_PER_FILE would shatter into near-empty files
+        # (guide §6 small-files: every file costs a footer read, a task and
+        # a stats row) — derive the count from the rows the summary already
+        # measured instead.
+        est_rows = sum(f["rows"] for f in hit) + (summary["__nk"] or 0)
+        n_eff = max(1, min(n_files, -(-est_rows // _MIN_ROWS_PER_FILE)))
+        w_bounds = _mixture_bounds(
+            [(f["min_key"], f["max_key"], f["rows"]) for f in hit] + [src_seg],
+            n_eff,
+        )
+        if mode == "dv":
+            n_src = summary["__nk"] or 0
+            n_dv = max(1, min(n_files, -(-n_src // _MIN_ROWS_PER_FILE)))
+            return _merge_dv(
+                spark, st, src, path, key, hit, cols, n_dv, cdc,
+                bounds=_mixture_bounds([src_seg], n_dv),
+            )
+        s = src.select(
+            F.col(key).alias("__sk"), F.struct(*cols).alias("__s")
         )
     t = touched.select(
         F.col(key), F.struct(*cols).alias("__t")
     )
-    s = src.select(F.col(key).alias("__sk"), F.struct(*cols).alias("__s"))
     joined = t.join(s, t[key] == s["__sk"], "full_outer")
     # the rewrite, the journal's three branches, and (clauses) the
     # written-rows constraint validation all consume the join; one
@@ -3174,14 +3248,24 @@ def merge(
                     *[F.col(c).alias(rcm.get(c, c)) for c in cols]
                 )
                 _enforce_constraints(written_src, cons)
-        adds = _write_data_files(
-            merged,
-            path,
-            key,
-            n_eff,
-            partition_cols=_require_partition_cols(st, merged),
-            bounds=w_bounds,
-        )
+        try:
+            adds = _write_data_files(
+                merged,
+                path,
+                key,
+                n_eff,
+                partition_cols=_require_partition_cols(st, merged),
+                bounds=w_bounds,
+            )
+        except SparkRuntimeException as e:
+            msg = (e.getMessageParameters() or {}).get("errorMessage", "")
+            if not (
+                small
+                and e.getCondition() == "USER_RAISED_EXCEPTION"
+                and msg.endswith("(dedup the source first)")
+            ):
+                raise
+            raise ValueError(msg) from None
         manifest = {
             "version": st["version"] + 1,
             "op": "merge",

@@ -866,14 +866,14 @@ def stream_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _medallion_fold(spark: SparkSession, bronze: str, silver: str):
-    """The per-epoch bronze-commit + CDF-range silver-fold closure behind
+    """The per-epoch bronze-commit + range silver-fold closure behind
     ``stream_acid_cdf_agg`` (module-level so tests can drive the
     crash-recovery path — a bronze commit whose silver fold never ran —
     directly). See that id's docstring for the protocol."""
     from iot_data_pipeline_spark.sources import acid_table
 
     def fold_epoch(batch_df: DataFrame, epoch_id: int) -> None:
-        acid_table.append_exactly_once(
+        appended = acid_table.append_exactly_once(
             batch_df, bronze, txn_version=int(epoch_id), key="event_id"
         )
         # Checkpoint-bounded head read — history() parses the whole log,
@@ -894,11 +894,16 @@ def _medallion_fold(spark: SparkSession, bronze: str, silver: str):
                 ).first()[0]
         if head <= wm:
             return  # redelivered epoch: silver already reflects it
-        feed = (
-            acid_table.table_changes(spark, bronze, wm, head)
-            if wm >= 0
-            else acid_table.snapshot(spark, bronze, version=head)
-        )
+        if appended and wm == head - 1:
+            # the range (wm, head] is exactly this epoch's append: fold
+            # its own rows instead of reading back the file just written.
+            # A redelivered epoch (appended is False), a foreign bronze
+            # commit or a catch-up after a crash reads the CDF range.
+            feed = batch_df
+        elif wm >= 0:
+            feed = acid_table.table_changes(spark, bronze, wm, head)
+        else:
+            feed = acid_table.snapshot(spark, bronze, version=head)
         delta = feed.groupBy("event_type").agg(
             F.count(F.lit(1)).cast("bigint").alias("dn"),
             F.sum("value").alias("dtotal"),
@@ -920,13 +925,14 @@ def _medallion_fold(spark: SparkSession, bronze: str, silver: str):
         old = acid_table.snapshot(spark, silver).select(
             "key_id", "event_type", "n", "total"
         )
-        # r17: the merge source below is executed TWICE by merge() — once
-        # by the dup-guard/prune/bounds summary job and once by the
-        # rewrite's write — and each execution re-runs the CDF range scan
-        # + delta aggregate + snapshot join. The frame is ≤ |event_types|
-        # rows, so a LAZY localCheckpoint makes the summary job
-        # materialize it once and the rewrite read blocks (same rows —
-        # the checkpoint is a deterministic materialization point).
+        # The merge source is ≤ |event_types| rows and silver is a handful
+        # more, so merge() takes its one-plan small-target path and reads
+        # the source once. The localCheckpoint keeps the general path
+        # (a session whose broadcast threshold is off) from running the
+        # delta twice, once for the summary job and once for the rewrite.
+        # It is not lazy in effect: under AQE, building the checkpoint RDD
+        # runs the delta's shuffle stages (2 jobs). It keeps the source's
+        # plan statistics, so merge() still sees it as small.
         touched = (
             delta.alias("d")
             .join(
@@ -957,17 +963,21 @@ def stream_acid_cdf_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The MEDALLION loop end to end, streaming and transactional: each
     micro-batch commits into the BRONZE acid table exactly-once
     (txn=epoch), then the SILVER per-event_type aggregate table is
-    maintained INCREMENTALLY from bronze's Change Data Feed — never a
-    bronze rescan.
+    maintained INCREMENTALLY from the rows each epoch adds to bronze —
+    never a bronze rescan.
 
     Silver's exactly-once is the textbook incremental-view protocol:
     every silver row carries ``as_of`` = the bronze version it reflects,
-    so the watermark is max(as_of). Each epoch folds the CDF RANGE
-    (watermark, bronze head] through one grouped delta + one key-pruned
-    MERGE (source = only the touched event_types). A crash between the
-    bronze commit and the silver merge loses nothing: the next epoch's
-    range simply covers both commits (the catch-up is the same code
-    path), and a redelivered epoch sees head <= watermark and skips — the
+    so the watermark is max(as_of). Each epoch folds the range
+    (watermark, bronze head] through one grouped delta + one MERGE
+    (source = only the touched event_types; silver is a handful of rows,
+    so the MERGE is acid_table's one-plan small-target rewrite). When
+    this epoch's append committed and is the whole range (watermark ==
+    head - 1), the delta comes from the epoch's own rows; otherwise it
+    comes from bronze's Change Data Feed over the range. A crash between
+    the bronze commit and the silver merge loses nothing: the next
+    epoch's range simply covers both commits (the catch-up reads the
+    CDF), and a redelivered epoch sees head <= watermark and skips — the
     epilogue proves it by replaying the entire stream from a fresh
     checkpoint and asserting zero new commits on EITHER table. The final
     silver snapshot must hash-equal the direct aggregate over events

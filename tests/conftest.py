@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import os
 import tempfile
+import uuid
 
 import pytest
 
@@ -34,3 +35,30 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture
+def job_ids(spark):
+    """``job_ids(body)`` runs ``body()`` after
+    ``harness.reset_process_state()``, under a fresh Spark job group, and
+    returns the ids of the jobs it ran. The reset makes a count
+    independent of test order: no earlier test's cached frames or memos
+    serve this body."""
+    sc = spark.sparkContext
+
+    def run(body) -> list[int]:
+        harness.reset_process_state()
+        group = f"jobs-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            body()
+        finally:
+            for k in (
+                "spark.jobGroup.id",
+                "spark.job.description",
+                "spark.job.interruptOnCancel",
+            ):
+                sc.setLocalProperty(k, None)
+        return list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -299,6 +299,113 @@ def test_merge_raises_on_duplicate_source_keys(spark, sf_dir, tmp_path):
     assert [m["version"] for m in acid_table.history(path)] == [0]
 
 
+def _small_target(spark, path, files):
+    """An acid table keyed on ``k`` with one data file per list of
+    ``(k, v)`` rows in ``files`` (a create, then appends)."""
+    schema = "k BIGINT, v BIGINT"
+    acid_table.create(spark.createDataFrame(files[0], schema), path, "k", 1)
+    for rows in files[1:]:
+        acid_table.append(spark.createDataFrame(rows, schema), path, 1)
+
+
+def _values(spark, rows):
+    """``(k, v)`` rows as a VALUES relation, which the optimizer sizes
+    exactly; a Python-list ``createDataFrame`` is an RDD of unknown size,
+    so a MERGE of it never takes the small-target path."""
+    if not rows:
+        return spark.sql("SELECT 1L AS k, 1L AS v").limit(0)
+    vals = ", ".join(f"({k}L, {v}L)" for k, v in rows)
+    return spark.sql(f"SELECT * FROM VALUES {vals} AS t(k, v)")
+
+
+def _logical_merge(target, source):
+    """The plain upsert over Python rows: every target copy of a matched
+    key takes the source row, unmatched rows of either side carry."""
+    src = dict(source)
+    keys = {k for k, _ in target}
+    out = [(k, src.get(k, v)) for k, v in target]
+    return sorted(out + [(k, v) for k, v in source if k not in keys])
+
+
+_SMALL_TARGETS = {
+    "one-file": [[(1, 10), (4, 40), (6, 60)]],
+    "dup-keys-in-file": [[(1, 10), (2, 20), (2, 21), (5, 50)]],
+    "three-files-dup-across": [
+        [(1, 10), (2, 20), (5, 50)],
+        [(7, 70), (9, 90)],
+        [(9, 91)],
+    ],
+}
+_SMALL_SOURCES = {
+    "matched": [(2, 200), (9, 900)],
+    "unmatched": [(3, 300), (11, 1100)],
+    "mixed": [(1, 100), (4, 400)],
+    "empty": [],
+}
+
+
+@pytest.mark.parametrize("source_name", sorted(_SMALL_SOURCES))
+@pytest.mark.parametrize("target_name", sorted(_SMALL_TARGETS))
+def test_small_target_merge_rewrites_everything_in_one_file(
+    spark, tmp_path, target_name, source_name
+):
+    """A target below _MIN_ROWS_PER_FILE rows and a plan-small source take
+    the one-plan MERGE: no summary job, so no file prune (every live file
+    rewritten, none carried) and one output file, and the snapshot is the
+    logical full-outer MERGE, duplicate target keys included."""
+    files, source = _SMALL_TARGETS[target_name], _SMALL_SOURCES[source_name]
+    path = str(tmp_path / "t")
+    _small_target(spark, path, files)
+    res = acid_table.merge(spark, _values(spark, source), path)
+    assert res == {"rewritten": len(files), "carried": 0}
+    assert len(acid_table._live_files(acid_table.history(path), None)) == 1
+    got = sorted(
+        (r["k"], r["v"]) for r in acid_table.snapshot(spark, path).collect()
+    )
+    assert got == _logical_merge([r for f in files for r in f], source)
+
+
+def test_large_source_into_small_target_takes_the_summary_path(
+    spark, tmp_path
+):
+    """A source the optimizer sizes above the broadcast threshold (a
+    filtered 2M-row range: 16 MB by plan statistics, 2 rows in fact)
+    keeps the summary job and its file prune, even into a small target."""
+    files = [[(k, k) for k in range(i * 10, i * 10 + 10)] for i in range(3)]
+    path = str(tmp_path / "t")
+    _small_target(spark, path, files)
+    source = spark.range(0, 2_000_000).filter("id % 1000000 = 5").select(
+        F.col("id").alias("k"), F.lit(-1).cast("bigint").alias("v")
+    )
+    res = acid_table.merge(spark, source, path)
+    assert res == {"rewritten": 1, "carried": 2}
+    got = sorted(
+        (r["k"], r["v"]) for r in acid_table.snapshot(spark, path).collect()
+    )
+    expected = _logical_merge(
+        [r for f in files for r in f], [(5, -1), (1_000_005, -1)]
+    )
+    assert got == expected
+
+
+def test_rejected_small_target_merge_leaves_no_trace(spark, tmp_path):
+    """The one-plan MERGE's in-plan duplicate guard fails the rewrite with
+    the summary path's ValueError, and the failed write leaves neither a
+    commit nor a staging dir behind."""
+    path = str(tmp_path / "t")
+    _small_target(spark, path, [[(1, 10), (3, 30)]])
+    before = acid_table.history(path)
+    dup = _values(spark, [(3, 1), (3, 2), (4, 4)])
+    with pytest.raises(
+        ValueError,
+        match=r"^merge source holds 2 rows for k=3: MERGE requires at most "
+        r"one source row per merge key \(dedup the source first\)$",
+    ):
+        acid_table.merge(spark, dup, path)
+    assert acid_table.history(path) == before
+    assert not [n for n in os.listdir(path) if n.startswith(".stage-")]
+
+
 def test_delete_handles_uri_hostile_table_paths(spark, sf_dir, tmp_path):
     """ADVICE r11: input_file_name() returns percent-encoded URIs, so a
     table path containing a space and a '%' must still map back to its

@@ -985,24 +985,14 @@ def test_hnsw_l0_multi_round_build(spark, sf_dir, monkeypatch):
     assert len(exact & got) / len(exact) >= 0.9
 
 
-def test_hnsw_runs_at_most_28_jobs(spark, sf_dir):
+def test_hnsw_runs_at_most_28_jobs(spark, sf_dir, job_ids):
     """One search at sf0.01 reads every size it needs off the centroid
     collect and builds both graph layers in one build on the caller's
     thread: at most 28 Spark jobs in the caller's job group (44 with the
     separate size counts and layer builds). Cached frames of earlier calls
     are evicted first, or the search would reuse their graph."""
-    from iot_data_pipeline_spark.cache_tracker import evict_tracked
-
-    evict_tracked()
-    sc = spark.sparkContext
-    group = "hnsw-jobs"
-    sc.setJobGroup(group, group)
-    try:
-        llm.llm_sim_hnsw(spark, os.path.join(os.path.dirname(sf_dir), "sf0.01")).collect()
-    finally:
-        for k in ("spark.jobGroup.id", "spark.job.description"):
-            sc.setLocalProperty(k, None)
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 28
+    sf = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    assert len(job_ids(lambda: llm.llm_sim_hnsw(spark, sf).collect())) <= 28
 
 
 # ---------------------------------------------------------------------------
@@ -1256,23 +1246,14 @@ def test_bpe_batched_rejects_naive_disjoint_batching():
     assert got == _ref_bpe_learn(wf, 2)
 
 
-def test_bpe_training_runs_at_most_three_jobs(spark, sf_dir):
+def test_bpe_training_runs_at_most_three_jobs(spark, sf_dir, job_ids):
     """Training a merge table is one vocabulary collect, which AQE runs as
     2 jobs (the word-count shuffle, then the result), after the 1 job
     every ``table()`` read pays to resolve the parquet schema: at most 3
     Spark jobs per table, where a distributed round loop pays one or more
     jobs per merge (28 for the 24-merge table)."""
-    sc = spark.sparkContext
-    for i, fn in enumerate((llm.llm_bpe_train, llm.llm_bpe_bytelevel)):
-        llm._BPE_RULES_MEMO.clear()
-        group = f"bpe-jobs-{i}"
-        sc.setJobGroup(group, group)
-        try:
-            fn(spark, sf_dir)
-        finally:
-            for k in ("spark.jobGroup.id", "spark.job.description"):
-                sc.setLocalProperty(k, None)
-        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    for fn in (llm.llm_bpe_train, llm.llm_bpe_bytelevel):
+        jobs = job_ids(lambda: fn(spark, sf_dir))
         assert 1 <= len(jobs) <= 3, (fn.__name__, len(jobs))
 
 

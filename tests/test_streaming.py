@@ -534,6 +534,113 @@ def test_medallion_fold_catches_up_after_silver_crash(spark, sf_dir, tmp_path):
     )
 
 
+def _fold_fixture(spark, sf_dir, tmp_path, monkeypatch):
+    """Three event chunks, a fresh medallion fold over bronze/silver dirs
+    under ``tmp_path``, and a list that records every CDF range read the
+    fold makes as ``(v_from, v_to)``."""
+    from iot_data_pipeline_spark.sources import acid_table
+
+    events = table(spark, sf_dir, "events").select(
+        "event_id", "event_type", "value"
+    )
+    chunks = [
+        events.filter(F.pmod("event_id", F.lit(3)) == i) for i in range(3)
+    ]
+    bronze = str(tmp_path / "bronze")
+    silver = str(tmp_path / "silver")
+    reads = []
+    table_changes = acid_table.table_changes
+
+    def spy(spark_, path, v_from, v_to):
+        reads.append((v_from, v_to))
+        return table_changes(spark_, path, v_from, v_to)
+
+    monkeypatch.setattr(acid_table, "table_changes", spy)
+    fold = streams._medallion_fold(spark, bronze, silver)
+    return events, chunks, bronze, silver, fold, reads
+
+
+def _silver_matches(spark, silver, events_in_bronze):
+    from iot_data_pipeline_spark.sources import acid_table
+
+    got = {
+        (r["event_type"], r["n"], round(r["total"], 2))
+        for r in acid_table.snapshot(spark, silver).collect()
+    }
+    expected = {
+        (r["event_type"], r["n"], round(r["total"], 2))
+        for r in events_in_bronze.groupBy("event_type")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum("value").alias("total"),
+        )
+        .collect()
+    }
+    return got == expected
+
+
+def test_medallion_fold_merge_epoch_folds_its_own_rows_in_at_most_7_jobs(
+    spark, sf_dir, tmp_path, monkeypatch, job_ids
+):
+    """An epoch whose bronze append lands right after silver's watermark
+    folds its own rows (no CDF range read) and MERGEs a silver table of a
+    handful of rows in one plan: at most 7 Spark jobs for the whole epoch
+    (bronze append, delta, MERGE), where the CDF read-back and the
+    summary-job MERGE ran 12."""
+    events, chunks, _, silver, fold, reads = _fold_fixture(
+        spark, sf_dir, tmp_path, monkeypatch
+    )
+    fold(chunks[0], 0)  # silver create
+    jobs = job_ids(lambda: fold(chunks[1], 1))
+    assert len(jobs) <= 7, len(jobs)
+    assert reads == []
+    assert _silver_matches(
+        spark, silver, events.filter(F.pmod("event_id", F.lit(3)) < 2)
+    )
+
+
+def test_medallion_fold_redelivered_epoch_reads_the_cdf_range(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """Bronze already holds epoch 1 but silver never folded it (a crash
+    between the two), and epoch 1 is redelivered: the append is a no-op,
+    so the epoch's own rows say nothing about the range and the fold
+    reads (watermark, head] from the CDF."""
+    from iot_data_pipeline_spark.sources import acid_table
+
+    events, chunks, bronze, silver, fold, reads = _fold_fixture(
+        spark, sf_dir, tmp_path, monkeypatch
+    )
+    fold(chunks[0], 0)
+    assert acid_table.append_exactly_once(
+        chunks[1], bronze, txn_version=1, key="event_id"
+    )
+    fold(chunks[1], 1)
+    assert reads == [(0, 1)]
+    assert _silver_matches(
+        spark, silver, events.filter(F.pmod("event_id", F.lit(3)) < 2)
+    )
+
+
+def test_medallion_fold_after_foreign_bronze_commit_reads_the_cdf_range(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """A foreign bronze commit (OPTIMIZE) between two epochs leaves the
+    watermark two versions behind the next epoch's append, so that epoch
+    folds the CDF range over both commits."""
+    from iot_data_pipeline_spark.sources import acid_table
+
+    events, chunks, bronze, silver, fold, reads = _fold_fixture(
+        spark, sf_dir, tmp_path, monkeypatch
+    )
+    fold(chunks[0], 0)
+    fold(chunks[1], 1)
+    assert acid_table.compact(spark, bronze, n_files=1)["rewritten"] > 0
+    fold(chunks[2], 2)
+    assert reads == [(1, 3)]
+    assert _silver_matches(spark, silver, events)
+
+
 # ---------------------------------------------------------------------------
 # Streaming CDF source (r14)
 # ---------------------------------------------------------------------------
