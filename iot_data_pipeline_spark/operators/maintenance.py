@@ -351,15 +351,14 @@ def acid_column_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def acid_string_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STRING-column data skipping from engine-computed prefix bounds
-    (r14 — the string channel acid_column_skipping deliberately excluded:
-    parquet footer binary min/max may be writer-truncated, so the format
-    records Delta-style 32-char ``(prefix_min, upper, truncated)`` bounds
-    computed by the ENGINE at write time instead). The fixture derives a
-    key-monotone zero-padded band string (``'b' || lpad(o_orderkey div
-    1024)``) so the key-range file layout makes per-file string ranges
-    nearly disjoint and a BETWEEN on the string column prunes files at
-    metadata time (structural pin in tests: a pruned file can be deleted
+    """STRING-column data skipping from Delta-style 32-char
+    ``(prefix_min, upper, truncated)`` bounds, derived at write time from
+    the string min/max in each data file's parquet footer (a
+    writer-truncated min/max only widens them, so they stay sound). The
+    fixture derives a key-monotone zero-padded band string (``'b' ||
+    lpad(o_orderkey div 1024)``) so the key-range file layout makes
+    per-file string ranges nearly disjoint and a BETWEEN on the string
+    column prunes files at metadata time (structural pin in tests: a pruned file can be deleted
     from disk and the query still answers; non-ASCII, truncation, and
     legacy-manifest conservatism pinned alongside). The row filter still
     applies, so the result is exact and plain SQL over orders."""

@@ -536,208 +536,6 @@ def _publish(path: str, manifest: dict) -> None:
             )
 
 
-def _fused_write_stats_task(
-    staging: str, str_cols: list, partition_cols: list | None = None
-):
-    """Task body for the FUSED staging-write-plus-string-stats job
-    (VERDICT r14 item 1 — the ``sink_iot_writer`` DataSourceWriter
-    pattern applied to the table format's own write path): each
-    ``mapInArrow`` task streams its partition's Arrow batches into one
-    pyarrow ParquetWriter under ``staging`` while folding per-batch
-    ``pc.min_max`` over the string columns into running FULL-STRING
-    bounds, then emits exactly one (file, json-bounds) row. Bounds ship
-    back truncated to ``_STR_PREFIX + 1`` characters — enough for the
-    driver's :func:`_str_prefix_bounds` to reproduce the exact r14
-    two-pass output (it only inspects the first 32 characters plus the
-    is-longer-than-32 fact), without ever shipping a multi-KB document
-    string in a stats row.
-
-    Batches buffer to ~64 MB before each row-group flush — Spark's Arrow
-    batches default to 10k rows, and writing each as its own row group
-    would shred the file into footer-stat confetti; 64 MB keeps worker
-    memory bounded on wide document tables while preserving scan-friendly
-    row groups. Returned as a CLOSURE so cloudpickle ships it BY VALUE —
-    executors need no importable package (same delivery rule the
-    streaming CDF source pinned). File names are partition-deterministic
-    (``part-{pid:05d}.parquet``), but each ATTEMPT streams into its own
-    attempt-unique temp name and ``os.replace``s to the deterministic
-    name only at end of task (ADVICE r15: bypassing Spark's output
-    committer means a speculative duplicate or a zombie attempt
-    surviving a stage retry could otherwise write the SAME path
-    concurrently and tear the file). ``os.replace`` is atomic within
-    the staging directory, so the published name only ever holds some
-    attempt's COMPLETE bytes; duplicate attempts consumed the same
-    input partition, so their stats rows agree and last-replace-wins is
-    benign.
-
-    DECLARED PARTITION COLUMNS (r16, r15 verdict item 4): when
-    ``partition_cols`` is set, the task's input is range-partitioned and
-    SORTED on those columns, so partition-value runs are contiguous —
-    the task streams along and opens a NEW file at every value change
-    (``part-{pid:05d}-{seq:03d}.parquet``), guaranteeing each data file
-    holds exactly ONE partition tuple, whose values ship back in the
-    stats row's ``pv`` JSON. Run boundaries come from one vectorized
-    numpy compare per batch, and a value spanning a task boundary just
-    yields one file per task — no driver collect of the partition
-    domain, so partition cardinality scales with the data, not with
-    driver memory. NULL partition values are refused loudly (this
-    format's documented restriction — it keeps run detection exact and
-    the manifest JSON unambiguous)."""
-    pfx = _STR_PREFIX + 1
-    pcols = list(partition_cols or [])
-
-    def _task(batches):
-        import json as _json
-        import os as _os
-
-        import numpy as _np
-        import pyarrow as _pa
-        import pyarrow.compute as _pc
-        import pyarrow.parquet as _pq
-        from pyspark import TaskContext
-
-        tc = TaskContext.get()
-        pid, aid = tc.partitionId(), tc.taskAttemptId()
-        st = {
-            "writer": None,
-            "lo": {},
-            "hi": {},
-            "buf": [],
-            "bytes": 0,
-            "fname": None,
-            "tmp": None,
-            "pv": None,
-            "seq": 0,
-        }
-        done: list = []
-
-        def _open(schema, pv):
-            fname = (
-                f"part-{pid:05d}-{st['seq']:03d}.parquet"
-                if pcols
-                else f"part-{pid:05d}.parquet"
-            )
-            tmp = f".{fname}.attempt-{aid}.tmp"
-            st.update(
-                writer=_pq.ParquetWriter(
-                    _os.path.join(staging, tmp), schema
-                ),
-                lo={},
-                hi={},
-                buf=[],
-                bytes=0,
-                fname=fname,
-                tmp=tmp,
-                pv=pv,
-                seq=st["seq"] + 1,
-            )
-
-        def _flush():
-            if st["buf"]:
-                st["writer"].write_table(
-                    _pa.Table.from_batches(st["buf"])
-                )
-                st["buf"], st["bytes"] = [], 0
-
-        def _fold(b):
-            st["buf"].append(b)
-            st["bytes"] += b.nbytes
-            if st["bytes"] >= 64 << 20:
-                _flush()
-            for c in str_cols:
-                mm = _pc.min_max(b.column(b.schema.get_field_index(c)))
-                bmin, bmax = mm["min"].as_py(), mm["max"].as_py()
-                if bmin is None:  # all-NULL batch: nothing to fold
-                    continue
-                lo, hi = st["lo"], st["hi"]
-                if c not in lo or bmin < lo[c]:
-                    lo[c] = bmin
-                if c not in hi or bmax > hi[c]:
-                    hi[c] = bmax
-
-        def _close():
-            if st["writer"] is None:
-                return
-            _flush()
-            st["writer"].close()
-            # atomic publish: the deterministic name never holds a torn
-            # file
-            _os.replace(
-                _os.path.join(staging, st["tmp"]),
-                _os.path.join(staging, st["fname"]),
-            )
-            lo, hi = st["lo"], st["hi"]
-            done.append(
-                (
-                    st["fname"],
-                    _json.dumps(
-                        {c: [lo[c][:pfx], hi[c][:pfx]] for c in lo}
-                    ),
-                    _json.dumps(st["pv"]) if pcols else None,
-                )
-            )
-            st["writer"] = None
-
-        def _scalar(v):
-            if isinstance(v, _np.integer):
-                return int(v)
-            if isinstance(v, _np.bool_):
-                return bool(v)
-            return v
-
-        for b in batches:
-            n = b.num_rows
-            if n == 0:
-                continue
-            if not pcols:
-                if st["writer"] is None:
-                    _open(b.schema, None)
-                _fold(b)
-                continue
-            arrs = []
-            for c in pcols:
-                col = b.column(b.schema.get_field_index(c))
-                if col.null_count:
-                    raise ValueError(
-                        f"partition column {c!r} contains NULL values — "
-                        "this format requires non-null partition values"
-                    )
-                arrs.append(col.to_numpy(zero_copy_only=False))
-            if n == 1:
-                idx = [0, 1]
-            else:
-                change = None
-                for a in arrs:
-                    ne = a[1:] != a[:-1]
-                    change = ne if change is None else (change | ne)
-                idx = (
-                    [0]
-                    + [int(i) + 1 for i in _np.flatnonzero(change)]
-                    + [n]
-                )
-            for s, e in zip(idx, idx[1:]):
-                pv = {
-                    c: _scalar(arrs[j][s]) for j, c in enumerate(pcols)
-                }
-                if st["writer"] is not None and pv != st["pv"]:
-                    _close()
-                if st["writer"] is None:
-                    _open(b.schema, pv)
-                _fold(b.slice(s, e - s))
-        _close()
-        if not done:  # empty partition: no file, no stats row
-            return
-        yield _pa.RecordBatch.from_pydict(
-            {
-                "file": [d[0] for d in done],
-                "stats": [d[1] for d in done],
-                "pv": [d[2] for d in done],
-            }
-        )
-
-    return _task
-
-
 def _murmur3_long(v: int, seed: int = 42) -> int:
     """Spark's ``Murmur3Hash`` of one LONG column (Murmur3_x86_32
     ``hashLong``): two 32-bit word mixes + finalization, returned as a
@@ -837,66 +635,191 @@ def _mixture_bounds(segments: list[tuple], n: int) -> list[int]:
     return out
 
 
+def _stage_parquet(
+    df: DataFrame,
+    path: str,
+    stage: str,
+    subdir: str,
+    partition_by: list | None = None,
+    entry=None,
+    single: bool = False,
+) -> list[dict]:
+    """The one parquet writer of the table format. Spark writes ``df``
+    into a fresh ``.<stage>-<uuid>`` dir under ``path`` (``partitionBy``
+    on ``partition_by``); each non-empty part file then moves to
+    ``<subdir>/<uuid>.parquet``, and the result holds one
+    ``{"path": rel, **entry(part, footer)}`` per moved file, in part-file
+    order. Every footer is read, and ``entry`` run, before any file moves,
+    so a rejected write leaves nothing under ``subdir``; the staging dir
+    goes whether the write succeeds or fails (``vacuum`` sweeps the
+    ``.<stage>-`` dirs of crashed processes). ``single`` is for the
+    one-file sidecars: the caller coalesces ``df`` to one partition, and
+    its one file moves even when empty."""
+    import glob
+    import shutil
+
+    import pyarrow.parquet as pq
+
+    staging = os.path.join(path, f".{stage}-{uuid.uuid4().hex}")
+    try:
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(*partition_by)
+        w.parquet(staging)
+        parts = sorted(
+            glob.glob(
+                os.path.join(staging, "**", "part-*.parquet"), recursive=True
+            )
+        )
+        if single and len(parts) != 1:
+            raise RuntimeError(
+                f"expected one {subdir} sidecar file in {staging}, Spark "
+                f"wrote {len(parts)}"
+            )
+        staged = []
+        for part in parts:
+            meta = pq.read_metadata(part)
+            if meta.num_rows or single:
+                staged.append((part, entry(part, meta) if entry else {}))
+        out_dir = os.path.join(path, subdir)
+        os.makedirs(out_dir, exist_ok=True)
+        out = []
+        for part, fields in staged:
+            name = f"{uuid.uuid4().hex}.parquet"
+            shutil.move(part, os.path.join(out_dir, name))
+            out.append({"path": f"{subdir}/{name}", **fields})
+        return out
+    finally:
+        shutil.rmtree(staging, ignore_errors=True)
+
+
+def _footer_stats(part: str, meta, key: str, pcols: list) -> dict:
+    """The add-entry fields of one staged data file, all read from its
+    parquet footer: ``rows``, ``min_key``/``max_key``, ``cols`` [min, max]
+    for every integral/float/boolean top-level column (Delta's
+    dataSkippingNumIndexedCols stats, the substrate of
+    :func:`snapshot`'s ``skip_where``), ``scols`` 32-char prefix bounds for
+    every string column (:func:`_str_prefix_bounds`), and ``pv`` for the
+    declared partition columns.
+
+    A row group whose column is all NULL holds no bound and is skipped. A
+    column with a row group that has no usable min/max (none written, or
+    NaN) records nothing for this file, and skipping treats absent stats
+    as always-overlapping: conservative, never wrong."""
+    import math
+
+    rgs = [meta.row_group(i) for i in range(meta.num_row_groups)]
+    bounds: dict[str, list] = {}
+    nulls: dict[str, int] = {}
+    for ci in range(meta.num_columns):
+        name = meta.schema.column(ci).path
+        if name != meta.schema.column(ci).name:
+            continue  # a leaf of a nested column
+        lo = hi = None
+        for rg in rgs:
+            st = rg.column(ci).statistics
+            if st is not None and st.has_null_count:
+                nulls[name] = nulls.get(name, 0) + st.null_count
+                if st.null_count == rg.num_rows:
+                    continue  # all-NULL row group: no bound to fold
+            if (
+                st is None
+                or not st.has_min_max
+                or not isinstance(st.min, (int, float, bool, str))
+                or (isinstance(st.min, float) and math.isnan(st.min))
+                or (isinstance(st.max, float) and math.isnan(st.max))
+            ):
+                lo = None
+                break
+            lo = st.min if lo is None else min(lo, st.min)
+            hi = st.max if hi is None else max(hi, st.max)
+        if lo is not None:
+            bounds[name] = [lo, hi]
+    if key not in bounds:
+        raise RuntimeError(
+            f"parquet footer of {part} carries no min/max for {key}: the "
+            "manifest stats (and every prune) depend on them — check the "
+            "writer's statistics settings"
+        )
+    out: dict = {
+        "rows": meta.num_rows,
+        "min_key": bounds[key][0],
+        "max_key": bounds[key][1],
+    }
+    cols = {
+        c: b
+        for c, b in bounds.items()
+        if c != key and not isinstance(b[0], str)
+    }
+    scols = {
+        c: _str_prefix_bounds(*b)
+        for c, b in bounds.items()
+        if isinstance(b[0], str)
+    }
+    if cols:
+        out["cols"] = cols
+    if scols:
+        out["scols"] = scols
+    if pcols:
+        for c in pcols:
+            if nulls.get(c):
+                raise ValueError(
+                    f"partition column {c!r} contains NULL values — "
+                    "this format requires non-null partition values"
+                )
+            if c not in bounds:
+                raise RuntimeError(
+                    f"parquet footer of {part} carries no min/max for "
+                    f"partition column {c!r}; its value cannot be recorded"
+                )
+        # one partition tuple per file: each column's min is its max
+        out["pv"] = {c: bounds[c][0] for c in pcols}
+    return out
+
+
 def _write_data_files(
     df: DataFrame,
     path: str,
     key: str,
     n_files: int,
     order_by=None,
-    string_stats: bool = True,
     partition_cols: list | None = None,
     bounds: list[int] | None = None,
 ) -> list[dict]:
     """Write ``df`` as ≤ n_files parquet files key-range-partitioned on
     ``key`` (so file stats PRUNE under key-predicated rewrites), move them
-    under data/, and return add-entries with min/max key stats read from
-    the parquet FOOTERS — the writer never re-scans its own output.
-    ``order_by`` overrides the layout with an arbitrary clustering
-    expression (range-partitioned AND sorted on it — the Z-order compact
-    path); stats collection is identical either way.
+    under data/, and return add-entries whose stats all come from the
+    parquet FOOTERS (:func:`_footer_stats`) — the writer never re-scans
+    its own output. ``order_by`` overrides the layout with an arbitrary
+    clustering expression (range-partitioned AND sorted on it — the
+    Z-order compact path); stats collection is identical either way.
 
-    Beyond the key, every add-entry also records per-file [min, max] for
-    ALL integral/float/boolean top-level columns (``"cols"``) — Delta's
-    dataSkippingNumIndexedCols stats, the substrate of
-    :func:`snapshot`'s ``skip_where`` pruning. Same footer read, zero
-    extra IO. STRING columns get their own stats channel (``"scols"``,
-    r14): footer binary min/max may be writer-truncated — a truncated max
-    is only a safe upper bound by writer convention this format refuses
-    to lean on — so string bounds are ENGINE-COMPUTED and recorded as
-    Delta-style 32-char prefix bounds: ``[prefix_min, upper, truncated]``
-    with a successor-incremented EXCLUSIVE upper when truncated (see
-    :func:`_str_prefix_bounds`). Since r15 (VERDICT r14 item 1) the
-    string bounds are collected TASK-SIDE, FUSED INTO THE STAGING WRITE:
-    a string-bearing frame writes through ``mapInArrow`` — each task
-    streams its Arrow batches into one pyarrow ParquetWriter (64 MB row
-    groups) while folding per-batch ``pc.min_max`` into running full-
-    string bounds, and emits one tiny (file, bounds-prefix) row. ONE job
-    replaces the r14 write-then-re-read; at cluster scale the saved
-    re-read of the string columns grows with the data. UTF-8 byte order
-    equals code-point order, so pyarrow/Python min-max agrees exactly
-    with Spark's default-collation ``F.min``/``F.max`` — the recorded
-    bounds are byte-identical to the two-pass path (pinned). Frames with
-    no string columns (or ``string_stats=False``) keep the plain JVM
-    parquet write untouched. A column whose stats are missing or NaN
-    in any row group is simply not recorded for that file, and skipping
-    treats absent stats as always-overlapping — conservative, never
-    wrong.
+    String bounds need no pass of their own. Spark's parquet writer
+    records exact, untruncated string min/max, except in a row group where
+    min+max reach 4 KiB: it writes no string stats there, so that column
+    never skips in that file. If a session sets
+    ``parquet.statistics.truncate.length``, the truncated min is still ≤
+    the true min and the incremented max still ≥ the true max, and
+    :func:`_str_prefix_bounds` only widens them further, so the recorded
+    bounds stay sound. UTF-8 byte order equals code-point order, so the
+    footer bounds agree with Spark's ``F.min``/``F.max``.
 
-    ``partition_cols`` (r16): declared-partition tables cluster by
-    (partition columns, key) — range-partitioned AND sorted, so the
-    fused writer's run-splitting puts exactly one partition tuple per
-    file — and every add-entry records its ``"pv"`` partition values,
-    the substrate :func:`snapshot` prunes on BEFORE any stats."""
-    import glob
-    import math
-    import shutil
-
-    import pyarrow.parquet as pq
-
-    staging = os.path.join(path, f".stage-{uuid.uuid4().hex}")
+    ``partition_cols``: declared-partition tables cluster by (partition
+    columns, key), range-partitioned AND sorted, and Spark's writer
+    partitions on hidden copies of the partition columns, so each data
+    file holds exactly one partition tuple and still carries the real
+    columns. Every add-entry records its ``"pv"`` partition values, the
+    substrate :func:`snapshot` prunes on BEFORE any stats."""
     pcols = list(partition_cols or [])
+    hidden = [f"__wdf_pv{i}" for i in range(len(pcols))]
+    if pcols:
+        # partitionBy drops its columns from the files it writes: partition
+        # on copies so the data files keep the real ones
+        df = df.select(
+            "*", *[F.col(c).alias(h) for c, h in zip(pcols, hidden)]
+        )
     cluster_tail = [order_by] if order_by is not None else [key]
-    cluster = [F.col(c) for c in pcols] + cluster_tail
+    cluster = [F.col(h) for h in hidden] + cluster_tail
     if bounds is not None and order_by is None and not pcols and n_files > 1:
         # MANIFEST-DERIVED range layout (r16 verdict item 2, guide §1.2):
         # ``repartitionByRange`` submits a SAMPLING job that executes the
@@ -931,99 +854,14 @@ def _write_data_files(
         clustered = df.coalesce(1)
     else:
         clustered = df.repartitionByRange(n_files, key)
-    # ``string_stats=False`` defers the string pass (the per-epoch
-    # streaming append skips it — a bounded-latency hot path; files
-    # without ``scols`` conservatively never skip, and the next OPTIMIZE
-    # rewrite collects them — the standard stats-deferred-to-maintenance
-    # trade).
-    str_cols = (
-        [name for name, t in df.dtypes if t == "string"]
-        if string_stats
-        else []
+    return _stage_parquet(
+        clustered,
+        path,
+        "stage",
+        _DATA,
+        partition_by=hidden,
+        entry=lambda part, meta: _footer_stats(part, meta, key, pcols),
     )
-    str_stats: dict[str, dict[str, list]] = {}
-    pv_map: dict[str, dict] = {}
-    adds: list[dict] = []
-    try:
-        if str_cols or pcols:
-            os.makedirs(staging, exist_ok=True)
-            rows = clustered.mapInArrow(
-                _fused_write_stats_task(staging, str_cols, pcols),
-                "file string, stats string, pv string",
-            ).collect()
-            for r in rows:
-                per_col = {
-                    c: _str_prefix_bounds(lo, hi)
-                    for c, (lo, hi) in json.loads(r["stats"]).items()
-                }
-                if per_col:
-                    str_stats[r["file"]] = per_col
-                if r["pv"] is not None:
-                    pv_map[r["file"]] = json.loads(r["pv"])
-        else:
-            clustered.write.mode("overwrite").parquet(staging)
-        data_dir = os.path.join(path, _DATA)
-        os.makedirs(data_dir, exist_ok=True)
-        for part in sorted(glob.glob(os.path.join(staging, "part-*.parquet"))):
-            meta = pq.read_metadata(part)
-            if meta.num_rows == 0:
-                continue
-            arrow_schema = meta.schema.to_arrow_schema()
-            ki = arrow_schema.get_field_index(key)
-            mins, maxs = [], []
-            for rg in range(meta.num_row_groups):
-                st = meta.row_group(rg).column(ki).statistics
-                if st is None or not st.has_min_max:
-                    raise RuntimeError(
-                        f"parquet footer of {part} carries no min/max for "
-                        f"{key}: the manifest stats (and every prune) depend "
-                        "on them — check the writer's statistics settings"
-                    )
-                mins.append(st.min)
-                maxs.append(st.max)
-            cols: dict[str, list] = {}
-            for ci, name in enumerate(arrow_schema.names):
-                if name == key:
-                    continue
-                cmins, cmaxs = [], []
-                for rg in range(meta.num_row_groups):
-                    st = meta.row_group(rg).column(ci).statistics
-                    if (
-                        st is None
-                        or not st.has_min_max
-                        or not isinstance(st.min, (int, float, bool))
-                        or not isinstance(st.max, (int, float, bool))
-                        or (isinstance(st.min, float) and math.isnan(st.min))
-                        or (isinstance(st.max, float) and math.isnan(st.max))
-                    ):
-                        cmins = []  # unusable in any row group: drop column
-                        break
-                    cmins.append(st.min)
-                    cmaxs.append(st.max)
-                if cmins:
-                    cols[name] = [min(cmins), max(cmaxs)]
-            scols = str_stats.get(os.path.basename(part))
-            pv = pv_map.get(os.path.basename(part))
-            name = f"{uuid.uuid4().hex}.parquet"
-            shutil.move(part, os.path.join(data_dir, name))
-            add = {
-                "path": f"{_DATA}/{name}",
-                "rows": meta.num_rows,
-                "min_key": min(mins),
-                "max_key": max(maxs),
-            }
-            if cols:
-                add["cols"] = cols
-            if scols:
-                add["scols"] = scols
-            if pv is not None:
-                add["pv"] = pv
-            adds.append(add)
-    finally:
-        # a failed write (a rejected MERGE, a task error) must not
-        # leave its staged files under the table until VACUUM
-        shutil.rmtree(staging, ignore_errors=True)
-    return adds
 
 
 def _require_partition_cols(st: dict, df: DataFrame) -> list | None:
@@ -1670,9 +1508,6 @@ def _write_bloom_sidecar(
     added: a (file, col) with no sidecar row means every value was NULL
     — a non-null probe prunes it outright. Files without a bloom
     pointer are conservatively kept."""
-    import glob as _glob
-    import shutil
-
     reader = spark.read.schema(sch) if sch is not None else spark.read
     base = reader.parquet(
         *[os.path.join(path, a["path"]) for a in adds]
@@ -1728,16 +1563,9 @@ def _write_bloom_sidecar(
     allb = parts[0]
     for p in parts[1:]:
         allb = allb.unionByName(p)
-    staging = os.path.join(path, f".bloom-stage-{uuid.uuid4().hex}")
-    allb.coalesce(1).write.mode("overwrite").parquet(staging)
-    bloom_dir = os.path.join(path, _BLOOM)
-    os.makedirs(bloom_dir, exist_ok=True)
-    written = sorted(_glob.glob(os.path.join(staging, "part-*.parquet")))
-    assert len(written) == 1
-    name = f"{uuid.uuid4().hex}.parquet"
-    shutil.move(written[0], os.path.join(bloom_dir, name))
-    shutil.rmtree(staging)
-    rel = f"{_BLOOM}/{name}"
+    rel = _stage_parquet(
+        allb.coalesce(1), path, "bloom-stage", _BLOOM, single=True
+    )[0]["path"]
     # Spark's xxhash64 is TYPE-WIDTH-SENSITIVE (int and bigint hash the
     # same value differently), so after type widening a probe hashed at
     # the CURRENT recorded type would live in a different hash family
@@ -1797,24 +1625,10 @@ def _write_dv_file(pos_df: DataFrame, path: str) -> str:
     a commit's vector is proportional to the rows it deletes (trickle
     deletes — the workload DVs exist for), and OPTIMIZE materializes
     vectors away before they grow."""
-    import glob
-    import shutil
-
-    staging = os.path.join(path, f".dv-stage-{uuid.uuid4().hex}")
-    (
-        pos_df.coalesce(1)
-        .sortWithinPartitions("file_key", "pos")
-        .write.mode("overwrite")
-        .parquet(staging)
-    )
-    dv_dir = os.path.join(path, _DV)
-    os.makedirs(dv_dir, exist_ok=True)
-    parts = sorted(glob.glob(os.path.join(staging, "part-*.parquet")))
-    assert len(parts) == 1
-    name = f"{uuid.uuid4().hex}.parquet"
-    shutil.move(parts[0], os.path.join(dv_dir, name))
-    shutil.rmtree(staging)
-    return f"{_DV}/{name}"
+    ordered = pos_df.coalesce(1).sortWithinPartitions("file_key", "pos")
+    return _stage_parquet(ordered, path, "dv-stage", _DV, single=True)[0][
+        "path"
+    ]
 
 
 def create(
@@ -2087,8 +1901,8 @@ def snapshot(
     recorded [min, max] misses its closed range; a file with NO recorded
     stats for a predicate column is conservatively kept, so the prune is
     exact on every table generation (pre-r13 manifests carry no "cols"
-    and simply never skip). STRING columns prune from the engine-computed
-    32-char prefix bounds (r14, ``"scols"``): ``prefix_min > hi`` or
+    and simply never skip). STRING columns prune from the 32-char prefix
+    bounds taken from the parquet footers (``"scols"``): ``prefix_min > hi`` or
     ``upper ≤/< lo`` per the truncation flag — conservative on truncation
     and on legacy manifests. The matching row filters still apply."""
     if timestamp is not None:
@@ -2384,24 +2198,7 @@ def _write_cdc_files(df: DataFrame, path: str) -> list[str]:
     deltas — the one thing the read-side file-diff feed cannot do.
     Invisible to snapshot readers (only ``data/`` is ever live); vacuum
     reclaims them by the retention window (see :func:`vacuum`)."""
-    import glob
-    import shutil
-
-    staging = os.path.join(path, f".cdc-stage-{uuid.uuid4().hex}")
-    df.write.mode("overwrite").parquet(staging)
-    cdc_dir = os.path.join(path, _CDC)
-    os.makedirs(cdc_dir, exist_ok=True)
-    rels: list[str] = []
-    import pyarrow.parquet as pq
-
-    for part in sorted(glob.glob(os.path.join(staging, "part-*.parquet"))):
-        if pq.read_metadata(part).num_rows == 0:
-            continue
-        name = f"{uuid.uuid4().hex}.parquet"
-        shutil.move(part, os.path.join(cdc_dir, name))
-        rels.append(f"{_CDC}/{name}")
-    shutil.rmtree(staging)
-    return rels
+    return [e["path"] for e in _stage_parquet(df, path, "cdc-stage", _CDC)]
 
 
 def delete(
@@ -2808,15 +2605,11 @@ def append_exactly_once(
     if st:
         df, cm2 = _to_physical(df, st)
     schema = _evolve_schema(st, df) if st else _schema_json(df)
-    # per-epoch hot path: defer string prefix stats to the next OPTIMIZE
-    # (one extra job per micro-batch otherwise; numeric footer stats are
-    # free and still recorded)
     adds = _write_data_files(
         df,
         path,
         key,
         n_files,
-        string_stats=False,
         partition_cols=_require_partition_cols(st, df) if st else None,
     )
     version = st["version"] + 1 if st else 0

@@ -1083,6 +1083,9 @@ def _replicate_epoch(spark: SparkSession, tgt: str, key: str):
     def apply(batch: DataFrame, _epoch: int) -> None:
         from pyspark.sql import Window
 
+        # every step below re-plans the batch, and each plan would re-read
+        # the Python acid_cdf source: read it once
+        batch = batch.localCheckpoint()
         if batch.isEmpty():
             return
         w = Window.partitionBy(key).orderBy(

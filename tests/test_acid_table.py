@@ -388,22 +388,37 @@ def test_large_source_into_small_target_takes_the_summary_path(
     assert got == expected
 
 
-def test_rejected_small_target_merge_leaves_no_trace(spark, tmp_path):
-    """The one-plan MERGE's in-plan duplicate guard fails the rewrite with
-    the summary path's ValueError, and the failed write leaves neither a
-    commit nor a staging dir behind."""
+@pytest.mark.parametrize("writer", ["merge", "cdc", "dv"])
+def test_failed_write_leaves_no_trace(spark, tmp_path, writer):
+    """A failed write leaves neither a commit nor a staging dir behind:
+    the one-plan MERGE's in-plan duplicate guard fails the rewrite with
+    the summary path's ValueError, and a CDC journal or deletion-vector
+    write whose tasks fail stages through the same writer."""
     path = str(tmp_path / "t")
     _small_target(spark, path, [[(1, 10), (3, 30)]])
     before = acid_table.history(path)
-    dup = _values(spark, [(3, 1), (3, 2), (4, 4)])
-    with pytest.raises(
-        ValueError,
-        match=r"^merge source holds 2 rows for k=3: MERGE requires at most "
-        r"one source row per merge key \(dedup the source first\)$",
-    ):
-        acid_table.merge(spark, dup, path)
+    if writer == "merge":
+        dup = _values(spark, [(3, 1), (3, 2), (4, 4)])
+        with pytest.raises(
+            ValueError,
+            match=r"^merge source holds 2 rows for k=3: MERGE requires at "
+            r"most one source row per merge key \(dedup the source first\)$",
+        ):
+            acid_table.merge(spark, dup, path)
+    else:
+        bad = spark.range(3).select(
+            F.lit("f").alias("file_key"),
+            F.expr("if(id >= 0, raise_error('task failed'), id)").alias("pos"),
+        )
+        with pytest.raises(Exception, match="task failed"):
+            if writer == "cdc":
+                acid_table._write_cdc_files(
+                    bad.withColumn("change_type", F.lit("insert")), path
+                )
+            else:
+                acid_table._write_dv_file(bad, path)
     assert acid_table.history(path) == before
-    assert not [n for n in os.listdir(path) if n.startswith(".stage-")]
+    assert not [n for n in os.listdir(path) if "stage-" in n]
 
 
 def test_delete_handles_uri_hostile_table_paths(spark, sf_dir, tmp_path):
@@ -1606,10 +1621,11 @@ def test_dv_respects_stats_pruning_and_checkpoint_rollup(
 def test_string_skipping_is_structural_and_engine_computed(
     spark, sf_dir, tmp_path
 ):
-    """String columns record engine-computed prefix bounds in "scols"
-    (never footer-trusted), and skip_where pruning on a string range is
-    STRUCTURAL: a file whose recorded bounds miss the predicate can be
-    physically deleted and the pruned read still answers exactly."""
+    """String columns record 32-char prefix bounds in "scols", taken from
+    the string min/max in the parquet footers, and skip_where pruning on a
+    string range is STRUCTURAL: a file whose recorded bounds miss the
+    predicate can be physically deleted and the pruned read still answers
+    exactly."""
     path = str(tmp_path / "t")
     t = (
         table(spark, sf_dir, "orders")
@@ -1698,6 +1714,24 @@ def test_string_skipping_truncation_and_non_ascii_edges(spark, tmp_path):
         spark, path, skip_where={"s": ("zz-a", "zz-z")}
     )
     assert za.count() == 2
+
+
+def test_footer_string_stats_limit_records_no_bounds(spark, tmp_path):
+    """Spark's parquet writer drops a row group's string min/max when they
+    reach 4 KiB together, so that column records no "scols" in that file,
+    while a short string column in the same file still does; a skip_where
+    on the long column keeps the file and answers exactly."""
+    rows = [(1, "a" * 2100, "x"), (2, "b" * 2100, "y"), (3, "c" * 2100, "z")]
+    df = spark.createDataFrame(rows, "k LONG, s STRING, t STRING")
+    path = str(tmp_path / "t")
+    acid_table.create(df, path, "k", n_files=1)
+    (entry,) = acid_table._state(path)["live"]
+    assert "s" not in entry["scols"]
+    assert entry["scols"]["t"] == ["x", "z", False]
+    for lo, hi in (("b", "bz"), ("d", "e"), ("a", "c")):
+        got = acid_table.snapshot(spark, path, skip_where={"s": (lo, hi)})
+        exp = df.filter(F.col("s").between(lo, hi))
+        assert sorted(got.collect()) == sorted(exp.collect())
 
 
 def test_string_skipping_legacy_manifests_never_skip(spark, sf_dir, tmp_path):
@@ -1814,10 +1848,11 @@ def test_zorder_compact_prunes_second_dimension_snapshot_unchanged(
     assert got.exceptAll(exp).count() == 0
 
 
-def test_epoch_appends_defer_string_stats_to_optimize(spark, sf_dir, tmp_path):
-    """The per-epoch streaming append skips the string-stats pass (hot
-    path, one fewer job per micro-batch); its files carry no "scols" and
-    conservatively never skip — the next OPTIMIZE rewrite collects them."""
+def test_epoch_appends_record_string_stats(spark, sf_dir, tmp_path):
+    """The per-epoch streaming append records string prefix bounds like
+    every other write: they come from the parquet footers, at no extra
+    job. A string skip_where on its files answers exactly, and so does
+    the OPTIMIZE rewrite's."""
     path = str(tmp_path / "t")
     t = _target(spark, sf_dir).limit(400)
     assert (
@@ -1825,8 +1860,7 @@ def test_epoch_appends_defer_string_stats_to_optimize(spark, sf_dir, tmp_path):
         is True
     )
     live = acid_table._state(path)["live"]
-    assert not any("scols" in f for f in live)  # deferred
-    # conservative read: a string skip_where still answers exactly
+    assert all("scols" in f and "o_orderstatus" in f["scols"] for f in live)
     got = acid_table.snapshot(
         spark, path, skip_where={"o_orderstatus": ("O", "O")}
     )
@@ -1834,6 +1868,10 @@ def test_epoch_appends_defer_string_stats_to_optimize(spark, sf_dir, tmp_path):
     acid_table.compact(spark, path, n_files=1)
     live = acid_table._state(path)["live"]
     assert all("scols" in f and "o_orderstatus" in f["scols"] for f in live)
+    got = acid_table.snapshot(
+        spark, path, skip_where={"o_orderstatus": ("O", "O")}
+    )
+    assert got.count() == t.filter("o_orderstatus = 'O'").count()
 
 
 def test_zorder_by_rejects_non_integral_columns(spark, sf_dir, tmp_path):
@@ -2567,16 +2605,15 @@ def test_zorder_normalization_survives_wide_int_domains(spark, tmp_path):
     assert len(snap.inputFiles()) < len(full.inputFiles())
 
 
-def test_fused_write_string_stats_identical_to_two_pass(
+def test_footer_string_stats_identical_to_two_pass(
     spark, sf_dir, tmp_path
 ):
-    """The r15 FUSED write (task-side pyarrow write + pc.min_max string
-    bounds in ONE mapInArrow job) must record byte-identical "scols" to
-    the r14 two-pass path (JVM write, then a Spark min/max re-read of the
-    staged files grouped by file identity) — UTF-8 byte order equals
-    code-point order, so the two collations agree exactly. Recomputed
-    here two-pass-style over the committed data files, including
-    truncation, non-ASCII, and all-NULL-column edges."""
+    """String bounds taken from the parquet footers must record
+    byte-identical "scols" to a two-pass computation (a Spark min/max
+    re-read of the written files grouped by file identity) — UTF-8 byte
+    order equals code-point order, so the two collations agree exactly.
+    Recomputed here two-pass-style over the committed data files,
+    including truncation, non-ASCII, and all-NULL-column edges."""
     d = (
         _target(spark, sf_dir)
         .limit(3000)

@@ -141,3 +141,41 @@ def test_package_starts_no_threads():
                     rel = os.path.relpath(path, ROOT)
                     offenders.append(f"{rel}:{node.lineno}")
     assert not offenders, f"thread imports at {offenders}"
+
+
+# The ACID table writes every file (data, CDC journal, deletion vectors,
+# Bloom sidecars) through Spark's parquet writer in one staging helper;
+# no source writes parquet from a Python worker.
+_SOURCES = os.path.join(ROOT, "iot_data_pipeline_spark", "sources")
+_STAGER = "_stage_parquet"
+_PY_WRITERS = re.compile(r"\bmapInArrow\b|\bParquetWriter\b")
+
+
+def _match_lines(pattern, text: str) -> list[int]:
+    return [text.count("\n", 0, m.start()) + 1 for m in re.finditer(pattern, text)]
+
+
+def test_acid_table_writes_only_through_its_staging_helper():
+    offenders = []
+    for dirpath, _, files in os.walk(_SOURCES):
+        for fname in files:
+            if fname.endswith(".py"):
+                with open(os.path.join(dirpath, fname), encoding="utf-8") as fh:
+                    src = fh.read()
+                rel = os.path.relpath(os.path.join(dirpath, fname), _SOURCES)
+                offenders += [f"{rel}:{n}" for n in _match_lines(_PY_WRITERS, src)]
+    fname = "acid_table.py"
+    with open(os.path.join(_SOURCES, fname), encoding="utf-8") as fh:
+        src = fh.read()
+    spans = [
+        (n.lineno, n.end_lineno)
+        for n in ast.walk(ast.parse(src))
+        if isinstance(n, ast.FunctionDef) and n.name == _STAGER
+    ]
+    assert spans, f"{fname} has no {_STAGER}"
+    offenders += [
+        f"{fname}:{n}"
+        for n in _match_lines(r"\.write\.", src)
+        if not any(a <= n <= b for a, b in spans)
+    ]
+    assert not offenders, f"parquet written outside acid_table.{_STAGER} at {offenders}"
