@@ -536,6 +536,33 @@ def _publish(path: str, manifest: dict) -> None:
             )
 
 
+def _commit(
+    path: str, st: dict, op: str, add=(), remove=(), **fields
+) -> int:
+    """The one commit path: publish commit ``op`` at the version
+    after the state ``st`` the op read, with that state's ``key`` and
+    ``schema`` (a ``schema`` in ``fields`` overrides it, as do any other
+    manifest fields ``fields`` carries). Returns the committed version;
+    a lost version race raises from :func:`_publish`."""
+    manifest = {
+        "version": st["version"] + 1,
+        "op": op,
+        "key": st["key"],
+        "schema": st.get("schema"),
+        "add": list(add),
+        "remove": list(remove),
+        **fields,
+    }
+    _publish(path, manifest)
+    return manifest["version"]
+
+
+def _new_state(key: str, df: DataFrame) -> dict:
+    """The state a new table's first commit builds on: no version yet,
+    the table ``key``, and ``df``'s schema."""
+    return {"version": -1, "key": key, "schema": _schema_json(df)}
+
+
 def _murmur3_long(v: int, seed: int = 42) -> int:
     """Spark's ``Murmur3Hash`` of one LONG column (Murmur3_x86_32
     ``hashLong``): two 32-bit word mixes + finalization, returned as a
@@ -599,7 +626,13 @@ def _mixture_bounds(segments: list[tuple], n: int) -> list[int]:
     (guide §5/§6: answer from metadata, not a job). Bucket i takes keys
     ``bounds[i-1] < k <= bounds[i]``; duplicates collapse (fewer, fuller
     buckets — balance is approximate by design, correctness never
-    depends on it: file stats are re-read from the written footers)."""
+    depends on it: file stats are re-read from the written footers).
+
+    A sweep line over the segments' ±density events, O(S log S) for S
+    segments: the density of each strip between consecutive events is a
+    running sum, compensated (Neumaier) so that a dense narrow segment
+    cannot swallow a wide sparse one's density, and reset to exactly 0
+    where no segment is active, so no residue places a bound in a gap."""
     import math
 
     segs = [
@@ -611,16 +644,30 @@ def _mixture_bounds(segments: list[tuple], n: int) -> list[int]:
         return []
     # each integer key occupies the unit cell [k, k+1) so point segments
     # (lo == hi) still carry their mass
-    events = sorted({e for lo, hi, _ in segs for e in (lo, hi + 1)})
+    # (key, +1 open / -1 close, density change); closes sort first, so
+    # the active count reaches 0 wherever every open segment has ended.
+    # Strips between events at the same key are empty and carry no mass.
+    events = sorted(
+        (e, sign, sign * w / (hi + 1 - lo))
+        for lo, hi, w in segs
+        for e, sign in ((lo, 1), (hi + 1, -1))
+    )
     total = sum(w for _, _, w in segs)
     targets = [total * i / n for i in range(1, n)]
     bounds: list[int] = []
     acc = 0.0
     ti = 0
-    for a, b in zip(events, events[1:]):
-        dens = sum(
-            w / (hi + 1 - lo) for lo, hi, w in segs if lo <= a and b <= hi + 1
-        )
+    run = comp = 0.0
+    active = 0
+    for (a, sign, d), (b, _, _) in zip(events, events[1:]):
+        active += sign
+        if active:
+            t = run + d
+            comp += (run - t) + d if abs(run) >= abs(d) else (d - t) + run
+            run = t
+        else:
+            run = comp = 0.0
+        dens = run + comp
         strip = dens * (b - a)
         while ti < len(targets) and acc + strip >= targets[ti] and strip > 0:
             x = a + (targets[ti] - acc) / dens if dens > 0 else a
@@ -922,6 +969,19 @@ def _check_reserved_columns(df: DataFrame) -> None:
         )
 
 
+def _check_new_table(df: DataFrame, key: str) -> None:
+    """The guard of every commit that creates a table (:func:`create` and
+    the first epoch of :func:`append_exactly_once`): no reserved column
+    names, and an integral key, because the manifest stats and merge's
+    prune join are integral — fail at create time, not at first merge."""
+    _check_reserved_columns(df)
+    ktype = dict(df.dtypes).get(key)
+    if ktype not in ("tinyint", "smallint", "int", "bigint"):
+        raise TypeError(
+            f"table key must be an integral column, got {key}: {ktype}"
+        )
+
+
 # TYPE WIDENING lattice (Delta's type widening on the Spark 4 parquet
 # reader, which reads narrow physical types through a wider declared
 # schema — int32 pages as LongType etc., probed and pinned): each type
@@ -1017,6 +1077,24 @@ def _colmap(st: dict) -> dict | None:
     return st.get("colmap")
 
 
+def _physical_cols(st: dict, arg: str, cols):
+    """The caller's LOGICAL column names in ``cols`` (a list, or a dict
+    keyed by name) translated to the version's physical names, in the
+    same shape; identity tables pass ``cols`` through. An unknown name
+    raises, naming the ``arg`` it came from."""
+    cm = _colmap(st)
+    if not cm or not cols:
+        return cols
+    unknown = [c for c in cols if c not in cm]
+    if unknown:
+        raise ValueError(
+            f"{arg} column(s) {unknown} not in table columns {sorted(cm)}"
+        )
+    if isinstance(cols, dict):
+        return {cm[c]: v for c, v in cols.items()}
+    return [cm[c] for c in cols]
+
+
 def _to_logical(df: DataFrame, st: dict) -> DataFrame:
     """Rename a PHYSICAL frame's columns to the version's logical names;
     pass-through columns outside the mapping (scan scratch, feed tags)
@@ -1085,18 +1163,7 @@ def rename_column(path: str, old: str, new: str) -> None:
     _guard_constraint_references(st, old, "rename")
     _guard_generated_references(st, old, "rename")
     new_cm = {(new if l == old else l): p for l, p in cm.items()}
-    _publish(
-        path,
-        {
-            "version": st["version"] + 1,
-            "op": "rename-column",
-            "key": st["key"],
-            "schema": st.get("schema"),
-            "colmap": new_cm,
-            "add": [],
-            "remove": [],
-        },
-    )
+    _commit(path, st, "rename-column", colmap=new_cm)
 
 
 def drop_column(path: str, name: str) -> None:
@@ -1141,18 +1208,7 @@ def drop_column(path: str, name: str) -> None:
         [f for f in sch.fields if f.name != phys]
     ).json()
     new_cm = {l: p for l, p in cm.items() if l != name}
-    _publish(
-        path,
-        {
-            "version": st["version"] + 1,
-            "op": "drop-column",
-            "key": st["key"],
-            "schema": new_schema,
-            "colmap": new_cm,
-            "add": [],
-            "remove": [],
-        },
-    )
+    _commit(path, st, "drop-column", schema=new_schema, colmap=new_cm)
 
 
 def _constraints(st: dict) -> dict:
@@ -1214,18 +1270,7 @@ def add_constraint(
         )
     _enforce_constraints(snapshot(spark, path), {name: expr})
     cons[name] = expr
-    _publish(
-        path,
-        {
-            "version": st["version"] + 1,
-            "op": "add-constraint",
-            "key": st["key"],
-            "schema": st.get("schema"),
-            "constraints": cons,
-            "add": [],
-            "remove": [],
-        },
-    )
+    _commit(path, st, "add-constraint", constraints=cons)
 
 
 def drop_constraint(path: str, name: str) -> None:
@@ -1237,18 +1282,7 @@ def drop_constraint(path: str, name: str) -> None:
             f"no constraint {name!r} on {path}; defined: {sorted(cons)}"
         )
     del cons[name]
-    _publish(
-        path,
-        {
-            "version": st["version"] + 1,
-            "op": "drop-constraint",
-            "key": st["key"],
-            "schema": st.get("schema"),
-            "constraints": cons,
-            "add": [],
-            "remove": [],
-        },
-    )
+    _commit(path, st, "drop-constraint", constraints=cons)
 
 
 def _generated(st: dict) -> dict:
@@ -1670,13 +1704,6 @@ def create(
     key by hand, and pv pruning works unchanged)."""
     if _list_log(path)[0]:
         raise RuntimeError(f"table already exists at {path}")
-    # The manifest stats (and merge's prune-join schema) are integral:
-    # fail at create time, not at first merge, for other key types.
-    ktype = dict(df.dtypes).get(key)
-    if ktype not in ("tinyint", "smallint", "int", "bigint"):
-        raise TypeError(
-            f"table key must be an integral column, got {key}: {ktype}"
-        )
     if generated:
         if key in generated:
             raise ValueError(
@@ -1697,7 +1724,7 @@ def create(
                     f"partition_by column {c!r} has type {dtypes[c]}; "
                     f"partition values must be JSON-scalar-safe {ok}"
                 )
-    _check_reserved_columns(df)
+    _check_new_table(df, key)
     adds = _write_data_files(
         df, path, key, n_files, partition_cols=partition_by
     )
@@ -1706,99 +1733,155 @@ def create(
         # schema from (the format stores stats, not a schema) — refuse
         # rather than commit an unreadable table.
         raise ValueError(f"refusing to create an empty table at {path}")
-    manifest = {
-        "version": 0,
-        "op": "create",
-        "key": key,
-        "schema": _schema_json(df),
-        "add": adds,
-        "remove": [],
-    }
-    if partition_by:
-        manifest["partition_by"] = list(partition_by)
-    if generated:
-        manifest["generated"] = dict(generated)
-    _publish(path, manifest)
-
-
-def append(df: DataFrame, path: str, n_files: int = 4) -> None:
-    """Commit new files; existing files untouched (blind append). The one
-    op that may EVOLVE the schema: extra columns in ``df`` widen the table
-    (recorded in this commit's manifest; older files NULL-fill on read),
-    while missing columns or type changes raise. Incoming columns are
-    LOGICAL names; on a column-mapped table they physicalize first (new
-    columns get fresh physical names recorded in this commit's colmap)."""
-    st = _state(path)
-    key = st["key"]
-    df = _apply_generated(df, st)
-    _enforce_constraints(df, _constraints(st))
-    df, cm2 = _to_physical(df, st)
-    schema = _evolve_schema(st, df)
-    adds = _write_data_files(
-        df, path, key, n_files, partition_cols=_require_partition_cols(st, df)
+    _commit(
+        path,
+        _new_state(key, df),
+        "create",
+        adds,
+        **({"partition_by": list(partition_by)} if partition_by else {}),
+        **({"generated": dict(generated)} if generated else {}),
     )
-    manifest = {
-        "version": st["version"] + 1,
-        "op": "append",
-        "key": key,
-        "schema": schema,
-        "add": adds,
-        "remove": [],
-    }
-    if cm2 is not None:
-        manifest["colmap"] = cm2
-    _publish(path, manifest)
 
 
-def append_with_retry(
-    df: DataFrame, path: str, n_files: int = 4, max_retries: int = 20
-) -> int:
-    """Optimistic-concurrency append — Delta's commit-retry loop with the
-    blind-append conflict rule: an append removes no files and depends on
-    no read state, so it logically conflicts with NO concurrent commit and
-    a lost version race is resolved by re-reading the log and
-    re-publishing at the next version. The data files are written exactly
-    ONCE; only the manifest publish retries, so a retry costs one log
-    listing plus one 200-byte JSON link attempt. Returns the committed
-    version.
+def append(df: DataFrame, path: str, n_files: int = 4) -> int:
+    """Blind append: commit new files, existing files untouched, and
+    return the committed version. The one op that may EVOLVE the schema:
+    extra columns in ``df`` widen the table (recorded in this commit's
+    manifest; older files NULL-fill on read), while missing columns or
+    type changes raise. Incoming columns are LOGICAL names; on a
+    column-mapped table they physicalize first (new columns get fresh
+    physical names recorded in this commit's colmap).
 
-    The one true conflict is concurrent SCHEMA evolution: if another
-    writer widened the table with a column this frame lacks, re-recording
-    this frame's schema would narrow the table for every later reader, so
-    the widening check re-runs against the fresh state on every attempt
-    and surfaces the mismatch as an error instead of retrying into it.
+    A lost version race retries (Delta's blind-append rule): an append
+    removes no files and depends on no read state, so it conflicts with
+    no concurrent data commit, and re-publishing the same files at the
+    next version is exact. The data files are written ONCE; a retry costs
+    one log replay plus one small manifest put. The body is shared with
+    :func:`append_exactly_once` (see :func:`_append`).
+
     delete/compact/merge deliberately do NOT retry: their rewrite
     decisions are derived from the live-file set they read, so a lost
     race invalidates the decision itself — the caller re-runs the whole
     operation against fresh state (Delta's rule for the same reason)."""
-    st = _state(path)
-    key = st["key"]
-    cm0 = _colmap(st)
-    cons0 = _constraints(st)
-    df = _apply_generated(df, st)
-    _enforce_constraints(df, cons0)
-    df, cm2 = _to_physical(df, st)
-    schema = _evolve_schema(st, df)
+    return _append(df, path, _state(path), n_files, "append")
+
+
+def append_exactly_once(
+    df: DataFrame,
+    path: str,
+    txn_version: int,
+    key: str,
+    n_files: int = 1,
+    app_id: str = "stream",
+) -> bool:
+    """Idempotent epoch append for streaming sinks — Delta's
+    ``txnAppId``/``txnVersion`` mechanism: the idempotence key
+    ``(app_id, txn_version)`` is METADATA INSIDE the commit, decoupled
+    from the log version the commit lands at. It runs :func:`append`'s
+    body (commit op ``stream-append``) plus a txn guard, and returns
+    False without writing anything when this app has already committed
+    this (or a later) txn_version — a replayed micro-batch (foreachBatch
+    redelivery after failure) becomes a no-op.
+
+    Decoupling matters (review finding, r12): the earlier version=epoch
+    scheme broke as soon as ANY other commit touched the table — a
+    compaction landing at version 4 made epoch 4's pre-check see
+    "already committed" and silently DROP the epoch's data. Here
+    maintenance commits (OPTIMIZE/DELETE/MERGE) interleave freely: the
+    epoch's commit just takes the next log version, and losing a version
+    race retries like any blind append until the txn check says a
+    CONCURRENT WRITER of the same epoch won — then it no-ops, orphaning
+    this attempt's files for vacuum. Last-txn state replays like the
+    schema (checkpoints roll it up), so the check is O(checkpoint
+    window). Logs written before the txn field carry no txn entries and
+    get no redelivery protection (none persist here).
+
+    With no table at ``path`` the epoch creates it, keyed on ``key``,
+    under :func:`create`'s guards; an existing table keeps its own key.
+    An empty first epoch commits nothing and returns False."""
+    try:
+        st = _state(path)
+    except RuntimeError:  # no table yet: this epoch is the create
+        st = None
+    txn = {"app": app_id, "version": int(txn_version)}
+    return _append(
+        df, path, st, n_files, "stream-append", key=key, txn=txn
+    ) is not None
+
+
+# Consecutive lost version races an append tolerates before it gives up.
+_APPEND_ATTEMPTS = 64
+
+
+def _txn_done(st: dict, txn: dict | None) -> bool:
+    """Whether ``txn``'s app has committed its epoch, or a later one, by
+    state ``st``."""
+    last = (st.get("txns") or {}).get(txn["app"]) if txn else None
+    return last is not None and last >= txn["version"]
+
+
+def _append(
+    df: DataFrame,
+    path: str,
+    st: dict | None,
+    n_files: int,
+    op: str,
+    key: str | None = None,
+    txn: dict | None = None,
+) -> int | None:
+    """The one append body: write ``df``'s files once against state
+    ``st`` (None: no table yet, so this commit creates it on ``key``),
+    then publish the ``op`` commit, retrying each lost version race
+    against the fresh state. Returns the committed version, or None when
+    nothing commits: ``txn`` (``{"app", "version"}``, recorded in the
+    manifest) is already committed, or a new table would be empty.
+
+    A race lost to a metadata change aborts instead of retrying: a
+    concurrent constraint change (this frame was validated against the
+    old constraints) or column-mapping change (the written files and
+    colmap additions were derived under the old mapping; re-publishing
+    them could resurrect a dropped column or stamp a stale mapping). A
+    concurrent widening re-runs the widening check, which raises when
+    this frame lacks a column another writer added — re-recording its
+    schema would narrow the table for every later reader."""
+    if st is None:
+        _check_new_table(df, key)
+        st = _new_state(key, df)
+        fields = {}
+    else:
+        if _txn_done(st, txn):
+            return None
+        df = _apply_generated(df, st)
+        _enforce_constraints(df, _constraints(st))
+        df, cm2 = _to_physical(df, st)
+        fields = {"schema": _evolve_schema(st, df)}
+        if cm2 is not None:
+            fields["colmap"] = cm2
+    cm0, cons0 = _colmap(st), _constraints(st)
     adds = _write_data_files(
-        df, path, key, n_files, partition_cols=_require_partition_cols(st, df)
+        df,
+        path,
+        st["key"],
+        n_files,
+        partition_cols=_require_partition_cols(st, df),
     )
-    version = st["version"] + 1
-    for _ in range(max_retries + 1):
+    if not adds and st["version"] < 0:
+        # create() refuses a zero-file v0 as unreadable; an EMPTY first
+        # epoch must not sneak one in. Skipping the publish is safe: the
+        # epoch contributes nothing, and a redelivery replays the same
+        # empty frame — idempotence holds vacuously without a watermark.
+        return None
+    if txn:
+        fields["txn"] = txn
+    for _ in range(_APPEND_ATTEMPTS):
         try:
-            manifest = {
-                "version": version,
-                "op": "append",
-                "key": key,
-                "schema": schema,
-                "add": adds,
-                "remove": [],
-            }
-            if cm2 is not None:
-                manifest["colmap"] = cm2
-            _publish(path, manifest)
-            return version
+            return _commit(path, st, op, adds, **fields)
         except RuntimeError:
             st = _state(path)
+            if _txn_done(st, txn):
+                # a concurrent writer committed this epoch; ours orphans
+                # invisibly (vacuum reclaims it) — idempotent no-op.
+                return None
             if _constraints(st) != cons0:
                 raise RuntimeError(
                     f"append at {path} lost a race to a concurrent "
@@ -1806,21 +1889,14 @@ def append_with_retry(
                     "are enforced on this frame"
                 )
             if _colmap(st) != cm0:
-                # a concurrent RENAME commutes with a blind append
-                # (physical schema unchanged) — but our already-written
-                # files and colmap additions were derived under the OLD
-                # mapping; re-publishing them could resurrect a dropped
-                # column or stamp a stale mapping. Metadata conflicts
-                # abort (Delta's rule); the caller re-runs.
                 raise RuntimeError(
                     f"append at {path} lost a race to a concurrent "
                     "column-mapping change (rename/drop); re-run the "
                     "append against the new column names"
                 )
-            schema = _evolve_schema(st, df)  # concurrent widening check
-            version = st["version"] + 1
+            fields["schema"] = _evolve_schema(st, df)
     raise RuntimeError(
-        f"append lost {max_retries + 1} consecutive version races at {path}"
+        f"{op} lost {_APPEND_ATTEMPTS} consecutive version races at {path}"
     )
 
 
@@ -1912,28 +1988,12 @@ def snapshot(
     st = _state(path, version)
     live_all = st["live"]
     live = live_all
-    if skip_equals and _colmap(st):
-        cm = _colmap(st)
-        unknown = [c for c in skip_equals if c not in cm]
-        if unknown:
-            raise ValueError(
-                f"skip_equals column(s) {unknown} not in table columns "
-                f"{sorted(cm)}"
-            )
-        skip_equals = {cm[c]: v for c, v in skip_equals.items()}
-    if skip_where and _colmap(st):
-        # callers predicate on LOGICAL names; file stats are keyed by the
-        # stable physical names — translate once, here, then everything
-        # below (stats match + row filter on the physical frame) is the
-        # identity-table code path unchanged
-        cm = _colmap(st)
-        unknown = [c for c in skip_where if c not in cm]
-        if unknown:
-            raise ValueError(
-                f"skip_where column(s) {unknown} not in table columns "
-                f"{sorted(cm)}"
-            )
-        skip_where = {cm[c]: rng for c, rng in skip_where.items()}
+    # callers predicate on LOGICAL names; file stats are keyed by the
+    # stable physical names — translate once, here, then everything below
+    # (stats match + row filter on the physical frame) is the
+    # identity-table code path unchanged
+    skip_equals = _physical_cols(st, "skip_equals", skip_equals)
+    skip_where = _physical_cols(st, "skip_where", skip_where)
     # DECLARED-PARTITION pruning runs FIRST (r16): an add entry's "pv"
     # records the file's single partition tuple exactly, so dropping on
     # it needs no stats consult, no hash job, no bloom read — the
@@ -2278,14 +2338,7 @@ def delete(
         data_cols = [
             c for c in logical.columns if c not in ("__file_key", "__pos")
         ]
-        manifest = {
-            "version": st["version"] + 1,
-            "op": "delete-dv" if mode == "dv" else "delete",
-            "key": key,
-            "schema": st.get("schema"),
-            "add": [],
-            "remove": [],
-        }
+        adds, removes, fields = [], [], {}
         if mode == "dv":
             new_pos = hits.select(
                 F.col("__file_key").alias("file_key"),
@@ -2304,7 +2357,7 @@ def delete(
                 r["file_key"]: int(r["count"])
                 for r in all_pos.groupBy("file_key").count().collect()
             }
-            manifest[_DV] = {
+            fields[_DV] = {
                 e["path"]: {
                     "path": dv_rel,
                     "rows": totals[_basename(e["path"])],
@@ -2318,23 +2371,24 @@ def delete(
             kept, _ = _to_physical(
                 hit_df.filter(f"({cond}) IS NOT TRUE"), st
             )
-            manifest["add"] = _write_data_files(
+            adds = _write_data_files(
                 kept,
                 path,
                 key,
                 n_files,
                 partition_cols=_require_partition_cols(st, kept),
             )
-            manifest["remove"] = sorted(e["path"] for e in hit_entries)
+            removes = sorted(e["path"] for e in hit_entries)
         if cdc:
             # journal files store PHYSICAL names like the data files do
             # (the feeds translate once, at their output boundary)
             journal, _ = _to_physical(hits.select(*data_cols), st)
-            manifest["cdc"] = _write_cdc_files(
+            fields["cdc"] = _write_cdc_files(
                 journal.withColumn("change_type", F.lit("delete")),
                 path,
             )
-        _publish(path, manifest)
+        op = "delete-dv" if mode == "dv" else "delete"
+        _commit(path, st, op, adds, removes, **fields)
     finally:
         if persisted:
             hits.unpersist()
@@ -2393,15 +2447,7 @@ def compact(
                 "compact(where=...) requires a table with declared "
                 "partition columns (create(partition_by=[...]))"
             )
-        if _colmap(st):
-            cm = _colmap(st)
-            unknown = [c for c in where if c not in cm]
-            if unknown:
-                raise ValueError(
-                    f"where column(s) {unknown} not in table columns "
-                    f"{sorted(cm)}"
-                )
-            where = {cm[c]: v for c, v in where.items()}
+        where = _physical_cols(st, "where", where)
         bad = [c for c in where if c not in pb]
         if bad:
             raise ValueError(
@@ -2433,15 +2479,7 @@ def compact(
             "files_before": 0,
             "carried": len(carried_scope),
         }
-    if bloom_by and _colmap(st):
-        cm = _colmap(st)
-        unknown = [c for c in bloom_by if c not in cm]
-        if unknown:
-            raise ValueError(
-                f"bloom_by column(s) {unknown} not in table columns "
-                f"{sorted(cm)}"
-            )
-        bloom_by = [cm[c] for c in bloom_by]
+    bloom_by = _physical_cols(st, "bloom_by", bloom_by)
     # DV-aware read: the rewrite MATERIALIZES deletion vectors away —
     # rewritten files carry no vector and the old sidecars age out of the
     # live set with the files they described
@@ -2452,17 +2490,7 @@ def compact(
             raise ValueError(
                 f"zorder_by takes exactly two columns, got {zorder_by}"
             )
-        if _colmap(st):
-            # callers name LOGICAL columns; the physical frame, the
-            # manifest stats, and the rewrite are all physical
-            cm = _colmap(st)
-            unknown = [c for c in zorder_by if c not in cm]
-            if unknown:
-                raise ValueError(
-                    f"zorder_by column(s) {unknown} not in table columns "
-                    f"{sorted(cm)}"
-                )
-            zorder_by = [cm[c] for c in zorder_by]
+        zorder_by = _physical_cols(st, "zorder_by", zorder_by)
         dtypes = dict(snap.dtypes)
         bad = [
             c
@@ -2531,128 +2559,19 @@ def compact(
                 f"bloom_by column(s) {missing} not in table columns"
             )
         _write_bloom_sidecar(spark, path, _schema_of(st), adds, bloom_by)
-    manifest = {
-        "version": st["version"] + 1,
-        "op": "compact",
-        "key": key,
-        "schema": st.get("schema"),
-        "add": adds,
-        "remove": sorted(f["path"] for f in live),
-    }
-    if zorder_by:
-        manifest["zorder_by"] = list(zorder_by)
-    _publish(path, manifest)
+    _commit(
+        path,
+        st,
+        "compact",
+        adds,
+        sorted(f["path"] for f in live),
+        **({"zorder_by": list(zorder_by)} if zorder_by else {}),
+    )
     return {
         "rewritten": len(live),
         "files_before": len(live),
         "carried": len(carried_scope),
     }
-
-
-def append_exactly_once(
-    df: DataFrame,
-    path: str,
-    txn_version: int,
-    key: str,
-    n_files: int = 1,
-    app_id: str = "stream",
-) -> bool:
-    """Idempotent epoch append for streaming sinks — Delta's
-    ``txnAppId``/``txnVersion`` mechanism: the idempotence key
-    ``(app_id, txn_version)`` is METADATA INSIDE the commit, decoupled
-    from the log version the commit lands at. Returns False without
-    writing anything when this app has already committed this (or a
-    later) txn_version — a replayed micro-batch (foreachBatch redelivery
-    after failure) becomes a no-op.
-
-    Decoupling matters (review finding, r12): the earlier version=epoch
-    scheme broke as soon as ANY other commit touched the table — a
-    compaction landing at version 4 made epoch 4's pre-check see
-    "already committed" and silently DROP the epoch's data. Here
-    maintenance commits (OPTIMIZE/DELETE/MERGE) interleave freely: the
-    epoch's commit just takes the next log version, and losing a version
-    race to one retries like any blind append (data files written once)
-    until the txn check says a CONCURRENT WRITER of the same epoch won —
-    then it no-ops, orphaning this attempt's files for vacuum. Last-txn
-    state replays like the schema (checkpoints roll it up), so the check
-    is O(checkpoint window). Logs written before the txn field carry no
-    txn entries and get no redelivery protection (none persist here)."""
-    try:
-        st = _state(path)
-    except RuntimeError:  # no table yet: this epoch is the create
-        st = None
-    last = (st or {}).get("txns", {}).get(app_id)
-    if last is not None and last >= txn_version:
-        return False
-    if st is None:
-        # The table-creation branch must enforce the same guards as
-        # create() (ADVICE r14, low): a reserved column name arriving via
-        # the first epoch would later be clobbered by DV scans / CDC
-        # feeds, and a non-integral key breaks the manifest stats and
-        # merge's prune join at first use.
-        _check_reserved_columns(df)
-        ktype = dict(df.dtypes).get(key)
-        if ktype not in ("tinyint", "smallint", "int", "bigint"):
-            raise TypeError(
-                f"table key must be an integral column, got {key}: {ktype}"
-            )
-    cm0 = _colmap(st) if st else None
-    cons0 = _constraints(st) if st else {}
-    if st:
-        df = _apply_generated(df, st)
-        _enforce_constraints(df, cons0)
-    cm2 = None
-    if st:
-        df, cm2 = _to_physical(df, st)
-    schema = _evolve_schema(st, df) if st else _schema_json(df)
-    adds = _write_data_files(
-        df,
-        path,
-        key,
-        n_files,
-        partition_cols=_require_partition_cols(st, df) if st else None,
-    )
-    version = st["version"] + 1 if st else 0
-    if not adds and version == 0:
-        # create() refuses a zero-file v0 as unreadable; an EMPTY first
-        # epoch must not sneak one in. Skipping the publish is safe: the
-        # epoch contributes nothing, and a redelivery replays the same
-        # empty frame — idempotence holds vacuously without a watermark.
-        return False
-    for _ in range(64):
-        try:
-            _publish(
-                path,
-                {
-                    "version": version,
-                    "op": "stream-append",
-                    "key": key,
-                    "schema": schema,
-                    "txn": {"app": app_id, "version": int(txn_version)},
-                    "add": adds,
-                    "remove": [],
-                    **({"colmap": cm2} if cm2 is not None else {}),
-                },
-            )
-            return True
-        except RuntimeError:
-            st = _state(path)
-            last = st.get("txns", {}).get(app_id)
-            if last is not None and last >= txn_version:
-                # a concurrent writer committed this epoch; ours orphans
-                # invisibly (vacuum reclaims it) — idempotent no-op.
-                return False
-            if _colmap(st) != cm0 or _constraints(st) != cons0:
-                raise RuntimeError(
-                    f"epoch append at {path} lost a race to a concurrent"
-                    " column-mapping or constraint change; re-run against"
-                    " the new table metadata"
-                )
-            schema = _evolve_schema(st, df)
-            version = st["version"] + 1
-    raise RuntimeError(
-        f"epoch append lost 64 consecutive version races at {path}"
-    )
 
 
 def _clause_cond(cond: str | None, cm: dict | None):
@@ -3059,14 +2978,7 @@ def merge(
             ):
                 raise
             raise ValueError(msg) from None
-        manifest = {
-            "version": st["version"] + 1,
-            "op": "merge",
-            "key": key,
-            "schema": st.get("schema"),
-            "add": adds,
-            "remove": sorted(hit_paths),
-        }
+        fields = {}
         if cdc:
             cm_now = _colmap(st)
             mcond = _clause_cond(matched_condition, cm_now)
@@ -3101,8 +3013,8 @@ def merge(
                         "__t.*", F.lit("delete").alias("change_type")
                     )
                 )
-            manifest["cdc"] = _write_cdc_files(changes, path)
-        _publish(path, manifest)
+            fields["cdc"] = _write_cdc_files(changes, path)
+        _commit(path, st, "merge", adds, sorted(hit_paths), **fields)
     finally:
         if persist_join:
             joined.unpersist()
@@ -3173,14 +3085,7 @@ def _merge_dv(
             partition_cols=_require_partition_cols(st, new_rows),
             bounds=bounds,
         )
-        manifest = {
-            "version": st["version"] + 1,
-            "op": "merge-dv",
-            "key": key,
-            "schema": st.get("schema"),
-            "add": adds,
-            "remove": [],
-        }
+        fields = {}
         if dv_entries:
             old_map = {
                 e["path"]: e[_DV] for e in dv_entries if e.get(_DV)
@@ -3199,7 +3104,7 @@ def _merge_dv(
                 r["file_key"]: int(r["count"])
                 for r in all_pos.groupBy("file_key").count().collect()
             }
-            manifest[_DV] = {
+            fields[_DV] = {
                 e["path"]: {
                     "path": dv_rel,
                     "rows": totals[_basename(e["path"])],
@@ -3219,8 +3124,8 @@ def _merge_dv(
             ).unionByName(
                 ins.withColumn("change_type", F.lit("insert"))
             )
-            manifest["cdc"] = _write_cdc_files(changes, path)
-        _publish(path, manifest)
+            fields["cdc"] = _write_cdc_files(changes, path)
+        _commit(path, st, "merge-dv", adds, **fields)
     finally:
         if matched is not None:
             matched.unpersist()
@@ -3525,23 +3430,18 @@ def clone(src_path: str, dst_path: str, version: int | None = None) -> dict:
                 "path": os.path.join(src_abs, e[_DV]["path"]),
             }
         adds.append(ne)
-    _publish(
+    _commit(
         dst_path,
-        {
-            "version": 0,
-            "op": "clone",
-            "key": st["key"],
-            "schema": st.get("schema"),
-            # the logical view and its invariants travel with the files
-            "colmap": st.get("colmap"),
-            "constraints": st.get("constraints"),
-            "partition_by": st.get("partition_by"),
-            "generated": st.get("generated"),
-            "source": src_abs,
-            "source_version": st["version"],
-            "add": adds,
-            "remove": [],
-        },
+        {**st, "version": -1},  # the clone's v0, on the source's key/schema
+        "clone",
+        adds,
+        # the logical view and its invariants travel with the files
+        colmap=st.get("colmap"),
+        constraints=st.get("constraints"),
+        partition_by=st.get("partition_by"),
+        generated=st.get("generated"),
+        source=src_abs,
+        source_version=st["version"],
     )
     return {
         "source_version": st["version"],
@@ -3615,27 +3515,25 @@ def restore(path: str, version: int) -> dict:
         dv_old = old_by_path[p].get(_DV)
         if dv_now != dv_old:
             dv_changes[p] = dv_old  # None clears a later-added vector
-    manifest = {
-        "version": st_now["version"] + 1,
-        "op": "restore",
-        "key": st_old["key"],
-        "schema": st_old.get("schema"),
+    new_version = _commit(
+        path,
+        st_now,
+        "restore",
+        adds,
+        removes,
+        schema=st_old.get("schema"),
         # ALWAYS present, explicitly null when the restored version
         # predates column mapping: replay honors an explicit null as a
         # rewind to identity — omitting the key would leave the NEWER
         # mapping in force and serve restored files under wrong names
-        "colmap": st_old.get("colmap"),
-        "constraints": st_old.get("constraints"),
-        "restored_version": version,
-        "add": adds,
-        "remove": removes,
-    }
-    if dv_changes:
-        manifest[_DV] = dv_changes
-    _publish(path, manifest)
+        colmap=st_old.get("colmap"),
+        constraints=st_old.get("constraints"),
+        restored_version=version,
+        **({_DV: dv_changes} if dv_changes else {}),
+    )
     return {
         "restored_version": version,
-        "new_version": manifest["version"],
+        "new_version": new_version,
         "readded": len(adds),
         "removed": len(removes),
         "dv_changed": len(dv_changes),

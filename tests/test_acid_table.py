@@ -3,6 +3,7 @@ concurrency, stats-based file pruning, time travel (SURVEY.md §2L)."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -677,7 +678,7 @@ def test_append_with_retry_survives_version_race(
         return adds
 
     monkeypatch.setattr(acid_table, "_write_data_files", racing_write)
-    v = acid_table.append_with_retry(mine, path, n_files=1)
+    v = acid_table.append(mine, path, n_files=1)
     assert v == 2  # lost v1 to the competitor, committed at v2
     assert acid_table.snapshot(spark, path).count() == 3 * n0
     assert [m["op"] for m in acid_table.history(path)] == [
@@ -714,7 +715,7 @@ def test_append_with_retry_surfaces_concurrent_widening(
 
     monkeypatch.setattr(acid_table, "_write_data_files", racing_write)
     with pytest.raises(ValueError, match="missing table column"):
-        acid_table.append_with_retry(mine, path, n_files=1)
+        acid_table.append(mine, path, n_files=1)
 
 
 def test_append_with_retry_parallel_writers_all_commit(
@@ -731,7 +732,7 @@ def test_append_with_retry_parallel_writers_all_commit(
     n0 = t.count()
 
     def write(i: int) -> int:
-        return acid_table.append_with_retry(
+        return acid_table.append(
             t.withColumn("o_orderkey", F.col("o_orderkey") + 1000 * (i + 1)),
             path,
             n_files=1,
@@ -3721,3 +3722,117 @@ def test_stats_column_max_exact_and_conservative(spark, sf_dir, tmp_path):
     # have deleted the extreme rows) -> None, never a stale answer
     acid_table.delete(spark, path, "o_orderkey % 5 = 0", mode="dv")
     assert acid_table.stats_column_max(path, "o_totalprice") is None
+
+
+def _range_frame(spark, lo: int, hi: int):
+    return spark.range(lo, hi).select(
+        F.col("id").alias("k"),
+        (F.col("id") * 2).alias("v"),
+        F.concat(F.lit("s"), F.col("id").cast("string")).alias("s"),
+    )
+
+
+def test_commit_paths_pin_their_job_counts(spark, tmp_path, job_ids):
+    """Every op commits through one commit helper and every append
+    through one body; neither adds a Spark job. Pinned on ``spark.range``
+    inputs: a 4-file create and a 4-file append run 3 jobs each, a
+    summary-path MERGE (4000-row target) 7, an exactly-once epoch 1, and
+    its redelivery none."""
+
+    def frame(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 2).alias("v")
+        )
+
+    path = str(tmp_path / "t")
+    jobs = job_ids(lambda: acid_table.create(frame(0, 4000), path, "k", n_files=4))
+    assert len(jobs) == 3
+    jobs = job_ids(lambda: acid_table.append(frame(4000, 8000), path, n_files=4))
+    assert len(jobs) == 3
+
+    target = str(tmp_path / "m")
+    acid_table.create(frame(0, 4000), target, "k", n_files=4)
+    src = spark.range(100, 3000, 7).select(
+        F.col("id").alias("k"), F.lit(-1).cast("bigint").alias("v")
+    )
+    jobs = job_ids(lambda: acid_table.merge(spark, src, target, n_files=4))
+    assert len(jobs) == 7
+
+    sink = str(tmp_path / "e")
+    assert acid_table.append_exactly_once(frame(0, 100), sink, 0, "k")
+    epoch = frame(100, 200)
+    jobs = job_ids(lambda: acid_table.append_exactly_once(epoch, sink, 1, "k"))
+    assert len(jobs) == 1
+    jobs = job_ids(lambda: acid_table.append_exactly_once(epoch, sink, 1, "k"))
+    assert jobs == []
+
+
+def test_every_op_writes_its_manifest_fields_and_carries_key_and_schema(
+    spark, tmp_path
+):
+    """Walk one table through every committing op and pin each manifest:
+    its op name, its exact key set, its version (the one after the state
+    the op read), and the ``key`` and ``schema`` it carries over from that
+    state — except where the op itself sets the schema (a column drop, a
+    restore). A clone's v0 carries its source's."""
+    path = str(tmp_path / "t")
+    base = {"version", "op", "key", "schema", "add", "remove", "ts"}
+    acid_table.create(_range_frame(spark, 0, 2000), path, "k", n_files=2)
+    acid_table.append(_range_frame(spark, 2000, 2100), path, n_files=1)
+    acid_table.append_exactly_once(_range_frame(spark, 2100, 2200), path, 0, "k")
+    acid_table.delete(spark, path, "k % 10 = 0")
+    upd = _range_frame(spark, 0, 3000).filter("k % 7 = 1").withColumn(
+        "v", F.lit(-1).cast("bigint")
+    )
+    acid_table.merge(spark, upd, path, n_files=2)
+    acid_table.merge(spark, upd.withColumn("v", F.lit(-2).cast("bigint")),
+                     path, n_files=2, mode="dv")
+    acid_table.compact(spark, path, n_files=1)
+    acid_table.add_constraint(spark, path, "nonneg", "k >= 0")
+    acid_table.drop_constraint(path, "nonneg")
+    acid_table.rename_column(path, "v", "w")
+    acid_table.drop_column(path, "s")
+    acid_table.restore(path, 3)
+    expected = [
+        ("create", set()),
+        ("append", set()),
+        ("stream-append", {"txn"}),
+        ("delete", set()),
+        ("merge", set()),
+        ("merge-dv", {"dv"}),
+        ("compact", set()),
+        ("add-constraint", {"constraints"}),
+        ("drop-constraint", {"constraints"}),
+        ("rename-column", {"colmap"}),
+        ("drop-column", {"colmap"}),
+        ("restore", {"colmap", "constraints", "restored_version"}),
+    ]
+    ms = acid_table.history(path)
+    assert [(m["op"], set(m) - base) for m in ms] == expected
+    assert all(base <= set(m) for m in ms)
+    assert ms[0]["key"] == "k" and ms[0]["version"] == 0
+    for m in ms[1:]:
+        prior = acid_table._state(path, m["version"] - 1)
+        assert m["key"] == prior["key"] == "k", m["op"]
+        if m["op"] == "drop-column":
+            dropped = {f["name"] for f in json.loads(prior["schema"])["fields"]}
+            kept = {f["name"] for f in json.loads(m["schema"])["fields"]}
+            assert dropped - kept == {"s"}
+        elif m["op"] == "restore":
+            assert m["schema"] == acid_table._state(path, 3)["schema"]
+        else:
+            assert m["schema"] == prior["schema"], m["op"]
+    assert ms[2]["txn"] == {"app": "stream", "version": 0}
+    assert ms[-1]["restored_version"] == 3 and ms[-1]["colmap"] is None
+
+    dst = str(tmp_path / "c")
+    acid_table.clone(path, dst)
+    (m,) = acid_table.history(dst)
+    extra = {"colmap", "constraints", "partition_by", "generated", "source",
+             "source_version"}
+    assert m["op"] == "clone" and set(m) == base | extra
+    src_state = acid_table._state(path)
+    assert (m["version"], m["key"], m["schema"]) == (
+        0, src_state["key"], src_state["schema"]
+    )
+    assert m["source_version"] == src_state["version"]

@@ -179,3 +179,35 @@ def test_acid_table_writes_only_through_its_staging_helper():
         if not any(a <= n <= b for a, b in spans)
     ]
     assert not offenders, f"parquet written outside acid_table.{_STAGER} at {offenders}"
+
+
+# Every commit of the ACID table goes through one commit helper, the
+# only caller of the log publish.
+_COMMITTER = "_commit"
+_PUBLISH_CALL = r"(?<!def )\b_publish\("
+
+
+def test_acid_table_publishes_only_through_its_commit_helper():
+    package = os.path.join(ROOT, "iot_data_pipeline_spark")
+    offenders = []
+    calls = 0
+    for dirpath, _, files in os.walk(package):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            full = os.path.join(dirpath, fname)
+            with open(full, encoding="utf-8") as fh:
+                src = fh.read()
+            spans = [
+                (n.lineno, n.end_lineno)
+                for n in ast.walk(ast.parse(src))
+                if isinstance(n, ast.FunctionDef) and n.name == _COMMITTER
+            ]
+            in_acid_table = full == os.path.join(_SOURCES, "acid_table.py")
+            for n in _match_lines(_PUBLISH_CALL, src):
+                if in_acid_table and any(a <= n <= b for a, b in spans):
+                    calls += 1
+                else:
+                    offenders.append(f"{os.path.relpath(full, ROOT)}:{n}")
+    assert calls == 1, f"acid_table.{_COMMITTER} publishes {calls} times"
+    assert not offenders, f"_publish called outside acid_table.{_COMMITTER} at {offenders}"

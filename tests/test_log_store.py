@@ -133,7 +133,7 @@ def test_racy_store_parallel_writers_linear_versions(
     n0 = t.count()
 
     def write(i: int) -> int:
-        return acid_table.append_with_retry(
+        return acid_table.append(
             t.withColumn("o_orderkey", F.col("o_orderkey") + 1000 * (i + 1)),
             path,
             n_files=1,
@@ -364,11 +364,11 @@ def test_constraint_rejection_is_atomic_through_racy_store(
     n_data = len(os.listdir(os.path.join(path, "data")))
     bad = t.withColumn("o_totalprice", -F.col("o_totalprice")).limit(10)
     with pytest.raises(ValueError, match="rejected atomically"):
-        acid_table.append_with_retry(bad, path)
+        acid_table.append(bad, path)
     assert acid_table.head(path) == 1
     assert len(os.listdir(os.path.join(path, "data"))) == n_data
     # valid append still lands through the lagging listing
-    v = acid_table.append_with_retry(
+    v = acid_table.append(
         t.withColumn("o_orderkey", F.col("o_orderkey") + 10_000_000),
         path,
     )
@@ -409,7 +409,7 @@ def test_constraint_rejection_is_atomic_through_racy_store(
         acid_table, "_publish", side_effect=constraint_then_publish
     ):
         with pytest.raises(RuntimeError, match="constraint change"):
-            acid_table.append_with_retry(
+            acid_table.append(
                 t.withColumn(
                     "o_orderkey", F.col("o_orderkey") + 20_000_000
                 ),
@@ -430,7 +430,7 @@ def test_conflict_matrix_maintenance_ops_abort_and_rerun(
     (2) the winner's commit is intact and the snapshot readable; (3) the
     loser's orphaned files are invisible to readers; (4) RE-RUNNING the
     loser against fresh state succeeds (or no-ops legitimately). Blind
-    appends are the one retrying op (append_with_retry's own tests)."""
+    appends are the one retrying op (see the append race tests)."""
     import unittest.mock as mock
 
     def fresh_table(name):

@@ -8,6 +8,10 @@ property the optimization's correctness rests on, not the speed.
 
 from __future__ import annotations
 
+import math
+import random
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -58,6 +62,105 @@ def test_mixture_bounds_properties():
     assert _mixture_bounds([(3, 3, 10)], 4) == [3]
     assert _mixture_bounds([(0, 99, 100)], 1) == []
     assert _mixture_bounds([(None, None, 0)], 4) == []
+
+
+def _quadratic_mixture_bounds(segments, n):
+    """The O(segments²) form of ``_mixture_bounds``, kept as the reference:
+    for every strip between consecutive events it re-sums the density of
+    every segment covering the strip."""
+    segs = [
+        (int(lo), int(hi), float(w))
+        for lo, hi, w in segments
+        if w and w > 0 and lo is not None and hi is not None and lo <= hi
+    ]
+    if n <= 1 or not segs:
+        return []
+    events = sorted({e for lo, hi, _ in segs for e in (lo, hi + 1)})
+    total = sum(w for _, _, w in segs)
+    targets = [total * i / n for i in range(1, n)]
+    bounds = []
+    acc = 0.0
+    ti = 0
+    for a, b in zip(events, events[1:]):
+        dens = sum(
+            w / (hi + 1 - lo) for lo, hi, w in segs if lo <= a and b <= hi + 1
+        )
+        strip = dens * (b - a)
+        while ti < len(targets) and acc + strip >= targets[ti] and strip > 0:
+            x = a + (targets[ti] - acc) / dens if dens > 0 else a
+            bounds.append(min(math.floor(x), b - 1))
+            ti += 1
+        acc += strip
+    out = []
+    for bd in bounds:
+        if not out or bd > out[-1]:
+            out.append(bd)
+    return out
+
+
+def _bucket_masses(segs, bounds):
+    """Mixture mass of each bucket ``bounds[i-1] < k <= bounds[i]``."""
+
+    def cdf(x):
+        return sum(
+            w * min(max(x - lo + 1, 0), hi - lo + 1) / (hi - lo + 1)
+            for lo, hi, w in segs
+        )
+
+    c = [cdf(b) for b in bounds]
+    total = sum(w for _, _, w in segs)
+    return [hi - lo for lo, hi in zip([0.0] + c, c + [total])]
+
+
+def test_mixture_bounds_sweep_matches_quadratic_bucket_masses():
+    """The sweep line must split the mixture like the quadratic reference.
+    Float summation order may move a bound by one key (or across a gap of
+    zero mass), so the test compares bucket masses, with a tolerance of
+    one key's worst-case mass, not the bounds themselves."""
+    rng = random.Random(20261019)
+    for _ in range(2000):
+        segs = []
+        for _ in range(rng.randint(1, 30)):
+            lo = rng.randint(-(10**6), 10**6)
+            span = rng.choice([0, rng.randint(0, 100), rng.randint(0, 10**5)])
+            segs.append((lo, lo + span, rng.randint(1, 10**4)))
+        n = rng.randint(2, 16)
+        got = _mixture_bounds(segs, n)
+        ref = _quadratic_mixture_bounds(segs, n)
+        assert len(got) == len(ref), (segs, n, got, ref)
+        tol = sum(w / (hi - lo + 1) for lo, hi, w in segs) + 1e-9 * sum(
+            w for *_, w in segs
+        )
+        for m_got, m_ref in zip(
+            _bucket_masses(segs, got), _bucket_masses(segs, ref)
+        ):
+            assert abs(m_got - m_ref) <= tol, (segs, n, got, ref)
+
+
+def test_mixture_bounds_keeps_sparse_mass_past_a_dense_point():
+    """A wide sparse segment (a hashed key's full range) overlapping dense
+    point masses: their densities differ by more than a double's
+    precision, so an uncompensated running sum loses the wide segment's
+    density once a point is added and removed, and finds no bounds."""
+    segs = [(0, 2**62, 10**6), (5, 5, 10**4), (7, 7, 10**4)]
+    got = _mixture_bounds(segs, 4)
+    ref = _quadratic_mixture_bounds(segs, 4)
+    assert len(got) == 3
+    assert _bucket_masses(segs, got) == pytest.approx(_bucket_masses(segs, ref))
+
+
+def test_mixture_bounds_10k_segments_under_a_second():
+    """A MERGE that hits 10⁴ files derives its bounds from 10⁴ segments;
+    the sweep keeps that well under a second of driver time."""
+    rng = random.Random(7)
+    segs = [
+        (k * 10, k * 10 + rng.randint(0, 30), rng.randint(1, 1000))
+        for k in range(10**4)
+    ]
+    t0 = time.perf_counter()
+    bounds = _mixture_bounds(segs, 64)
+    assert time.perf_counter() - t0 < 1.0
+    assert len(bounds) == 63 and bounds == sorted(bounds)
 
 
 def test_merge_bounds_layout_matches_sampled_layout(spark, tmp_path):
