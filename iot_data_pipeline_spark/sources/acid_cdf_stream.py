@@ -11,10 +11,11 @@ every commit's row-level deltas tagged (``change_type``,
 exactly-once across restarts.
 
 Micro-batch = COMMIT RANGE: offsets are ``{"version": v}`` (the last
-commit consumed), ``latestOffset`` is the table head resolved through the
-checkpoint-bounded ``_state`` replay, and ``partitions(start, end)``
-expands the range ``(start, end]`` into ONE INPUT PARTITION PER FILE —
-journal slivers for cdc-journaled commits, the added data files for
+commit consumed), ``latestOffset`` is the checkpoint-bounded
+``acid_table.head``, and ``partitions(start, end)`` turns
+``acid_table._feed_plan`` of the range ``(start, end]`` — the same plan
+the batch ``table_changes_journal`` reads — into ONE INPUT PARTITION PER
+FILE: journal slivers for cdc-journaled commits, the added data files for
 appends (their files ARE the inserts — Delta's dataChange rule),
 nothing for compactions. Executors read each file directly with pyarrow
 (no SparkSession on that side; the DataSource API's contract) and emit
@@ -39,10 +40,11 @@ a monotone ``_admission/`` sidecar) and the availableNow caveat.
 ``.option("admissionAnchorId", ...)`` separates sidecar anchors when
 several rate-limited streams consume one table.
 
-Failure semantics: a commit in the range written without ``cdc=True``
-(unjournaled delete/merge) or whose journal files vacuum already
-reclaimed raises the same curated errors as the batch feed — the source
-never silently skips deltas.
+Failure semantics: the plan is the batch feed's, so a commit in the
+range written without ``cdc=True`` (unjournaled delete/merge), a restore,
+a column-mapping change, a feed file vacuum already reclaimed and a
+commit the listing hides raise exactly the batch feed's errors — the
+source never silently skips deltas.
 
 WORKER-PROCESS DELIVERY: Spark's ``PythonStreamingSourceRunner`` (the
 driver-side planner worker that unpickles the DataSource and runs
@@ -94,6 +96,17 @@ def _ensure_pkg(pkg_parent: str) -> None:
         sys.path.insert(0, pkg_parent)
 
 
+def _table_path(options: dict) -> str:
+    """The table path option: ``.load(path)`` or ``tablePath``."""
+    path = options.get("path") or options.get("tablepath")
+    if not path:
+        raise ValueError(
+            "acid_cdf source needs the table path: "
+            ".load(<table_path>) or .option('tablePath', ...)"
+        )
+    return path
+
+
 def _feed_schema(table_path: str) -> StructType:
     """Declared source schema: the table's RECORDED schema (the format
     records it per commit; tables created by this code always have one)
@@ -128,13 +141,7 @@ def _feed_schema(table_path: str) -> StructType:
 
 class AcidCdfStreamReader(DataSourceStreamReader):
     def __init__(self, schema: StructType, options: dict) -> None:
-        path = options.get("path") or options.get("tablepath")
-        if not path:
-            raise ValueError(
-                "acid_cdf source needs the table path: "
-                ".load(<table_path>) or .option('tablePath', ...)"
-            )
-        self._path = path
+        self._path = _table_path(options)
         self._schema = schema
         self._pkg_parent = _PKG_PARENT
         # feed window starts AFTER this version ((v, head] ranges);
@@ -251,7 +258,7 @@ class AcidCdfStreamReader(DataSourceStreamReader):
         from iot_data_pipeline_spark.sources import acid_table
 
         # Only the GENUINE no-table case means "nothing to consume".
-        # _state also raises RuntimeError for torn/lagging listings —
+        # head also raises RuntimeError for torn/lagging listings —
         # those are retryable store faults; swallowing them here would
         # return an offset BELOW the checkpointed end, Spark would plan
         # and commit an empty batch ending at the regressed offset, and
@@ -259,10 +266,9 @@ class AcidCdfStreamReader(DataSourceStreamReader):
         # duplicates in an exactly-once feed (ADVICE r14, medium). Let
         # them propagate so the trigger retries; and belt-and-braces,
         # never report a head below the configured start.
-        if not acid_table._list_log(self._path)[0]:
+        if not acid_table._exists(self._path):
             return {"version": int(self._start)}
-        head = acid_table._state(self._path)["version"]
-        head = max(head, self._start)
+        head = max(acid_table.head(self._path), self._start)
         if self._max_commits is not None or self._max_bytes is not None:
             anchor = self._last_end
             if anchor is None:
@@ -290,30 +296,17 @@ class AcidCdfStreamReader(DataSourceStreamReader):
         return {"version": int(head)}
 
     def _commit_feed_bytes(self, v: int) -> int:
-        """Total on-disk bytes of one commit's feed files (cdc journal
-        slivers, or added data files for appends; metadata-only commits
-        are zero). Sizing only — unreadable ops and vacuumed files are
-        partitions()'s job to refuse with the curated errors; here they
-        count as zero so the advance still reaches them."""
+        """Total on-disk bytes of one commit's feed files
+        (``acid_table._commit_feed``; metadata-only commits are zero).
+        Sizing only: a commit the feed refuses or cannot read counts as
+        zero, so the advance still reaches it and partitions() raises."""
         from iot_data_pipeline_spark.sources import acid_table
 
         try:
-            m = acid_table._read_manifest(self._path, v)
-        except Exception:
-            return 0  # lagging listing: partitions() handles visibility
-        if m.get("cdc") is not None:
-            rels = m["cdc"]
-        elif m.get("op") in ("create", "append", "stream-append", "clone"):
-            rels = [a["path"] for a in m["add"]]
-        else:
+            files, _ = acid_table._commit_feed(self._path, v)
+            return sum(os.path.getsize(f) for f in files)
+        except (OSError, ValueError):
             return 0
-        total = 0
-        for rel in rels:
-            try:
-                total += os.path.getsize(os.path.join(self._path, rel))
-            except OSError:
-                pass
-        return total
 
     def partitions(
         self, start: dict, end: dict
@@ -327,89 +320,33 @@ class AcidCdfStreamReader(DataSourceStreamReader):
         # first latestOffset, which is how a mid-drain restart resumes
         # BOUNDED instead of planning the whole remaining backlog
         self._note_end(v_to)
-        schema_json = self._schema.json()
-        parts: list[InputPartition] = []
+        # v_to came from a previous latestOffset, but an eventually-
+        # consistent listing may REGRESS between calls: the plan raises
+        # retryably rather than drop the hidden commits' deltas
+        plan = acid_table._feed_plan(self._path, v_from, v_to)
         # physical→logical rename executors apply to each feed file: the
         # range is mapping-constant (a rename/drop commit in range raises
-        # below), so the once-resolved mapping serves every batch
+        # in the plan), so the once-resolved mapping serves every batch
         if not self._rename_ready:
             cm = acid_table._state(self._path, v_to).get("colmap")
             self._rename = (
                 {p: l for l, p in cm.items()} if cm else None
             )
             self._rename_ready = True
-        rename = self._rename
-        committed, _ = acid_table._list_log(self._path)
-        # every commit in (v_from, v_to] must be visible: v_to came from a
-        # previous latestOffset, but an eventually-consistent listing may
-        # REGRESS between calls — silently iterating what happens to be
-        # listed would drop the hidden commits' deltas from the feed
-        # forever (offsets advance past them). Fail retryably instead.
-        missing = sorted(
-            set(range(v_from + 1, v_to + 1)) - set(committed)
-        )
-        if missing:
-            raise RuntimeError(
-                f"commit(s) {missing} of {self._path} are not visible in "
-                f"the log listing while planning batch ({v_from}, {v_to}]"
-                " — the store listing is lagging; the micro-batch retries"
+        schema_json = self._schema.json()
+        return [
+            InputPartition(
+                {
+                    "file": f,
+                    "change_type": tag,  # None: the tag travels in the file
+                    "commit_version": v,
+                    "schema_json": schema_json,
+                    "rename": self._rename,
+                }
             )
-        for v in committed:
-            if not v_from < v <= v_to:
-                continue
-            m = acid_table._read_manifest(self._path, v)
-            op = m["op"]
-            if m.get("cdc") is not None:
-                rels, tag = m["cdc"], None  # tag travels inside the file
-            elif op in ("create", "append", "stream-append", "clone"):
-                rels, tag = [a["path"] for a in m["add"]], "insert"
-            elif op in ("compact", "add-constraint", "drop-constraint"):
-                continue  # no logical row change
-            elif op == "restore":
-                raise ValueError(
-                    f"commit v{v} of {self._path} is a RESTORE "
-                    "(metadata-only rewind) — its row-level deltas were "
-                    "never journaled; consume the pre/post states via "
-                    "the batch table_changes feed and restart the stream "
-                    "from a startingVersion past the restore"
-                )
-            elif op in ("rename-column", "drop-column"):
-                raise ValueError(
-                    f"commit v{v} of {self._path} is a column-mapping "
-                    f"change ({op}) — the stream's declared schema no "
-                    "longer matches the table's logical names; restart "
-                    "the stream (startingVersion past the mapping commit)"
-                    " to adopt the new schema"
-                )
-            else:
-                raise ValueError(
-                    f"commit v{v} ({op}) of {self._path} was written "
-                    "without cdc=True, so its row-level deltas were never "
-                    "journaled; re-run the operation with cdc=True or "
-                    "consume via the batch table_changes feed"
-                )
-            for rel in rels:
-                full = os.path.join(self._path, rel)
-                if not os.path.exists(full):
-                    raise ValueError(
-                        f"commit v{v} ({op}) of {self._path}: feed file "
-                        f"{rel} no longer exists — vacuum reclaimed it "
-                        "(the stream lags beyond the journal retention); "
-                        "widen vacuum retention or restart from a newer "
-                        "startingVersion"
-                    )
-                parts.append(
-                    InputPartition(
-                        {
-                            "file": full,
-                            "change_type": tag,
-                            "commit_version": v,
-                            "schema_json": schema_json,
-                            "rename": rename,
-                        }
-                    )
-                )
-        return parts
+            for v, files, tag in plan
+            for f in files
+        ]
 
     def read(self, partition: InputPartition) -> Iterator:
         """Executor-side: read one feed file with pyarrow and yield Arrow
@@ -484,13 +421,7 @@ class AcidCdfDataSource(DataSource):
 
     def schema(self) -> StructType:
         _ensure_pkg(_PKG_PARENT)
-        path = self.options.get("path") or self.options.get("tablepath")
-        if not path:
-            raise ValueError(
-                "acid_cdf source needs the table path: "
-                ".load(<table_path>) or .option('tablePath', ...)"
-            )
-        return _feed_schema(path)
+        return _feed_schema(_table_path(self.options))
 
     def streamReader(self, schema: StructType) -> AcidCdfStreamReader:
         return AcidCdfStreamReader(schema, dict(self.options))

@@ -260,6 +260,11 @@ def _log_dir(path: str) -> str:
     return os.path.join(path, _LOG)
 
 
+def _exists(path: str) -> bool:
+    """Whether a table exists at ``path`` (its log lists a manifest)."""
+    return bool(_list_log(path)[0])
+
+
 def _list_log(path: str) -> tuple[list[int], list[int]]:
     """One store listing over the log: (sorted manifest versions, sorted
     checkpoint versions). Temp staging names match neither pattern."""
@@ -1702,7 +1707,7 @@ def create(
     (``generated={"month": "date_format(ts, 'yyyy-MM')"},
     partition_by=["month"]`` — writers never materialize the partition
     key by hand, and pv pruning works unchanged)."""
-    if _list_log(path)[0]:
+    if _exists(path):
         raise RuntimeError(f"table already exists at {path}")
     if generated:
         if key in generated:
@@ -3250,6 +3255,89 @@ def table_changes(
     )
 
 
+def _commit_feed(path: str, v: int) -> tuple[list[str], str | None]:
+    """Commit ``v``'s change feed: its feed files (absolute paths) and
+    their ``change_type`` tag — the one per-commit rule behind both
+    change feeds (``table_changes_journal`` and the streaming
+    ``acid_cdf`` source). A commit journaled with ``cdc=True`` feeds its
+    journal files, which carry their own tag (None here); an insert op
+    feeds its added data files as "insert"; a no-change op feeds nothing.
+    Every other op, and a feed file vacuum reclaimed, raises: the feeds
+    never silently skip a commit's deltas."""
+    m = _read_manifest(path, v)
+    op = m["op"]
+    # both feeds' ways past a refused commit
+    fix = (
+        "read the window through table_changes (the file-diff feed; it "
+        "needs unique table keys), or restart the stream from a "
+        f"startingVersion past v{v}"
+    )
+    if m.get("cdc") is not None:
+        rels, tag = m["cdc"], None
+    elif op in ("create", "append", "stream-append", "clone"):
+        # the added data files ARE the inserts (Delta's dataChange rule); a
+        # clone's v0 references are the table's initial inserts, like create
+        rels, tag = [a["path"] for a in m["add"]], "insert"
+    elif op in ("compact", "add-constraint", "drop-constraint"):
+        rels, tag = [], None  # no logical row change
+    elif op == "restore":
+        raise ValueError(
+            f"commit v{v} of {path} is a RESTORE (metadata-only rewind) — "
+            f"its row-level deltas were never journaled; {fix}"
+        )
+    elif op in ("rename-column", "drop-column"):
+        raise ValueError(
+            f"commit v{v} of {path} is a column-mapping change ({op}) — a "
+            "feed across it would mix two logical schemas; read each side "
+            "of the mapping commit separately, or restart the stream from "
+            f"a startingVersion past v{v} to adopt the new schema"
+        )
+    else:
+        raise ValueError(
+            f"commit v{v} ({op}) of {path} was written without cdc=True, so "
+            "its row-level deltas were never journaled; re-run the "
+            f"operation with cdc=True, or {fix}"
+        )
+    files = [os.path.join(path, r) for r in rels]
+    gone = [r for r, f in zip(rels, files) if not os.path.exists(f)]
+    if gone:
+        # the manifest keeps its feed entries forever (audit), but vacuum
+        # reclaims their bytes beyond retention: raise this, never a raw
+        # path-not-found
+        raise ValueError(
+            f"commit v{v} ({op}) of {path}: feed file(s) {gone} no longer "
+            "exist — vacuum reclaimed them (the window reaches beyond the "
+            f"retention); widen vacuum retention, or {fix}"
+        )
+    return files, tag
+
+
+def _feed_plan(
+    path: str, v_from: int, v_to: int
+) -> list[tuple[int, list[str], str | None]]:
+    """The change feed of the window ``(v_from, v_to]`` as
+    ``[(version, files, tag)]`` in commit order, one entry per commit
+    that feeds any file (see :func:`_commit_feed`). Every version in the
+    window must be visible: a listing that lags behind a known version
+    would otherwise drop the hidden commits' deltas for good, so it
+    raises a retryable RuntimeError."""
+    committed, _ = _list_log(path)
+    missing = sorted(set(range(v_from + 1, v_to + 1)) - set(committed))
+    if missing:
+        raise RuntimeError(
+            f"commit(s) {missing} of {path} are not visible in the log "
+            f"listing while planning the feed window ({v_from}, {v_to}] — "
+            "the store listing is lagging; retry (a stream's micro-batch "
+            "retries)"
+        )
+    plan = []
+    for v in range(v_from + 1, v_to + 1):
+        files, tag = _commit_feed(path, v)
+        if files:
+            plan.append((v, files, tag))
+    return plan
+
+
 def table_changes_journal(
     spark: SparkSession, path: str, v_from: int, v_to: int
 ) -> DataFrame:
@@ -3269,11 +3357,13 @@ def table_changes_journal(
     scale for small commits, never a table scan: appends need no CDC file
     at all (their added data files ARE the inserts — Delta's dataChange
     rule), compaction contributes nothing (no logical change), and
-    delete/merge read only the CDC files their commits journaled. A
-    delete/merge commit written WITHOUT ``cdc=True`` cannot be served
-    from the journal and raises, naming the file-diff fallback and its
-    unique-key requirement. Rows read across a widening NULL-fill the
-    later columns (unionByName with missing-column fill)."""
+    delete/merge read only the CDC files their commits journaled. The
+    window is planned by :func:`_feed_plan`, as the streaming ``acid_cdf``
+    source's micro-batches are, so both feeds serve and refuse the same
+    commits: a delete/merge written WITHOUT ``cdc=True`` raises, naming
+    the file-diff fallback and its unique-key requirement. Rows read
+    across a widening NULL-fill the later columns (unionByName with
+    missing-column fill)."""
     if v_from > v_to:
         raise ValueError(
             f"table_changes_journal requires v_from <= v_to, got "
@@ -3287,95 +3377,22 @@ def table_changes_journal(
                 f" (head is {committed[-1] if committed else 'absent'})"
             )
     parts: list[DataFrame] = []
-    for v in committed:
-        if not v_from < v <= v_to:
-            continue
-        m = _read_manifest(path, v)
-        op = m["op"]
-        if m.get("cdc") is not None:
-            if m["cdc"]:
-                gone = [
-                    p
-                    for p in m["cdc"]
-                    if not os.path.exists(os.path.join(path, p))
-                ]
-                if gone:
-                    # the manifest keeps its "cdc" entry forever (audit),
-                    # but vacuum reclaims journal files beyond retention —
-                    # raise the curated beyond-retention error instead of
-                    # a raw Spark path-not-found (ADVICE r13)
-                    raise ValueError(
-                        f"commit v{v} ({op}) of {path}: journal file(s) "
-                        f"{gone} no longer exist — vacuum reclaimed them "
-                        "(the requested window reaches beyond the journal "
-                        "retention); widen vacuum retention, or serve the "
-                        "window from table_changes (file-diff feed, "
-                        "requires unique table keys)"
-                    )
-                cdc = _read_files(
-                    spark,
-                    {"schema": None},  # CDC files carry their own schema
-                    # + change_type; the recorded table schema would
-                    # drop the tag column
-                    [os.path.join(path, p) for p in m["cdc"]],
-                )
-                parts.append(
-                    cdc.withColumn(
-                        "commit_version", F.lit(v).cast("bigint")
-                    )
-                )
-        elif op in ("create", "append", "stream-append", "clone"):
-            # a clone's v0 references ARE the table's initial inserts,
-            # exactly like create (dataChange rule)
-            if m["add"]:
-                gone = [
-                    a["path"]
-                    for a in m["add"]
-                    if not os.path.exists(os.path.join(path, a["path"]))
-                ]
-                if gone:
-                    # an append's data files ARE its insert feed; if a
-                    # later rewrite removed them and vacuum reclaimed the
-                    # bytes, the commit's deltas are beyond retention too
-                    raise ValueError(
-                        f"commit v{v} ({op}) of {path}: its added data "
-                        f"file(s) {gone} no longer exist — vacuum "
-                        "reclaimed them (the requested window reaches "
-                        "beyond retention); widen vacuum retention"
-                    )
-                adds = _read_files(
-                    spark,
-                    _state(path, v),
-                    [os.path.join(path, a["path"]) for a in m["add"]],
-                )
-                parts.append(
-                    adds.select(
-                        "*",
-                        F.lit("insert").alias("change_type"),
-                        F.lit(v).cast("bigint").alias("commit_version"),
-                    )
-                )
-        elif op in ("compact", "add-constraint", "drop-constraint"):
-            continue  # no logical row change
-        elif op in ("rename-column", "drop-column"):
-            raise ValueError(
-                f"commit v{v} of {path} is a column-mapping change "
-                f"({op}) — a feed window across it would mix two logical "
-                "schemas; read each side of the mapping commit separately"
-            )
-        elif op == "restore":
-            raise ValueError(
-                f"commit v{v} of {path} is a RESTORE (metadata-only "
-                "rewind) — its row-level deltas were never journaled; "
-                "serve the window from table_changes (the file-diff "
-                "feed's (path, dv) identity handles restore naturally)"
+    for v, files, tag in _feed_plan(path, v_from, v_to):
+        if tag is None:
+            # CDC files carry their own schema + change_type; the
+            # recorded table schema would drop the tag column
+            cdc = _read_files(spark, {"schema": None}, files)
+            parts.append(
+                cdc.withColumn("commit_version", F.lit(v).cast("bigint"))
             )
         else:
-            raise ValueError(
-                f"commit v{v} ({op}) of {path} was written without "
-                "cdc=True, so its row-level deltas were never journaled; "
-                "use table_changes (file-diff endpoint feed — requires "
-                "unique table keys) or re-run the operation with cdc=True"
+            adds = _read_files(spark, _state(path, v), files)
+            parts.append(
+                adds.select(
+                    "*",
+                    F.lit(tag).alias("change_type"),
+                    F.lit(v).cast("bigint").alias("commit_version"),
+                )
             )
     if not parts:
         empty = snapshot(spark, path, version=v_to).limit(0)
@@ -3417,7 +3434,7 @@ def clone(src_path: str, dst_path: str, version: int | None = None) -> dict:
     different table — epoch 0 must commit); history is not inherited
     either (the clone's log starts at version 0, recording the source
     path + version for audit)."""
-    if _list_log(dst_path)[0]:
+    if _exists(dst_path):
         raise RuntimeError(f"table already exists at {dst_path}")
     st = _state(src_path, version)
     src_abs = os.path.abspath(src_path)

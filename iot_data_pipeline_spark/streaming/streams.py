@@ -203,6 +203,37 @@ def _run_to_memory(
     return spark.table(name)
 
 
+def _run_batches(stream: DataFrame, fn, ckpt: str | None = None) -> None:
+    """Run ``stream`` to completion (availableNow) through
+    ``foreachBatch(fn)``, checkpointing in ``ckpt`` (a fresh dir when
+    None)."""
+    ckpt = ckpt or tempfile.mkdtemp(prefix="ckpt_")
+    q = (
+        stream.writeStream.foreachBatch(fn)
+        .trigger(availableNow=True)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+    q.awaitTermination()
+
+
+def _run_and_replay(
+    stream: DataFrame, fn, paths: list[str], message: str
+) -> None:
+    """Run ``stream`` through ``_run_batches``, then prove the sink
+    exactly-once: replay it from a fresh checkpoint (every epoch
+    redelivered) and raise AssertionError(``message``) if any of the ACID
+    tables at ``paths`` gained a commit (versions are dense, so the heads
+    tell)."""
+    from iot_data_pipeline_spark.sources import acid_table
+
+    _run_batches(stream, fn)
+    heads = [acid_table.head(p) for p in paths]
+    _run_batches(stream, fn)
+    if heads != [acid_table.head(p) for p in paths]:
+        raise AssertionError(message)
+
+
 def stream_ingest_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source ingestion: replayed stream of event chunks, appended to a
     sink. Batch-equivalence contract: output == the batch table."""
@@ -369,14 +400,7 @@ def stream_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
 
-    stream = _read_stream(spark, stream_dir)
-    q = (
-        stream.writeStream.foreachBatch(write_epoch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="feb_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    _run_batches(_read_stream(spark, stream_dir), write_epoch)
     return spark.read.parquet(out_dir + "/epoch=*").select(
         "event_id", "ts", "user_id", "event_type", "value", "props"
     )
@@ -509,14 +533,7 @@ def stream_jdbc_serving(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="append",
         )
 
-    stream = _read_stream(spark, stream_dir)
-    q = (
-        stream.writeStream.foreachBatch(load_epoch)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", tempfile.mkdtemp(prefix="sjdbc_ckpt_"))
-        .start()
-    )
-    q.awaitTermination()
+    _run_batches(_read_stream(spark, stream_dir), load_epoch)
     return spark.read.jdbc(url, "events_serving", properties={"driver": derby})
 
 
@@ -847,19 +864,13 @@ def stream_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             _maintain_state_store(spark, corpus_store)
             _maintain_state_store(spark, bucket_store)
 
-    q = (
+    _run_batches(
         spark.readStream.schema(DOCUMENTS_SCHEMA)
         .format("parquet")
         .option("maxFilesPerTrigger", "1")
-        .load(stream_dir)
-        .writeStream.foreachBatch(admit)
-        .trigger(availableNow=True)
-        .option(
-            "checkpointLocation", tempfile.mkdtemp(prefix="near_dedup_ckpt_")
-        )
-        .start()
+        .load(stream_dir),
+        admit,
     )
-    q.awaitTermination()
     from iot_data_pipeline_spark.sources import acid_table
 
     return acid_table.snapshot(spark, status_store)
@@ -991,32 +1002,14 @@ def stream_acid_cdf_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     silver = tempfile.mkdtemp(prefix="acid_cdf_silver_")
     os.rmdir(silver)  # acid create/append manage the directory
     fold_epoch = _medallion_fold(spark, bronze, silver)
-
-    def run(ckpt: str) -> None:
-        q = (
-            _read_stream(spark, stream_dir, max_files=1)
-            .writeStream.foreachBatch(fold_epoch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    run(tempfile.mkdtemp(prefix="acid_cdf_ckpt_"))
-    commits = (
-        len(acid_table.history(bronze)),
-        len(acid_table.history(silver)),
+    # the bronze txns and the silver watermark must both refuse
+    # re-application of every redelivered epoch
+    _run_and_replay(
+        _read_stream(spark, stream_dir, max_files=1),
+        fold_epoch,
+        [bronze, silver],
+        "replayed epochs re-committed: the medallion exactly-once broke",
     )
-    # Full replay from a fresh checkpoint: every epoch redelivered; the
-    # bronze txns and the silver watermark must both refuse re-application.
-    run(tempfile.mkdtemp(prefix="acid_cdf_ckpt_"))
-    if commits != (
-        len(acid_table.history(bronze)),
-        len(acid_table.history(silver)),
-    ):
-        raise AssertionError(
-            "replayed epochs re-committed: the medallion exactly-once broke"
-        )
     return acid_table.snapshot(spark, silver).select(
         "event_type", "n", F.round("total", 2).alias("total")
     )
@@ -1046,25 +1039,14 @@ def stream_acid_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             batch_df, path, txn_version=int(epoch_id), key="event_id"
         )
 
-    def run(ckpt: str) -> None:
-        q = (
-            _read_stream(spark, stream_dir, max_files=1)
-            .writeStream.foreachBatch(commit_epoch)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    run(tempfile.mkdtemp(prefix="acid_sink_ckpt_"))
-    n_commits = len(acid_table.history(path))
-    # Full replay from a FRESH checkpoint: same chunks, same epoch ids —
-    # every commit must be recognized as already-applied.
-    run(tempfile.mkdtemp(prefix="acid_sink_ckpt_"))
-    if len(acid_table.history(path)) != n_commits:
-        raise AssertionError(
-            "replayed epochs re-committed: the exactly-once contract broke"
-        )
+    # same chunks, same epoch ids: every commit must be recognized as
+    # already-applied
+    _run_and_replay(
+        _read_stream(spark, stream_dir, max_files=1),
+        commit_epoch,
+        [path],
+        "replayed epochs re-committed: the exactly-once contract broke",
+    )
     return acid_table.snapshot(spark, path)
 
 
@@ -1104,7 +1086,7 @@ def _replicate_epoch(spark: SparkSession, tgt: str, key: str):
             F.col("change_type").isin("insert", "update_postimage")
         ).select(*data_cols)
         dels = last.filter("change_type = 'delete'").select(*data_cols)
-        exists = bool(acid_table._list_log(tgt)[0])
+        exists = acid_table._exists(tgt)
         if not exists:
             if ups.isEmpty():
                 return  # nothing to seed the target with yet
@@ -1157,18 +1139,8 @@ def stream_acid_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = tempfile.mkdtemp(prefix="acid_repl_ckpt_")
     apply = _replicate_epoch(spark, tgt_path, "o_orderkey")
 
-    def run() -> None:
-        q = (
-            spark.readStream.format("acid_cdf")
-            .load(src_path)
-            .writeStream.foreachBatch(apply)
-            .trigger(availableNow=True)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        q.awaitTermination()
-
-    run()  # replicates create + append
+    feed = spark.readStream.format("acid_cdf").load(src_path)
+    _run_batches(feed, apply, ckpt)  # replicates create + append
     acid_table.delete(
         spark, src_path, "o_totalprice < 50000", cdc=True
     )
@@ -1182,7 +1154,7 @@ def stream_acid_replicate(spark: SparkSession, sf_dir: str) -> DataFrame:
         src_path,
         cdc=True,
     )
-    run()  # resumes from the checkpoint: only the two new commits
+    _run_batches(feed, apply, ckpt)  # resumes: only the two new commits
     return acid_table.snapshot(spark, tgt_path)
 
 

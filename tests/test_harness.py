@@ -211,3 +211,36 @@ def test_acid_table_publishes_only_through_its_commit_helper():
                     offenders.append(f"{os.path.relpath(full, ROOT)}:{n}")
     assert calls == 1, f"acid_table.{_COMMITTER} publishes {calls} times"
     assert not offenders, f"_publish called outside acid_table.{_COMMITTER} at {offenders}"
+
+
+# Both change feeds plan a commit range through acid_table's one planner:
+# the streaming source reads no manifest and lists no log itself, and the
+# ops whose added files are inserts are spelled once.
+_FEED_OPS = ("create", "append", "stream-append", "clone")
+
+
+def test_cdf_source_reads_the_log_only_through_the_feed_planner():
+    with open(os.path.join(_SOURCES, "acid_cdf_stream.py"), encoding="utf-8") as fh:
+        src = fh.read()
+    calls = _match_lines(r"\b_read_manifest\(|\b_list_log\(", src)
+    assert not calls, f"acid_cdf_stream.py reads the log itself at lines {calls}"
+
+
+def test_feed_op_tuple_is_spelled_once():
+    package = os.path.join(ROOT, "iot_data_pipeline_spark")
+    spelled = []
+    for dirpath, _, files in os.walk(package):
+        for fname in files:
+            if not fname.endswith(".py"):
+                continue
+            full = os.path.join(dirpath, fname)
+            with open(full, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            spelled += [
+                f"{os.path.relpath(full, ROOT)}:{n.lineno}"
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Tuple)
+                and all(isinstance(e, ast.Constant) for e in n.elts)
+                and tuple(e.value for e in n.elts) == _FEED_OPS
+            ]
+    assert len(spelled) == 1, f"the feed-op tuple is spelled at {spelled}"

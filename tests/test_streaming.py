@@ -1013,6 +1013,113 @@ def test_cdf_source_lagging_listing_fails_retryably_never_skips(
     assert reader.partitions({"version": -1}, {"version": head})
 
 
+def _refused_commit(spark, path, t, kind):
+    """Commit onto the _cdf_stream_table at ``path`` what the change
+    feeds refuse."""
+    from iot_data_pipeline_spark.sources import acid_table
+
+    if kind == "unjournaled-delete":
+        acid_table.delete(spark, path, "o_orderkey % 3 = 0")
+    elif kind == "restore":
+        acid_table.restore(path, 1)
+    elif kind == "rename-column":
+        acid_table.rename_column(path, "o_totalprice", "price")
+    else:  # the v2 journal leaves the vacuum retention window
+        acid_table.compact(spark, path, n_files=1)
+        acid_table.append(
+            t.limit(10).withColumn(
+                "o_orderkey", F.col("o_orderkey") + 1_000_000
+            ),
+            path,
+            1,
+        )
+        res = acid_table.vacuum(
+            path, retain_versions=2, orphan_grace_seconds=0
+        )
+        assert res["cdc_deleted"] >= 1
+
+
+@pytest.mark.parametrize(
+    "kind",
+    ["unjournaled-delete", "restore", "rename-column", "vacuumed-journal"],
+)
+def test_both_change_feeds_refuse_a_commit_alike(
+    spark, sf_dir, tmp_path, kind
+):
+    """The batch journal feed and the streaming source plan a window
+    through one planner, so a commit neither can serve raises the same
+    exception, with the same message, from both."""
+    from iot_data_pipeline_spark.sources import acid_cdf_stream, acid_table
+
+    path, t = _cdf_stream_table(spark, sf_dir, tmp_path)
+    reader = acid_cdf_stream.AcidCdfStreamReader(
+        acid_cdf_stream._feed_schema(path), {"path": path}
+    )
+    _refused_commit(spark, path, t, kind)
+    head = acid_table.head(path)
+    with pytest.raises(Exception) as batch:
+        acid_table.table_changes_journal(spark, path, 1, head)
+    with pytest.raises(Exception) as stream:
+        reader.partitions({"version": 1}, {"version": head})
+    assert batch.type is stream.type is ValueError
+    assert str(batch.value) == str(stream.value)
+
+
+def test_both_change_feeds_refuse_a_hidden_middle_version(
+    spark, sf_dir, tmp_path
+):
+    """A listing that hides a version inside the window (both ends
+    visible) fails both feeds retryably; neither silently skips the
+    hidden commit's deltas."""
+    from iot_data_pipeline_spark.sources import acid_cdf_stream, acid_table
+
+    class HideOneLogStore(acid_table.PosixLinkLogStore):
+        hide: set[str] = set()
+
+        def list(self, log_dir: str) -> list[str]:
+            return [n for n in super().list(log_dir) if n not in self.hide]
+
+    path, _ = _cdf_stream_table(spark, sf_dir, tmp_path)  # head = 2
+    reader = acid_cdf_stream.AcidCdfStreamReader(
+        acid_cdf_stream._feed_schema(path), {"path": path}
+    )
+    store = HideOneLogStore()
+    prev = acid_table.set_log_store(store)
+    try:
+        store.hide = {"00000000000000000001.json"}
+        with pytest.raises(RuntimeError, match="not visible"):
+            acid_table.table_changes_journal(spark, path, 0, 2)
+        with pytest.raises(RuntimeError, match="not visible"):
+            reader.partitions({"version": 0}, {"version": 2})
+    finally:
+        acid_table.set_log_store(prev)
+
+
+def test_cdf_source_plans_a_batch_from_one_read_per_manifest(
+    spark, sf_dir, tmp_path
+):
+    """Once the reader's rename map is resolved, planning a batch of N
+    commits reads exactly N manifests."""
+    from iot_data_pipeline_spark.sources import acid_cdf_stream, acid_table
+
+    path, t = _cdf_stream_table(spark, sf_dir, tmp_path)
+    acid_table.compact(spark, path, n_files=1)
+    acid_table.append(
+        t.limit(10).withColumn("o_orderkey", F.col("o_orderkey") + 10**6),
+        path,
+        1,
+    )
+    head = acid_table.head(path)  # 4
+    reader = acid_cdf_stream.AcidCdfStreamReader(
+        acid_cdf_stream._feed_schema(path), {"path": path}
+    )
+    assert reader.partitions({"version": -1}, {"version": 0})
+    acid_table._MANIFEST_READS = 0
+    parts = reader.partitions({"version": 0}, {"version": head})
+    assert acid_table._MANIFEST_READS == head
+    assert {p.value["commit_version"] for p in parts} == {1, 2, 4}
+
+
 def test_cdf_source_starting_version_skips_earlier_commits(
     spark, sf_dir, tmp_path
 ):
